@@ -628,15 +628,19 @@ def _scale_probe(spark, qs, sf_dir: str, mult: int) -> dict:
         .repartition(spark.sparkContext.defaultParallelism)
     )
     big.write.mode("overwrite").parquet(os.path.join(big_dir, "documents.parquet"))
-    probe: dict[str, float] = {}
+    probe: dict[str, float | str] = {}
     for name in _SCALE_PROBE:
         if name not in qs:
             continue
         spark.sparkContext.setJobDescription(f"scale_probe:{name}")
         t0 = time.time()
-        len(qs[name](spark, big_dir).collect())
-        probe[name] = round(time.time() - t0, 4)
-        spark.sparkContext.setJobDescription(None)
+        try:
+            len(qs[name](spark, big_dir).collect())
+            probe[name] = round(time.time() - t0, 4)
+        except Exception as exc:  # noqa: BLE001 — same isolation as _sample
+            probe[name] = f"{type(exc).__name__}: {exc}"[:500]
+        finally:
+            spark.sparkContext.setJobDescription(None)
     probe["_multiplier"] = mult
     return probe
 

@@ -546,3 +546,49 @@ def test_gc_hole_cannot_resurrect_stale_commit(tmp_path):
     assert exc.value.code == "CONCURRENT_WRITE"
     final = t._load_meta()
     assert final["version"] == 7 and final["seq"] == 8
+
+
+def test_index_refresh_waits_for_writer_lock(tmp_path, spark):
+    # Every index build/refresh commits under the writer lock, like
+    # the row mutations: a refresh on a second handle must WAIT while
+    # another writer holds the lock (instead of racing it into a
+    # CONCURRENT_WRITE), and finish once the lock is released.
+    from vectordb_spark.catalog import Warehouse
+
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    t = wh.load_db("lockdb").create_table(
+        {
+            "name": "docs",
+            "fields": [
+                {"name": "ID", "dataType": "INT", "primaryKey": True},
+                {"name": "Body", "dataType": "STRING"},
+                {"name": "Vec", "dataType": "VECTOR_FLOAT",
+                 "dimensions": 2, "metricType": "EUCLIDEAN"},
+            ],
+        }
+    )
+    row = lambda i: {"ID": i, "Body": f"w{i % 5} w{i % 3}", "Vec": [0.0, 1.0]}  # noqa: E731
+    t.insert([row(i) for i in range(20)])
+    t.rebuild_text_index("Body", buckets=4)
+    t.insert([row(i) for i in range(20, 25)])
+    other = wh.load_db("lockdb").table("docs")
+    done = threading.Event()
+    out: dict = {}
+
+    def refresh():
+        try:
+            out["reply"] = other.refresh_text_index("Body")
+        except Exception as exc:  # surfaced by the asserts below
+            out["error"] = exc
+        done.set()
+
+    th = threading.Thread(target=refresh, daemon=True)
+    with t.writer_lock():
+        th.start()
+        # an unlocked refresh finishes in a couple of seconds here
+        assert not done.wait(8.0), out
+    th.join(timeout=300)
+    assert done.is_set()
+    assert out.get("reply", out) == {
+        "field": "Body", "version": 1, "appendedRecords": 5,
+    }

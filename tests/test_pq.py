@@ -635,3 +635,18 @@ def test_encode_arrow_map_passthrough_and_nulls(spark):
     # failure that merely mentions NULLs must not satisfy this test
     with pytest.raises(Exception, match="encode_arrow_map: NULL vectors"):
         PQ.encode_arrow_map(nulled, "embedding", cb).collect()
+
+    # compensating ragged rows: one vector one element short, the next
+    # one element long — the batch total is still n*dim, so only the
+    # per-row list lengths can catch the misalignment
+    ragged = df.withColumn(
+        "embedding",
+        F.when(F.col("vec_id") == 5, F.slice("embedding", 1, dim - 1))
+        .when(
+            F.col("vec_id") == 6,
+            F.concat("embedding", F.array(F.lit(0.0).cast("float"))),
+        )
+        .otherwise(F.col("embedding")),
+    ).coalesce(1)
+    with pytest.raises(Exception, match="ragged or wrong-dimension"):
+        PQ.encode_arrow_map(ragged, "embedding", cb).collect()

@@ -137,10 +137,10 @@ def test_pruning_on_partitioned_table(spark, tmp_path):
 
 
 def test_refresh_tail_scan_prunes_pre_build_segments(spark, tmp_path):
-    """r12: every index refresh derives its tail via _tail_df, which
-    prunes segments wholly below the indexed_up_to watermark using the
-    manifest's _row_id min/max (recorded at write time) — a refresh
-    reads the TAIL, not the table."""
+    """r12: every index refresh derives its tail via the segmented-index
+    tail, which prunes segments wholly below the indexed_up_to
+    watermark using the manifest's _row_id min/max (recorded at write
+    time) — a refresh reads the TAIL, not the table."""
     from vectordb_spark.schema import FieldSchema, FieldType, TableSchema
     from vectordb_spark.table import Table
 
@@ -170,8 +170,8 @@ def test_refresh_tail_scan_prunes_pre_build_segments(spark, tmp_path):
     t.rebuild_text_index("text", buckets=4)
     pre_build = set(meta["files"])
     t.insert([{"id": 900 + i, "text": f"w{i}", "v": [0.0, 0.0]} for i in range(5)])
-    up_to = int(t._load_meta()["text_indexes"]["text"]["indexed_up_to"])
-    tail = t._tail_df(up_to)
+    meta = t._load_meta()
+    tail = t._text.tail(meta, meta["text_indexes"]["text"])
     segs = _seg_files(t, tail)
     assert segs.isdisjoint(pre_build), segs
     assert tail.count() == 5

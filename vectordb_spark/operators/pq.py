@@ -270,22 +270,24 @@ def encode_arrow_map(df, vec_col: str, codebook: list[list[list[int]]],
                 )
             # flatten() honors slice offsets; vectors are fixed-dim so
             # the flat buffer reshapes to (n, dim) with zero per-row
-            # Python objects. dim comes from the codebook, NOT from
-            # reshape(n, -1): ragged vector lengths whose total happens
-            # to divide n would silently misalign every following row
-            # (ADVICE r12) — the explicit width makes that fail loudly.
+            # Python objects. dim comes from the codebook, and EVERY
+            # row's list length is checked against it: a total-length
+            # check alone passes a short vector followed by a long one
+            # and misaligns every following row. ``offsets`` of a
+            # sliced array are the slice's n+1 absolute offsets, so
+            # their differences are the per-row lengths either way.
             dim = CB.shape[0] * CB.shape[2]
+            lens = np.diff(col.offsets.to_numpy(zero_copy_only=False))
+            if len(lens) != n or (lens != dim).any():
+                raise ValueError(
+                    f"encode_arrow_map: expected {n}x{dim} elements in "
+                    f"{vec_col!r} — ragged or wrong-dimension vectors"
+                )
             flat = (
                 col.flatten()
                 .to_numpy(zero_copy_only=False)
                 .astype(np.float64, copy=False)
             )
-            if len(flat) != n * dim:
-                raise ValueError(
-                    f"encode_arrow_map: expected {n}x{dim} elements in "
-                    f"{vec_col!r}, got {len(flat)} — ragged or "
-                    "wrong-dimension vectors"
-                )
             X = flat.reshape(n, dim)
             codes = _encode_batch_np(X, CB, CBf, c2)
             offs = pa.array(np.arange(0, (n + 1) * m, m, dtype=np.int32))

@@ -66,6 +66,14 @@ from vectordb_spark.schema import (
     VectorDBError,
     validate_schema,
 )
+from vectordb_spark.segmented_index import (
+    DIR_PREFIXES as _INDEX_DIR_PREFIXES,
+    IVF,
+    SPARSE,
+    TEXT,
+    SegmentedIndex,
+    live_dirs as _live_index_dirs,
+)
 
 DEFAULT_CAPACITY = 2**31 - 1
 DEFAULT_GET_LIMIT = 2**30  # reference web_controller.hpp:904-911
@@ -144,6 +152,9 @@ class Table:
             self.partition_by = self._load_partition_by()
         else:
             self.partition_by = partition_by
+        self._ivf = SegmentedIndex(self, IVF)
+        self._text = SegmentedIndex(self, TEXT)
+        self._sparse = SegmentedIndex(self, SPARSE)
 
     # ---------------------------------------------------------------- meta
 
@@ -1281,27 +1292,13 @@ class Table:
         """Reconstruct the coarse quantizer from the manifest's
         persisted cluster layout (None if the table was never
         cluster-compacted)."""
-        from vectordb_spark.operators.ann import IVFIndex
-
         info = (meta or self._load_meta()).get("cluster_layout")
-        if not info:
-            return None
-        idx = IVFIndex(k=info["k"], seed=info["seed"], metric=info["metric"])
-        idx.centroids = info["centroids"]
-        idx.cluster_sizes = {
-            int(c): int(n) for c, n in (info.get("cluster_sizes") or {}).items()
-        }
-        idx.mean_intra_radius = info.get("mean_intra_radius")
-        nn = info.get("mean_nn_centroid_dist")
-        idx.mean_nn_centroid_dist = float("inf") if nn is None else float(nn)
-        return idx
+        return _ivf_from_info(info) if info else None
 
     def _assign_cluster(self, df: DataFrame) -> DataFrame:
         """Nearest stored centroid as a codegen Column — k inline
         distance expressions + array argmin, no shuffle, no UDF. Keeps
         appended segments in the clustered layout."""
-        from vectordb_spark.functions.distance import l2_squared, vector_literal
-
         info = self._load_meta().get("cluster_layout")
         if not info:
             raise VectorDBError(
@@ -1309,16 +1306,8 @@ class Table:
                 "Table is partitioned by _cluster but has no cluster "
                 "layout in the manifest.",
             )
-        field = info["field"]
-        dists = F.array(
-            *[
-                l2_squared(F.col(field), vector_literal(c))
-                for c in info["centroids"]
-            ]
-        )
         return df.withColumn(
-            "_cluster",
-            (F.array_position(dists, F.array_min(dists)) - 1).cast("int"),
+            "_cluster", _nearest_centroid(info["field"], info["centroids"])
         )
 
     # Segment dirs younger than this survive vacuum even when
@@ -1348,24 +1337,17 @@ class Table:
         referenced = set(meta["files"])
         for h in kept:
             referenced.update(h["files"])
-        # live index dirs: current version + refresh deltas, for every
-        # indexed field (vector and text) — superseded versions from
-        # rebuilds are unreferenced and reclaimable like old segments
-        for fam in ("indexes", "text_indexes", "sparse_indexes"):
-            for info in meta.get(fam, {}).values():
-                referenced.add(info["dir"])
-                referenced.update(info.get("deltas", []))
-                referenced.update(info.get("norms_deltas", []))
-                if info.get("norms_dir"):
-                    referenced.add(info["norms_dir"])
+        # live index dirs of every index family — superseded versions
+        # from rebuilds are unreferenced and reclaimable like old segments
+        referenced |= _live_index_dirs(meta)
         removed = skipped_recent = 0
         now = time.time()
         for name in sorted(os.listdir(self.path)):
             full = os.path.join(self.path, name)
             if (
                 name.startswith(
-                    ("add_", "base_", "cow_", "zrw_", "index_",
-                     "textindex_", "sparseindex_", "cowstage_")
+                    ("add_", "base_", "cow_", "zrw_", "cowstage_")
+                    + _INDEX_DIR_PREFIXES
                 )
                 and name not in referenced
                 and os.path.isdir(full)
@@ -1925,14 +1907,7 @@ class Table:
             q = _normalize_dense_query(query_vector, f)
             qcol = F.array(*[F.lit(float(x)) for x in q])
             dist = distance_for_metric(f.metric, F.col(f.name), qcol)
-
-        post = ast is not None and references_distance(ast)
-        if ast is not None and not post:
-            df = df.where(to_spark_column(ast))
-        df = df.withColumn("_distance", dist)
-        if post:
-            df = df.where(to_spark_column(ast))
-        return df.orderBy(F.col("_distance").asc(), F.col("_row_id").asc()).limit(limit)
+        return _rank_by_distance(df, dist, ast, limit)
 
     def query(
         self,
@@ -2085,11 +2060,13 @@ class Table:
             out.append(rec)
         return out
 
-    # ------------------------------------------------------------ utilities
-
     # ------------------------------------------------------------- indexes
+    # Every index family is a writer (rows → one index dir, shared by
+    # build and refresh) plus a scorer; segmented_index.SegmentedIndex
+    # owns the lifecycle around them — versioned and delta dirs, the
+    # manifest entry, the locked CAS commit, the segment-pruned tail
+    # and the dead-id semi-join.
 
-    @_writer_locked
     def rebuild(
         self,
         field: str,
@@ -2119,7 +2096,8 @@ class Table:
             raise VectorDBError(
                 "NOT_IMPLEMENTED_ERROR", f"Index type {index_type} not supported."
             )
-        if itype == "IVF_PQ" and (f.metric or "EUCLIDEAN") == "DOT_PRODUCT":
+        metric = f.metric or "EUCLIDEAN"
+        if itype == "IVF_PQ" and metric == "DOT_PRODUCT":
             # ADC approximates L2; COSINE is stored normalized (L2
             # order == cosine order) but raw dot has no such bridge
             raise VectorDBError(
@@ -2139,103 +2117,83 @@ class Table:
                 "train_mod/train_keep apply to the lloyd trainer only "
                 "(the kmeans path already samples internally).",
             )
-        meta = self._load_meta()
-        df = self.df()
-        idx = IVFIndex(k=k, seed=seed, metric=f.metric or "EUCLIDEAN")
-        if train == "lloyd":
-            # deterministic seeded-Lloyd trainer: same Lloyd iterations
-            # as kmeans but bit-replayable (integer-grid means, fold
-            # distances) — the trained path a SQL oracle can audit,
-            # persisted in the manifest exactly like the MLlib path
-            assigned = idx.build_lloyd(
-                df.select("_row_id", field), field, rounds=rounds,
-                train_mod=train_mod, train_keep=train_keep,
-            )
-        else:
-            assigned = idx.build(df.select("_row_id", field), field)
-        if itype == "IVF_SQ8":
-            # store int8 codes + per-row scale + exact squared norm, NOT
-            # the float vectors: the probe-scan reads 1 byte/dim instead
-            # of 4 — the 4× bandwidth saving is physical, not notional.
-            # Exact distances come from re-joining the base table for
-            # the (small) re-rank candidate set only.
-            from vectordb_spark.functions.distance import dot_product
-            from vectordb_spark.operators.quant import (
-                quant_scale_exprs,
-                quantize_exprs,
-            )
+        lloyd = train == "lloyd"
+        idx = IVFIndex(k=k, seed=seed, metric=metric)
 
-            scale_s, _ = quant_scale_exprs(field)
-            qz_s, _ = quantize_exprs(field, "_scale")
-            assigned = (
-                assigned.withColumn("_scale", F.expr(scale_s))
-                .withColumn("_q", F.expr(qz_s).cast("array<tinyint>"))
-                .withColumn(
-                    "_norm2", dot_product(F.col(field), F.col(field))
-                )
-                .select("_row_id", "_scale", "_q", "_norm2", "_cluster")
-            )
-        pq_codebook = None
-        if itype == "IVF_PQ":
-            # coarse quantizer (_cluster) for pruning + fine quantizer
-            # (PQ codes, 4 bytes/row at M=8×K=16) for ranking: the
-            # probe-scan reads M nibbles/row instead of 4·dim bytes;
-            # float vectors are touched only for the re-rank candidates.
-            # Codes are RESIDUAL-encoded (vec − assigned centroid):
-            # raw-vector codes collapse inside tight clusters — every
-            # member shares a code and ADC cannot rank within the blob
-            # (SCALING.md "residual encoding is load-bearing": 3,125-way
-            # ADC ties, recall 0; residual 0.91 at the same budget)
-            from vectordb_spark.operators.pq import ResidualPQIndex
-
-            # M must divide the dimension (each subspace = dim/M
-            # contiguous components); largest of 8/4/2/1 that does
-            m_sub = next(m for m in (8, 4, 2, 1) if (f.dimension or 0) % m == 0)
-            pqi = ResidualPQIndex(m=m_sub, seed=seed)
-            if train == "lloyd":
-                # the bit-replayable trainer for BOTH tiers: coarse
-                # cells came from build_lloyd above, the fine codebook
-                # now trains on the same seeded-Lloyd discipline — a
-                # SQL oracle can audit the full trained IVF_PQ
-                # lifecycle (queries/ann.py table_ivfpq_trained_search)
-                pqi.fit_residual_lloyd(
-                    idx, assigned, field, rounds=rounds, id_col="_row_id",
+        def write(df: DataFrame, name: str, info: dict) -> None:
+            df = df.select("_row_id", field)
+            if lloyd:
+                # deterministic seeded-Lloyd trainer: same Lloyd
+                # iterations as kmeans but bit-replayable (integer-grid
+                # means, fold distances) — the trained path a SQL
+                # oracle can audit, persisted in the manifest exactly
+                # like the MLlib path
+                assigned = idx.build_lloyd(
+                    df, field, rounds=rounds,
                     train_mod=train_mod, train_keep=train_keep,
                 )
             else:
-                pqi.fit_residual(idx, assigned, field, id_col="_row_id")
-            pq_codebook = pqi.codebook
-            assigned = pqi.codes_residual(assigned, field).select(
-                "_row_id", "_pq_codes", "_cluster"
+                assigned = idx.build(df, field)
+            info["centroids"] = idx.centroids
+            if itype == "IVF_PQ":
+                # coarse quantizer (_cluster) for pruning + fine
+                # quantizer (PQ codes, 4 bytes/row at M=8×K=16) for
+                # ranking, RESIDUAL-encoded (vec − assigned centroid):
+                # raw-vector codes collapse inside tight clusters —
+                # every member shares a code and ADC cannot rank within
+                # the blob (SCALING.md "residual encoding is
+                # load-bearing": 3,125-way ADC ties, recall 0; residual
+                # 0.91 at the same budget)
+                from vectordb_spark.operators.pq import ResidualPQIndex
+
+                # M must divide the dimension (each subspace = dim/M
+                # contiguous components); largest of 8/4/2/1 that does
+                m_sub = next(
+                    m for m in (8, 4, 2, 1) if (f.dimension or 0) % m == 0
+                )
+                pqi = ResidualPQIndex(m=m_sub, seed=seed)
+                if lloyd:
+                    # the bit-replayable trainer for BOTH tiers: a SQL
+                    # oracle can audit the full trained IVF_PQ
+                    # lifecycle (queries/ann.py table_ivfpq_trained_search)
+                    pqi.fit_residual_lloyd(
+                        idx, assigned, field, rounds=rounds, id_col="_row_id",
+                        train_mod=train_mod, train_keep=train_keep,
+                    )
+                else:
+                    pqi.fit_residual(idx, assigned, field, id_col="_row_id")
+                info["pq_codebook"] = pqi.codebook
+            info["cluster_sizes"] = {
+                str(c): n for c, n in (idx.cluster_sizes or {}).items()
+            }
+            # separation statistics → the exact-fallback planner rule
+            # applies to persisted-index searches too (None = +inf)
+            info["mean_intra_radius"] = idx.mean_intra_radius
+            info["mean_nn_centroid_dist"] = (
+                None
+                if idx.mean_nn_centroid_dist is None
+                or math.isinf(idx.mean_nn_centroid_dist)
+                else idx.mean_nn_centroid_dist
             )
-        version = meta.get("indexes", {}).get(field, {}).get("version", 0) + 1
-        name = f"index_{field}_v{version}"
-        (
-            assigned.write.mode("overwrite")
-            .partitionBy("_cluster")
-            .parquet(os.path.join(self.path, name))
-        )
-        indexed_up_to = meta["next_row_id"]
-        meta.setdefault("indexes", {})[field] = {
+            self._ivf.save(
+                self._ivf_encode(assigned, field, info), name,
+                partition_by="_cluster",
+            )
+            return None  # the reply's indexedRecords is the watermark
+
+        return self._ivf.build(field, write, {
             "type": itype,
             "k": k,
             "seed": seed,
             "train": train,
-            "rounds": rounds if train == "lloyd" else None,
+            "rounds": rounds if lloyd else None,
             # sampled-trainer hash filter (None = full-corpus training);
             # recorded so a rebuilt-from-manifest audit can replay the
             # exact training subset
-            "train_mod": train_mod if train == "lloyd" else None,
-            "train_keep": train_keep if train == "lloyd" else None,
-            "version": version,
-            "dir": name,
-            "deltas": [],
-            "metric": f.metric or "EUCLIDEAN",
-            "centroids": idx.centroids,
-            "cluster_sizes": {str(c): n for c, n in (idx.cluster_sizes or {}).items()},
-            "indexed_up_to": indexed_up_to,
-            "mutation_seq": int(meta.get("mutation_seq", 0)),
-            "pq_codebook": pq_codebook,
+            "train_mod": train_mod if lloyd else None,
+            "train_keep": train_keep if lloyd else None,
+            "metric": metric,
+            "pq_codebook": None,
             # residual-encoded codes (build ≥ r7); absent/False in
             # older manifests → the raw-code search path still serves
             "pq_residual": itype == "IVF_PQ",
@@ -2244,18 +2202,51 @@ class Table:
             "pq_residual_convention": (
                 _PQ_RESIDUAL_CONVENTION if itype == "IVF_PQ" else None
             ),
-            # separation statistics → the exact-fallback planner rule
-            # applies to persisted-index searches too (None = +inf)
-            "mean_intra_radius": idx.mean_intra_radius,
-            "mean_nn_centroid_dist": (
-                None
-                if idx.mean_nn_centroid_dist is None
-                or math.isinf(idx.mean_nn_centroid_dist)
-                else idx.mean_nn_centroid_dist
-            ),
-        }
-        self._save_meta(meta)
-        return {"field": field, "version": version, "indexedRecords": indexed_up_to}
+        })
+
+    @staticmethod
+    def _ivf_encode(assigned: DataFrame, field: str, info: dict) -> DataFrame:
+        """The stored columns of one IVF dir, from rows already carrying
+        ``_cluster`` — shared by build and refresh, so delta dirs encode
+        exactly like the main dir:
+        - IVF_SQ8: int8 codes + per-row scale + exact squared norm, NOT
+          the float vectors: the probe-scan reads 1 byte/dim instead of
+          4; exact distances come from re-joining the base table for
+          the (small) re-rank candidate set only.
+        - IVF_PQ: M sub-codes against the stored codebook, residual to
+          the stored centroids (or the raw encoding of a pre-residual
+          manifest); float vectors are touched only for re-ranking.
+        - IVF: the float vector itself."""
+        itype = info.get("type")
+        if itype == "IVF_SQ8":
+            from vectordb_spark.functions.distance import dot_product
+            from vectordb_spark.operators.quant import (
+                quant_scale_exprs,
+                quantize_exprs,
+            )
+
+            scale_s, _ = quant_scale_exprs(field)
+            qz_s, _ = quantize_exprs(field, "_scale")
+            return (
+                assigned.withColumn("_scale", F.expr(scale_s))
+                .withColumn("_q", F.expr(qz_s).cast("array<tinyint>"))
+                .withColumn("_norm2", dot_product(F.col(field), F.col(field)))
+                .select("_row_id", "_scale", "_q", "_norm2", "_cluster")
+            )
+        if itype == "IVF_PQ":
+            from vectordb_spark.operators.pq import PQIndex, ResidualPQIndex
+
+            if info.get("pq_residual"):
+                rpqi = ResidualPQIndex(m=len(info["pq_codebook"]))
+                rpqi.codebook = info["pq_codebook"]
+                rpqi.coarse_centroids = info["centroids"]
+                assigned = rpqi.codes_residual(assigned, field)
+            else:  # pre-residual manifest: keep its raw encoding
+                pqi = PQIndex(m=len(info["pq_codebook"]))
+                pqi.codebook = info["pq_codebook"]
+                assigned = pqi.codes(assigned, field)
+            return assigned.select("_row_id", "_pq_codes", "_cluster")
+        return assigned.select("_row_id", field, "_cluster")
 
     def _residual_probe_matches(
         self, info: dict, field: str, sample: int = 256
@@ -2265,7 +2256,7 @@ class Table:
         CURRENT residual convention (their stored ``_cluster`` pins the
         original coarse assignment) and compare byte-for-byte with the
         stored codes. True ⇒ the base was encoded under the current
-        convention and refresh may append deltas; False (any mismatch,
+        convention and refresh may extend the index; False (any mismatch,
         or no index row still live to verify against) ⇒ ambiguity
         stands and the caller rejects. One bounded read — the cost of
         never guessing about persisted bytes.
@@ -2289,9 +2280,7 @@ class Table:
         from vectordb_spark.operators.pq import ResidualPQIndex
 
         full_check_max = 65536
-        stored = self.spark.read.parquet(
-            os.path.join(self.path, info["dir"])
-        ).select(
+        stored = self.spark.read.parquet(self._ivf.path(info["dir"])).select(
             "_row_id",
             F.col("_pq_codes").cast("array<int>").alias("_stored"),
             F.col("_cluster").cast("int").alias("_cluster"),
@@ -2316,27 +2305,6 @@ class Table:
         ).first()
         return int(n_checked or 0) > 0 and int(n_equal or 0) == int(n_checked)
 
-    def _tail_df(self, up_to: int, meta: dict | None = None) -> "DataFrame":
-        """Rows inserted since ``up_to`` with SEGMENT PRUNING from the
-        manifest's ``_row_id`` min/max (recorded at write time, r12):
-        segments wholly below the watermark never enter the plan, so a
-        refresh reads the TAIL, not the table — the property the
-        delta-refresh discipline exists for. Conservative: missing
-        stats keep the segment, and the watermark filter is always
-        applied to the surviving rows. Callers that already hold a
-        manifest snapshot pass it so the tail and the rest of their
-        plan read the SAME version (no re-load, no snapshot drift
-        under concurrent writers)."""
-        from vectordb_spark.expr.prune import segment_overlaps
-
-        if meta is None:
-            meta = self._load_meta()
-        files = list(meta["files"])
-        stats = meta.get("segment_stats") or {}
-        bounds = {"_row_id": (float(up_to), None)}
-        keep = [f for f in files if segment_overlaps(stats.get(f), bounds)]
-        return self._df_for_files(keep).where(F.col("_row_id") >= up_to)
-
     def refresh_index(self, field: str) -> dict:
         """Incremental ANN-index refresh: rows inserted since the last
         build/refresh self-assign to the STORED centroids (codegen
@@ -2344,55 +2312,18 @@ class Table:
         stored codes (SQ8 quantization / PQ encoding against the stored
         codebook — both stateless given the manifest), and land in a
         new immutable delta dir partitioned by ``_cluster``; the
-        manifest extends cluster sizes and advances ``indexed_up_to``
-        in one CAS commit. A growing table keeps probe-pruned searches
-        without per-query tail scans and without re-running KMeans —
-        centroids and the separation-planner statistics stay
-        build-time until a full ``rebuild`` (the text index's delta
-        discipline, applied to vectors; the reference rebuilds from
-        scratch each cycle, table_mvp.cpp:94-203)."""
-        from vectordb_spark.functions.distance import l2_squared, vector_literal
+        manifest extends cluster sizes in the same commit. A growing
+        table keeps probe-pruned searches without per-query tail scans
+        and without re-running KMeans — centroids and the
+        separation-planner statistics stay build-time until a full
+        ``rebuild`` (the reference rebuilds from scratch each cycle,
+        table_mvp.cpp:94-203)."""
 
-        meta = self._load_meta()
-        info = meta.get("indexes", {}).get(field)
-        if info is None:
-            raise VectorDBError(
-                "NOT_IMPLEMENTED_ERROR",
-                f"No index on field {field}; call rebuild first.",
+        def write(tail: DataFrame, name: str, info: dict) -> int:
+            assigned = tail.select("_row_id", field).withColumn(
+                "_cluster", _nearest_centroid(field, info["centroids"])
             )
-        up_to = int(info["indexed_up_to"])
-        if up_to >= int(meta["next_row_id"]):
-            return {"field": field, "version": info["version"], "appendedRecords": 0}
-        tail = self._tail_df(up_to, meta).select("_row_id", field)
-        dists = F.array(
-            *[
-                l2_squared(F.col(field), vector_literal(c))
-                for c in info["centroids"]
-            ]
-        )
-        assigned = tail.withColumn(
-            "_cluster",
-            (F.array_position(dists, F.array_min(dists)) - 1).cast("int"),
-        )
-        if info.get("type") == "IVF_SQ8":
-            from vectordb_spark.functions.distance import dot_product
-            from vectordb_spark.operators.quant import (
-                quant_scale_exprs,
-                quantize_exprs,
-            )
-
-            scale_s, _ = quant_scale_exprs(field)
-            qz_s, _ = quantize_exprs(field, "_scale")
-            assigned = (
-                assigned.withColumn("_scale", F.expr(scale_s))
-                .withColumn("_q", F.expr(qz_s).cast("array<tinyint>"))
-                .withColumn("_norm2", dot_product(F.col(field), F.col(field)))
-                .select("_row_id", "_scale", "_q", "_norm2", "_cluster")
-            )
-        elif info.get("type") == "IVF_PQ":
-            from vectordb_spark.operators.pq import PQIndex, ResidualPQIndex
-
-            if info.get("pq_residual"):
+            if info.get("type") == "IVF_PQ" and info.get("pq_residual"):
                 # Mixing residual-arithmetic conventions inside one
                 # index silently skews recall (delta codes land in
                 # different grid cells than the base codebook was
@@ -2417,45 +2348,22 @@ class Table:
                         "codes would not be comparable to the stored "
                         "base codes. Run rebuild() to re-encode.",
                     )
-                rpqi = ResidualPQIndex(m=len(info["pq_codebook"]))
-                rpqi.codebook = info["pq_codebook"]
-                rpqi.coarse_centroids = info["centroids"]
-                assigned = rpqi.codes_residual(assigned, field).select(
-                    "_row_id", "_pq_codes", "_cluster"
-                )
-            else:  # pre-residual manifest: keep its raw encoding
-                pqi = PQIndex(m=len(info["pq_codebook"]))
-                pqi.codebook = info["pq_codebook"]
-                assigned = pqi.codes(assigned, field).select(
-                    "_row_id", "_pq_codes", "_cluster"
-                )
-        else:
-            assigned = assigned.select("_row_id", field, "_cluster")
-        deltas = list(info.get("deltas", []))
-        name = f"{info['dir']}_delta{len(deltas) + 1}"
-        assigned = assigned.localCheckpoint()  # one compute: write + sizes
-        assigned.write.partitionBy("_cluster").parquet(
-            os.path.join(self.path, name)
-        )
-        delta_sizes = {
-            str(r["_cluster"]): int(r["n"])
-            for r in assigned.groupBy("_cluster")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        appended = sum(delta_sizes.values())
-        sizes = dict(info.get("cluster_sizes") or {})
-        for c, n in delta_sizes.items():
-            sizes[c] = int(sizes.get(c, 0)) + n
-        info["cluster_sizes"] = sizes
-        info["deltas"] = deltas + [name]
-        info["indexed_up_to"] = meta["next_row_id"]
-        self._save_meta(meta)
-        return {
-            "field": field,
-            "version": info["version"],
-            "appendedRecords": appended,
-        }
+            # one compute: write + sizes
+            assigned = self._ivf_encode(assigned, field, info).localCheckpoint()
+            self._ivf.save(assigned, name, partition_by="_cluster")
+            delta_sizes = {
+                str(r["_cluster"]): int(r["n"])
+                for r in assigned.groupBy("_cluster")
+                .agg(F.count(F.lit(1)).alias("n"))
+                .collect()
+            }
+            sizes = dict(info.get("cluster_sizes") or {})
+            for c, n in delta_sizes.items():
+                sizes[c] = int(sizes.get(c, 0)) + n
+            info["cluster_sizes"] = sizes
+            return sum(delta_sizes.values())
+
+        return self._ivf.refresh(field, write)
 
     def search_indexed_df(
         self,
@@ -2474,23 +2382,14 @@ class Table:
         only; ``nprobe=None`` auto-plans the probe list from stored
         cluster sizes (probe until ~32·limit candidates or 25% of the
         table), an int pins it."""
-        from vectordb_spark.operators.ann import IVFIndex
-
         f = self._resolve_query_field(query_field, None)
         meta = self._load_meta()
-        info = meta.get("indexes", {}).get(f.name)
+        info = self._ivf.entry(meta, f.name)
         if info is None:
             return self.search_df(
                 query_vector, query_field=f.name, limit=limit, filter=filter
             )
-        idx = IVFIndex(k=info["k"], seed=info["seed"], metric=info["metric"])
-        idx.centroids = info["centroids"]
-        idx.cluster_sizes = {
-            int(c): int(n) for c, n in (info.get("cluster_sizes") or {}).items()
-        }
-        idx.mean_intra_radius = info.get("mean_intra_radius")
-        nn = info.get("mean_nn_centroid_dist")
-        idx.mean_nn_centroid_dist = float("inf") if nn is None else float(nn)
+        idx = _ivf_from_info(info)
         q = _normalize_dense_query(query_vector, f)
         if nprobe is None:
             # the separation planner rule (operators/ann.py): when the
@@ -2509,37 +2408,19 @@ class Table:
                 clusters = idx.plan_probes(q, limit)
         else:
             clusters = idx.probe_clusters(q, nprobe)
-        # main dir + refresh deltas, each its own cluster-partitioned
-        # root: probe pruning (PartitionFilters on _cluster) applies
-        # per dir, then the candidate streams union
-        from functools import reduce
-
-        probed = reduce(
-            lambda a, b: a.unionByName(b),
-            (
-                (
-                    d if clusters is None
-                    else d.where(F.col("_cluster").isin(clusters))
-                )
-                for d in (
-                    self.spark.read.parquet(os.path.join(self.path, p))
-                    for p in [info["dir"], *info.get("deltas", [])]
-                )
-            ),
+        # probe pruning (PartitionFilters on _cluster) applies per dir,
+        # then the candidate streams union
+        probed = self._ivf.read(
+            info,
+            None if clusters is None
+            else (lambda d: d.where(F.col("_cluster").isin(clusters))),
         )
         base = self.df()
-        # unchanged manifest mutation_seq ⇒ no deletes/upserts since
-        # the build ⇒ the index holds no dead ids and the semi-join
-        # (a full base scan + shuffle per search) is skipped
-        clean = info.get("mutation_seq") == meta.get("mutation_seq", 0)
         if info.get("type") == "IVF_SQ8":
             # the index may hold ids for rows deleted/upserted since the
             # build; drop them BEFORE the refine cut, or a delete-heavy
             # table would fill the candidate budget with dead ids
-            if not clean:
-                probed = probed.join(
-                    base.select("_row_id"), "_row_id", "left_semi"
-                )
+            probed = self._ivf.live(probed, info, meta, base)
             # quantized probe-scan: rank the probed codes by the int8
             # approximation, keep refine·limit candidate ids — the scan
             # reads codes (1 B/dim), never float vectors; exact
@@ -2577,17 +2458,14 @@ class Table:
                 quantize_query,
             )
 
-            if not clean:
-                probed = probed.join(
-                    base.select("_row_id"), "_row_id", "left_semi"
-                )
+            probed = self._ivf.live(probed, info, meta, base)
             refine = max(4 * limit, 64)
             if clusters is None:
                 # whole-index ADC fallback (unclusterable corpus):
                 # refine scales to 2% of the indexed rows — a fixed
                 # budget collapses recall when 4-bit ADC ranks
                 # distance-concentrated data (see operators/ann.py)
-                refine = max(refine, 16 * limit, info["indexed_up_to"] // 50)
+                refine = max(refine, 16 * limit, self._ivf.watermark(info) // 50)
             if info.get("pq_residual"):
                 # per-cluster ADC: each probed cell ranks its codes
                 # against ITS residual query (q − centroid_c); residual
@@ -2620,22 +2498,14 @@ class Table:
             )
         cand_ids = probed.select("_row_id")
         candidates = base.join(cand_ids, "_row_id", "left_semi")
-        if int(info["indexed_up_to"]) < int(meta["next_row_id"]):
-            # segment-pruned tail (r12): only post-build segments scan
-            candidates = candidates.unionByName(
-                self._tail_df(int(info["indexed_up_to"]), meta)
-            ).dropDuplicates(["_row_id"])
-        ast = parse_filter(filter, self.field_map())
+        tail = self._ivf.tail(meta, info)
+        if tail is not None:
+            candidates = candidates.unionByName(tail).dropDuplicates(["_row_id"])
         qcol = F.array(*[F.lit(float(x)) for x in q])
         dist = distance_for_metric(info["metric"], F.col(f.name), qcol)
-        out = candidates
-        post = ast is not None and references_distance(ast)
-        if ast is not None and not post:
-            out = out.where(to_spark_column(ast))
-        out = out.withColumn("_distance", dist)
-        if post:
-            out = out.where(to_spark_column(ast))
-        return out.orderBy(F.col("_distance").asc(), F.col("_row_id").asc()).limit(limit)
+        return _rank_by_distance(
+            candidates, dist, parse_filter(filter, self.field_map()), limit
+        )
 
     def search_clustered_df(
         self,
@@ -2679,17 +2549,7 @@ class Table:
         ast = parse_filter(filter, self.field_map())
         qcol = F.array(*[F.lit(float(x)) for x in q])
         dist = distance_for_metric(idx.metric, F.col(f.name), qcol)
-        post = ast is not None and references_distance(ast)
-        if ast is not None and not post:
-            out = out.where(to_spark_column(ast))
-        out = out.withColumn("_distance", dist)
-        if post:
-            out = out.where(to_spark_column(ast))
-        return (
-            out.orderBy(F.col("_distance").asc(), F.col("_row_id").asc())
-            .limit(limit)
-            .drop("_cluster")
-        )
+        return _rank_by_distance(out, dist, ast, limit).drop("_cluster")
 
     def rebuild_text_index(self, field: str, *, buckets: int = 64) -> dict:
         """Batch (re)build of a persisted INVERTED INDEX over a STRING
@@ -2699,144 +2559,104 @@ class Table:
         ``_tb = pmod(xxhash64(token), buckets)``, so a query's terms
         prune to |terms|/buckets of the index at file-listing time —
         the lexical analog of IVF probe pruning. Corpus stats (N docs,
-        Σ doc lengths) are recorded in the manifest; ``indexed_up_to``
-        marks the unindexed tail for hybrid indexed+tail search, the
-        same T5 discipline as the vector index.
+        Σ doc lengths) are recorded in the manifest; rows inserted
+        after the build form the unindexed tail of hybrid indexed+tail
+        search, the same T5 discipline as the vector index.
 
         Whitespace tokenization matches the query-layer BM25
         (queries/fusion.py) so indexed search reproduces the corpus
         scan bit-for-bit. At 100 TB you'd raise ``buckets`` (and write
-        more files per bucket — the repartition key below); 64 keeps
+        more files per bucket — the salted shuffle key); 64 keeps
         local test layouts small."""
         f = self.schema.get(field)
         if f is None or f.field_type not in (FieldType.STRING,):
             raise VectorDBError(
                 "INVALID_PAYLOAD", f"Field {field} is not a STRING field."
             )
-        meta = self._load_meta()
-        version = (
-            meta.get("text_indexes", {}).get(field, {}).get("version", 0) + 1
+        return self._text.build(
+            field,
+            functools.partial(self._write_text_postings, field),
+            {"buckets": buckets},
         )
-        name = f"textindex_{field}_v{version}"
-        n_docs, sum_dl = self._write_text_postings(
-            self.df(), field, buckets, name
-        )
-        meta.setdefault("text_indexes", {})[field] = {
-            "version": version,
-            "dir": name,
-            "deltas": [],
-            "buckets": buckets,
-            "n_docs": n_docs,
-            "sum_dl": sum_dl,
-            "indexed_up_to": meta["next_row_id"],
-            "mutation_seq": int(meta.get("mutation_seq", 0)),
-        }
-        self._save_meta(meta)
-        return {
-            "field": field,
-            "version": version,
-            "indexedRecords": n_docs,
-        }
 
-    def _write_text_postings(
-        self, df: DataFrame, field: str, buckets: int, name: str
-    ) -> tuple[int, int]:
-        """One explode → groupBy pass over ``df``'s text, written as a
-        bucket-partitioned posting dir; returns (doc count, Σ doc
-        lengths) for the manifest stats. Postings are POSITIONAL
+    @staticmethod
+    def _text_postings(
+        df: DataFrame, field: str, terms: list[str] | None = None
+    ) -> DataFrame:
+        """(_row_id, _dl, _token, _tf, _pos) from raw text in one
+        explode → groupBy pass; ``terms`` keeps only the query terms
+        (the unindexed-tail scoring path). Postings are POSITIONAL
         (sorted 1-based ``_pos`` array per (doc, token)) so phrase
         queries resolve from the index alone — the Lucene
         positions-in-postings layout."""
         words = F.split(F.col(field), " ", -1)
-        postings = (
-            df.select(
-                "_row_id",
-                F.size(words).cast("long").alias("_dl"),
-                F.posexplode(words).alias("_p0", "_token"),
-            )
-            .groupBy("_row_id", "_dl", "_token")
-            .agg(
-                F.count(F.lit(1)).alias("_tf"),
-                F.sort_array(F.collect_list(F.col("_p0") + 1)).alias("_pos"),
-            )
-            .withColumn(
-                "_tb", F.pmod(F.xxhash64("_token"), F.lit(buckets)).cast("int")
-            )
+        exploded = df.select(
+            "_row_id",
+            F.size(words).cast("long").alias("_dl"),
+            F.posexplode(words).alias("_p0", "_token"),
+        )
+        if terms is not None:
+            exploded = exploded.where(F.col("_token").isin(*terms))
+        return exploded.groupBy("_row_id", "_dl", "_token").agg(
+            F.count(F.lit(1)).alias("_tf"),
+            F.sort_array(F.collect_list(F.col("_p0") + 1)).alias("_pos"),
+        )
+
+    def _write_text_postings(
+        self, field: str, df: DataFrame, name: str, info: dict
+    ) -> int:
+        """Text-index writer (build and refresh): ``df``'s positional
+        postings as one bucket-partitioned dir; the entry's corpus stats
+        (N docs, Σ doc lengths) grow by ``df``'s. Returns its doc
+        count."""
+        buckets = int(info["buckets"])
+        postings = self._text_postings(df, field).withColumn(
+            "_tb", F.pmod(F.xxhash64("_token"), F.lit(buckets)).cast("int")
         )
         n_docs, sum_dl = df.select(
-            F.count(F.lit(1)), F.sum(F.size(words)).cast("long")
+            F.count(F.lit(1)), F.sum(F.size(F.split(F.col(field), " ", -1))).cast("long")
         ).first()
-        (
-            # shuffle key (_tb, row-hash): plain _tb would funnel each
-            # bucket — and with zipfian tokens, the hot bucket holds a
-            # large corpus fraction — through ONE writer task. The
-            # row-hash salt splits every bucket across 4 writers (4
-            # files/bucket dir) while partitionBy still lays out one
-            # directory per bucket for file-listing pruning.
-            postings.repartition(
-                F.col("_tb"), F.pmod(F.xxhash64("_row_id"), F.lit(4))
-            )
-            .write.mode("overwrite")
-            .partitionBy("_tb")
-            .parquet(os.path.join(self.path, name))
-        )
-        return int(n_docs or 0), int(sum_dl or 0)
+        self._text.save_bucketed(postings, "_tb", name)
+        info["n_docs"] = int(info.get("n_docs", 0)) + int(n_docs or 0)
+        info["sum_dl"] = int(info.get("sum_dl", 0)) + int(sum_dl or 0)
+        return int(n_docs or 0)
 
     def refresh_text_index(self, field: str) -> dict:
         """Incremental index refresh: postings for ONLY the unindexed
         tail (rows inserted since the last build/refresh) land in a new
         immutable DELTA dir alongside the main index — same bucket
         partitioning, so query-term pruning applies per dir — and the
-        manifest extends (N, Σdl) and advances ``indexed_up_to``
-        atomically (CAS commit). A growing table never pays a full
-        rebuild just to keep search off the live-tail scan path: the
-        Lucene segment-commit discipline, with the manifest as the
-        segments file. Deletes are untouched — dead postings in older
-        dirs stay handled by the mutation_seq semi-join until a full
-        ``rebuild_text_index`` resets the baseline (= Lucene merge)."""
-        meta = self._load_meta()
-        info = meta.get("text_indexes", {}).get(field)
-        if info is None:
-            raise VectorDBError(
-                "NOT_IMPLEMENTED_ERROR",
-                f"No text index on field {field}; call rebuild_text_index first.",
-            )
-        up_to = int(info["indexed_up_to"])
-        if up_to >= int(meta["next_row_id"]):
-            return {"field": field, "version": info["version"], "appendedRecords": 0}
-        tail = self._tail_df(up_to, meta)
-        deltas = list(info.get("deltas", []))
-        name = f"{info['dir']}_delta{len(deltas) + 1}"
-        n_docs, sum_dl = self._write_text_postings(
-            tail, field, int(info["buckets"]), name
+        manifest extends (N, Σdl) in the same commit. A growing table
+        never pays a full rebuild just to keep search off the live-tail
+        scan path."""
+        return self._text.refresh(
+            field, functools.partial(self._write_text_postings, field)
         )
-        info["deltas"] = deltas + [name]
-        info["n_docs"] = int(info["n_docs"]) + n_docs
-        info["sum_dl"] = int(info["sum_dl"]) + sum_dl
-        info["indexed_up_to"] = meta["next_row_id"]
-        self._save_meta(meta)
-        return {
-            "field": field,
-            "version": info["version"],
-            "appendedRecords": n_docs,
-        }
 
-    def _text_postings(self, df: DataFrame, field: str, terms: list[str]) -> DataFrame:
-        """(_row_id, _dl, _token, _tf, _pos) for query terms, computed
-        directly from text — the unindexed-tail scoring path."""
-        words = F.split(F.col(field), " ", -1)
+    def _fetch_top(self, base: DataFrame, ranked: DataFrame) -> DataFrame:
+        """Two-phase fetch (the doc-store point-read a real lexical
+        engine does): collect the ≤limit (id, score, terms) rows of the
+        ``ranked`` plan — which on a clean index touches ONLY the pruned
+        postings — and re-read ``base`` with a pushed-down _row_id IN
+        filter so parquet row-group stats prune the fetch. Without this
+        the final join scans the whole base to materialize k rows,
+        wiping out the posting pruning's advantage (measured: the fetch
+        scan alone cost as much as the entire corpus-scan BM25)."""
+        top = ranked.collect()
+        if not top:
+            return (
+                base.withColumn("_score", F.lit(0).cast("long"))
+                .withColumn("_terms", F.lit(0).cast("long"))
+                .limit(0)
+            )
+        hits = self.spark.createDataFrame(
+            [(r["_row_id"], r["_score"], r["_terms"]) for r in top],
+            "_row_id long, _score long, _terms long",
+        )
         return (
-            df.select(
-                "_row_id",
-                F.size(words).cast("long").alias("_dl"),
-                F.posexplode(words).alias("_p0", "_token"),
-            )
-            .where(F.col("_token").isin(*terms))
-            .groupBy("_row_id", "_dl", "_token")
-            .agg(
-                F.count(F.lit(1)).alias("_tf"),
-                F.sort_array(F.collect_list(F.col("_p0") + 1)).alias("_pos"),
-            )
+            base.where(F.col("_row_id").isin([r["_row_id"] for r in top]))
+            .join(F.broadcast(hits), "_row_id")
+            .orderBy(F.col("_score").desc(), F.col("_row_id"))
         )
 
     def search_text_df(
@@ -2871,15 +2691,11 @@ class Table:
         from vectordb_spark.functions.text_rank import bm25_sq_expr
 
         meta = self._load_meta()
-        tidx = meta.get("text_indexes", {})
+        tidx = self._text.entries(meta)
         field = query_field or next(iter(tidx), None)
         info = tidx.get(field) if field else None
         if info is None:
-            raise VectorDBError(
-                "NOT_IMPLEMENTED_ERROR",
-                f"No text index on field {field or '<none>'}; "
-                "call rebuild_text_index first.",
-            )
+            raise self._text.missing(field)
         seq_terms = [t for t in query_text.split(" ") if t]
         terms = sorted(set(seq_terms))
         if not terms:
@@ -2892,47 +2708,27 @@ class Table:
         from vectordb_spark.functions.hashing import pmod_bucket
 
         tbs = [pmod_bucket(t, buckets) for t in terms]
-        # main dir + refresh deltas: each is its own bucket-partitioned
-        # root, read with the same (_tb PartitionFilter, _token
-        # predicate) pruning and unioned — the Lucene multi-segment read
-        from functools import reduce
-
-        idx = reduce(
-            lambda a, b: a.unionByName(b),
-            (
-                spark.read.parquet(os.path.join(self.path, d))
-                .where(
-                    F.col("_tb").isin(sorted(set(tbs)))
-                    & F.col("_token").isin(*terms)
-                )
-                .select(
-                    "_row_id", "_dl", "_token", "_tf",
-                    *(["_pos"] if phrase else []),
-                )
-                for d in [info["dir"], *info.get("deltas", [])]
+        idx = self._text.read(
+            info,
+            lambda d: d.where(
+                F.col("_tb").isin(sorted(set(tbs)))
+                & F.col("_token").isin(*terms)
+            ).select(
+                "_row_id", "_dl", "_token", "_tf",
+                *(["_pos"] if phrase else []),
             ),
         )
         base = self.df()
-        up_to = int(info["indexed_up_to"])
-        has_tail = up_to < int(meta["next_row_id"])
-        # dead-id discipline (same as the SQ8/PQ vector paths): the
-        # index may hold postings for rows deleted since the build —
-        # drop them before df counting and the top-k cut. Corpus stats
-        # (N, Σdl) stay build-time until rebuild — the Lucene
-        # convention for deleted docs (slightly stale idf, never
-        # wrong candidates). The manifest mutation_seq tells us when
-        # this is NECESSARY: unchanged seq ⇒ no deletes since the
-        # build ⇒ skip the semi-join (a full base scan + shuffle)
-        # entirely; likewise an unmoved row-id cursor skips both tail
-        # scans. The clean-index fast path therefore touches only the
-        # pruned postings + the top-k row fetch.
-        clean = info.get("mutation_seq") == meta.get("mutation_seq", 0)
-        if not clean:
-            idx = idx.join(base.select("_row_id"), "_row_id", "left_semi")
-        postings = idx
-        if has_tail:
-            # segment-pruned tail (r12): only post-build segments scan
-            tail = self._tail_df(up_to, meta)
+        tail = self._text.tail(meta, info)
+        # dead-id discipline (same as the SQ8/PQ vector paths): drop
+        # postings of rows deleted since the build before df counting
+        # and the top-k cut. Corpus stats (N, Σdl) stay build-time
+        # until rebuild — the Lucene convention for deleted docs
+        # (slightly stale idf, never wrong candidates). The clean-index
+        # fast path (no deletes, no tail) touches only the pruned
+        # postings + the top-k row fetch.
+        postings = self._text.live(idx, info, meta, base)
+        if tail is not None:
             tail_postings = self._text_postings(tail, field, terms)
             if not phrase:
                 tail_postings = tail_postings.drop("_pos")
@@ -2979,7 +2775,7 @@ class Table:
         dfreq = postings.groupBy("_token").agg(
             F.countDistinct("_row_id").alias("_df")
         )
-        if has_tail:
+        if tail is not None:
             words = F.split(F.col(field), " ", -1)
             stats = (
                 tail.select(
@@ -3015,31 +2811,7 @@ class Table:
             .limit(limit)
         )
         if limit <= self._TEXT_FETCH_COLLECT_MAX:
-            # Two-phase fetch (the doc-store point-read a real lexical
-            # engine does): run the scoring plan — which on a clean
-            # index touches ONLY the pruned postings — collect the
-            # ≤limit (id, score) pairs, and re-read base with a
-            # pushed-down _row_id IN filter so parquet row-group stats
-            # prune the fetch. Without this the final join scans the
-            # whole base to materialize k rows, wiping out the posting
-            # pruning's advantage (measured: the fetch scan alone cost
-            # as much as the entire corpus-scan BM25).
-            top = scored.collect()
-            if not top:
-                return (
-                    base.withColumn("_score", F.lit(0).cast("long"))
-                    .withColumn("_terms", F.lit(0).cast("long"))
-                    .limit(0)
-                )
-            hits = spark.createDataFrame(
-                [(r["_row_id"], r["_score"], r["_terms"]) for r in top],
-                "_row_id long, _score long, _terms long",
-            )
-            return (
-                base.where(F.col("_row_id").isin([r["_row_id"] for r in top]))
-                .join(F.broadcast(hits), "_row_id")
-                .orderBy(F.col("_score").desc(), F.col("_row_id"))
-            )
+            return self._fetch_top(base, scored)
         # large limits (bulk consumers / the oracle gate's re-cut) keep
         # ONE composed plan — no driver materialization of a big top-k
         return (
@@ -3063,86 +2835,32 @@ class Table:
             raise VectorDBError(
                 "INVALID_PAYLOAD", f"Field {field} is not a sparse vector field."
             )
-        from vectordb_spark.functions.distance import sparse_norm_sq
-
-        meta = self._load_meta()
-        version = (
-            meta.get("sparse_indexes", {}).get(field, {}).get("version", 0) + 1
+        return self._sparse.build(
+            field,
+            functools.partial(self._write_sparse_postings, field),
+            {"buckets": buckets},
         )
-        name = f"sparseindex_{field}_v{version}"
-        df = self.df()
-        self._write_sparse_postings(df, field, buckets, name)
-        norms_name = f"{name}_norms"
-        df.select(
-            "_row_id", sparse_norm_sq(F.col(field)).alias("_norm2")
-        ).write.mode("overwrite").parquet(os.path.join(self.path, norms_name))
-        n = self._dir_count(norms_name)
-        meta.setdefault("sparse_indexes", {})[field] = {
-            "version": version,
-            "dir": name,
-            "norms_dir": norms_name,
-            "buckets": buckets,
-            "deltas": [],
-            "norms_deltas": [],
-            "indexed_up_to": meta["next_row_id"],
-            "mutation_seq": int(meta.get("mutation_seq", 0)),
-        }
-        self._save_meta(meta)
-        return {"field": field, "version": version, "indexedRecords": n}
 
     def refresh_sparse_index(self, field: str) -> dict:
-        """Incremental sparse-index refresh (r12 — the sparse twin of
+        """Incremental sparse-index refresh (the sparse twin of
         ``refresh_text_index``): postings and norms for ONLY the
-        unindexed tail (rows inserted since the last build/refresh)
-        land in new immutable DELTA dirs beside the main index — same
-        ``_db`` bucket partitioning, so query-dim pruning applies per
-        dir — and ``indexed_up_to`` advances atomically. A growing
-        table never pays a full posting rebuild to keep search off the
-        live-tail scan path. Deletes are untouched: dead postings in
-        older dirs stay handled by the mutation_seq semi-join until a
-        full ``rebuild_sparse_index`` resets the baseline (the Lucene
-        segment-commit discipline)."""
-        from vectordb_spark.functions.distance import sparse_norm_sq
-
-        meta = self._load_meta()
-        info = meta.get("sparse_indexes", {}).get(field)
-        if info is None:
-            raise VectorDBError(
-                "NOT_IMPLEMENTED_ERROR",
-                f"No sparse index on field {field}; call "
-                "rebuild_sparse_index first.",
-            )
-        up_to = int(info["indexed_up_to"])
-        if up_to >= int(meta["next_row_id"]):
-            return {
-                "field": field,
-                "version": info["version"],
-                "appendedRecords": 0,
-            }
-        tail = self._tail_df(up_to, meta)
-        deltas = list(info.get("deltas", []))
-        name = f"{info['dir']}_delta{len(deltas) + 1}"
-        self._write_sparse_postings(tail, field, int(info["buckets"]), name)
-        norms_name = f"{name}_norms"
-        tail.select(
-            "_row_id", sparse_norm_sq(F.col(field)).alias("_norm2")
-        ).write.mode("overwrite").parquet(os.path.join(self.path, norms_name))
-        n = self._dir_count(norms_name)
-        info["deltas"] = deltas + [name]
-        info["norms_deltas"] = list(info.get("norms_deltas", [])) + [
-            norms_name
-        ]
-        info["indexed_up_to"] = meta["next_row_id"]
-        self._save_meta(meta)
-        return {
-            "field": field,
-            "version": info["version"],
-            "appendedRecords": n,
-        }
+        unindexed tail land in new immutable DELTA dirs beside the main
+        index — same ``_db`` bucket partitioning, so query-dim pruning
+        applies per dir. A growing table never pays a full posting
+        rebuild to keep search off the live-tail scan path."""
+        return self._sparse.refresh(
+            field, functools.partial(self._write_sparse_postings, field)
+        )
 
     def _write_sparse_postings(
-        self, df: DataFrame, field: str, buckets: int, name: str
-    ) -> None:
+        self, field: str, df: DataFrame, name: str, info: dict
+    ) -> int:
+        """Sparse-index writer (build and refresh): one posting row per
+        nonzero (doc, dim) as a bucket-partitioned dir, plus the norms
+        sidecar. Returns the sidecar's row count."""
+        from vectordb_spark.functions.distance import sparse_norm_sq
+
+        buckets = int(info["buckets"])
         v = F.col(field)
         postings = (
             df.select(
@@ -3158,16 +2876,12 @@ class Table:
             )
             .withColumn("_db", F.pmod(F.col("_dim"), F.lit(buckets)).cast("int"))
         )
-        (
-            # same zipf-skew salting as the text index: hot dims split
-            # across 4 writers, one dir per bucket for pruning
-            postings.repartition(
-                F.col("_db"), F.pmod(F.xxhash64("_row_id"), F.lit(4))
-            )
-            .write.mode("overwrite")
-            .partitionBy("_db")
-            .parquet(os.path.join(self.path, name))
+        self._sparse.save_bucketed(postings, "_db", name)
+        norms = self._sparse.sidecar(name)
+        self._sparse.save(
+            df.select("_row_id", sparse_norm_sq(v).alias("_norm2")), norms
         )
+        return self._dir_count(norms)
 
     def search_sparse_indexed_df(
         self,
@@ -3188,14 +2902,15 @@ class Table:
         re-scores candidates with the canonical sparse distance — the
         index prunes, never approximates. Tail rows (inserted since
         the build) join both candidate streams via direct scans;
-        dead ids drop via the mutation_seq semi-join when needed."""
+        dead ids drop via a semi-join when a delete has committed since
+        the build."""
         f = self._resolve_query_field(query_field, None)
         if not f.field_type.is_sparse_vector:
             raise VectorDBError(
                 "INVALID_PAYLOAD", f"Field {f.name} is not a sparse vector field."
             )
         meta = self._load_meta()
-        info = meta.get("sparse_indexes", {}).get(f.name)
+        info = self._sparse.entry(meta, f.name)
         if info is None:
             return self.search_df(
                 query_vector, query_field=f.name, limit=limit, filter=filter
@@ -3204,47 +2919,21 @@ class Table:
         dims = [int(i) for i in q["indices"]]
         buckets = int(info["buckets"])
         dbs = sorted({d % buckets for d in dims})
-        spark = self.spark
         base = self.df()
         ast = parse_filter(filter, self.field_map())
-        clean = info.get("mutation_seq") == meta.get("mutation_seq", 0)
-        up_to = int(info["indexed_up_to"])
-        has_tail = up_to < int(meta["next_row_id"])
-
-        from functools import reduce as _reduce
-
-        idx_ids = _reduce(
-            DataFrame.unionByName,
-            [
-                spark.read.parquet(os.path.join(self.path, d))
-                .where(F.col("_db").isin(dbs) & F.col("_dim").isin(dims))
-                .select("_row_id")
-                # main dir + refresh deltas (refresh_sparse_index):
-                # each its own bucket-partitioned root, dim-pruned
-                # independently — same layout, so per-dir hive reads
-                # union cleanly
-                for d in [info["dir"], *info.get("deltas", [])]
-            ],
+        idx_ids = self._sparse.read(
+            info,
+            lambda d: d.where(
+                F.col("_db").isin(dbs) & F.col("_dim").isin(dims)
+            ).select("_row_id"),
         )
-        norms = _reduce(
-            DataFrame.unionByName,
-            [
-                spark.read.parquet(os.path.join(self.path, d))
-                for d in [
-                    info["norms_dir"],
-                    *info.get("norms_deltas", []),
-                ]
-            ],
-        )
-        if not clean:
-            live = base.select("_row_id")
-            idx_ids = idx_ids.join(live, "_row_id", "left_semi")
-            norms = norms.join(live, "_row_id", "left_semi")
-        if has_tail:
+        norms = self._sparse.read(info, sidecar=True)
+        idx_ids = self._sparse.live(idx_ids, info, meta, base)
+        norms = self._sparse.live(norms, info, meta, base)
+        tail = self._sparse.tail(meta, info)
+        if tail is not None:
             from vectordb_spark.functions.distance import sparse_norm_sq
 
-            # segment-pruned tail (r12): only post-build segments scan
-            tail = self._tail_df(up_to, meta)
             v = F.col(f.name)
             tail_ids = tail.select(
                 "_row_id", F.explode(v.getField("indices")).alias("_dim")
@@ -3326,27 +3015,9 @@ class Table:
             F.sum("_ws").cast("long").alias("_score"),
             F.sum("_t").cast("long").alias("_terms"),
         )
-        top = (
-            combined.orderBy(F.col("_score").desc(), F.col("_row_id"))
-            .limit(limit)
-            .collect()
-        )
-        if not top:
-            return (
-                self.df()
-                .withColumn("_score", F.lit(0).cast("long"))
-                .withColumn("_terms", F.lit(0).cast("long"))
-                .limit(0)
-            )
-        hits = self.spark.createDataFrame(
-            [(r["_row_id"], r["_score"], r["_terms"]) for r in top],
-            "_row_id long, _score long, _terms long",
-        )
-        return (
-            self.df()
-            .where(F.col("_row_id").isin([r["_row_id"] for r in top]))
-            .join(F.broadcast(hits), "_row_id")
-            .orderBy(F.col("_score").desc(), F.col("_row_id"))
+        return self._fetch_top(
+            self.df(),
+            combined.orderBy(F.col("_score").desc(), F.col("_row_id")).limit(limit),
         )
 
     def insert_prepare(self, primary_keys: list | None = None) -> dict:
@@ -3390,6 +3061,47 @@ class Table:
 
 class _SkipRecord(Exception):
     pass
+
+
+def _rank_by_distance(df: DataFrame, dist, ast, limit: int) -> DataFrame:
+    """The dense ranking tail of every KNN path: the filter runs before
+    the distance unless it references @distance (then after), and the
+    top ``limit`` rows by (distance, _row_id) come back with
+    ``_distance``."""
+    post = ast is not None and references_distance(ast)
+    if ast is not None and not post:
+        df = df.where(to_spark_column(ast))
+    df = df.withColumn("_distance", dist)
+    if post:
+        df = df.where(to_spark_column(ast))
+    return df.orderBy(F.col("_distance").asc(), F.col("_row_id").asc()).limit(limit)
+
+
+def _nearest_centroid(field: str, centroids: list[list[float]]):
+    """Nearest stored centroid as a codegen Column — k inline distance
+    expressions + array argmin, no shuffle, no UDF."""
+    from vectordb_spark.functions.distance import l2_squared, vector_literal
+
+    dists = F.array(
+        *[l2_squared(F.col(field), vector_literal(c)) for c in centroids]
+    )
+    return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
+
+
+def _ivf_from_info(info: dict):
+    """The coarse quantizer a manifest entry persisted (an IVF index or
+    the clustered layout), with its probe-planning statistics."""
+    from vectordb_spark.operators.ann import IVFIndex
+
+    idx = IVFIndex(k=info["k"], seed=info["seed"], metric=info["metric"])
+    idx.centroids = info["centroids"]
+    idx.cluster_sizes = {
+        int(c): int(n) for c, n in (info.get("cluster_sizes") or {}).items()
+    }
+    idx.mean_intra_radius = info.get("mean_intra_radius")
+    nn = info.get("mean_nn_centroid_dist")
+    idx.mean_nn_centroid_dist = float("inf") if nn is None else float(nn)
+    return idx
 
 
 def _validate_sparse(v, dimension: int) -> Row:
