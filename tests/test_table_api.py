@@ -665,7 +665,7 @@ def test_delete_cow_rewrites_only_matched_segments(warehouse, spark):
 
     # full-span delete: every segment empties and drops out of the
     # manifest entirely — no cow_ dirs, no consolidating base_ dir
-    # (r12: mutations never consolidate; see Table.COW_DISABLED)
+    # (r12: mutations never consolidate; see Table._cow_rewrite)
     res = t.delete(filter="ID >= 0")
     assert res["deleted"] == 18
     meta3 = t._load_meta()
@@ -1058,3 +1058,130 @@ def test_vacuum_reclaims_orphaned_cow_staging(spark, tmp_path):
     t.vacuum(grace_seconds=0)
     assert not os.path.exists(orphan)
     assert t.df().count() == 20  # table untouched
+
+
+def _fixture_batch(spark, t, rows):
+    """insert_df batch for ``_cow_fixture_table`` rows (id, val, v),
+    cast to the declared column types; NULL ids allowed."""
+    from pyspark.sql import functions as F
+
+    declared = t.schema.to_spark_schema()
+    df = spark.createDataFrame(rows, "id int, val int, v array<float>")
+    return df.select(
+        *[F.col(c).cast(declared[c].dataType).alias(c) for c in df.columns]
+    )
+
+
+def test_upsert_without_keys_keeps_segments(spark, tmp_path):
+    """An upsert batch with no non-NULL primary key (empty, or all
+    NULL) can replace no row — a NULL key never matches the anti-join
+    — so every original segment stays live verbatim and the batch only
+    adds its own rows: no consolidating rewrite into one base dir."""
+    t = _cow_fixture_table(spark, tmp_path / "nokeys")
+    meta0 = t._load_meta()
+    files0 = list(meta0["files"])
+    rows = 30
+    for batch in ([], [(None, 1, [1.0, 1.0])]):
+        res = t.insert_df(_fixture_batch(spark, t, batch), upsert=True)
+        assert res["inserted"] == len(batch)
+        rows += len(batch)
+        meta = t._load_meta()
+        assert meta["files"][: len(files0)] == files0
+        assert not any(f.startswith("base_") for f in meta["files"])
+        for f in files0:
+            assert meta["segment_rows"][f] == meta0["segment_rows"][f]
+        assert meta["row_count"] == rows == t.df().count()
+
+
+def test_upsert_rewrites_only_matched_without_stats_or_broadcast(
+    spark, tmp_path
+):
+    """A batch above the broadcast size joins unhinted, and without PK
+    stats every segment is a candidate; either way the upsert rewrites
+    only the segment holding a replaced key, keeps the others verbatim
+    and keeps keep-last semantics."""
+    t = _cow_fixture_table(spark, tmp_path / "nohint")
+    files0 = list(t._load_meta()["files"])
+    t.COW_UPSERT_MAX_BATCH = 0
+    batch = [(105, 50, [5.0, 5.0]), (999, 51, [9.0, 9.0])]
+    assert t.insert_df(_fixture_batch(spark, t, batch), upsert=True)["inserted"] == 2
+    meta = t._load_meta()
+    assert files0[0] in meta["files"] and files0[2] in meta["files"]
+    assert files0[1] not in meta["files"]
+    del t.COW_UPSERT_MAX_BATCH
+    meta["segment_stats"] = {}
+    t._save_meta(meta)
+    batch = [(5, 52, [5.0, 5.0])]
+    assert t.insert_df(_fixture_batch(spark, t, batch), upsert=True)["inserted"] == 1
+    meta = t._load_meta()
+    assert files0[0] not in meta["files"] and files0[2] in meta["files"]
+    assert not any(f.startswith("base_") for f in meta["files"])
+    vals = {r["id"]: r["val"] for r in t.df().select("id", "val").collect()}
+    assert len(vals) == meta["row_count"] == 31
+    assert (vals[105], vals[999], vals[5]) == (50, 51, 52)
+
+
+def test_every_mutation_is_one_consistent_commit(spark, tmp_path):
+    """All data mutations share one commit path: after each, the
+    manifest moved exactly one version, ``row_count`` equals both the
+    cached per-segment rows and a real count, and every live segment
+    has its stats, row count and byte size cached."""
+    t = _cow_fixture_table(spark, tmp_path / "commit", n_segments=2)
+    vec = lambda i: [float(i % 7), float(i % 5)]  # noqa: E731
+    version = t._load_meta()["version"]
+
+    def check(label):
+        nonlocal version
+        meta = t._load_meta()
+        assert meta["version"] == version + 1, label
+        version = meta["version"]
+        files = meta["files"]
+        for cache in ("segment_stats", "segment_rows", "segment_bytes"):
+            assert all(f in meta.get(cache, {}) for f in files), (label, cache)
+        cached = sum(meta["segment_rows"][f] for f in files)
+        assert meta["row_count"] == cached == t.df().count(), label
+
+    t.insert([{"id": 300 + i, "val": i, "v": vec(i)} for i in range(6)])
+    check("insert")
+    t.insert_df(_fixture_batch(spark, t, [(400 + i, i, vec(i)) for i in range(6)]))
+    check("insert_df")
+    t.insert([{"id": 3, "val": 99, "v": vec(3)}], upsert=True)
+    check("insert upsert")
+    t.insert_df(
+        _fixture_batch(spark, t, [(105, 98, vec(5)), (500, 1, vec(1))]),
+        upsert=True,
+    )
+    check("insert_df upsert")
+    assert t.delete(primary_keys=[0, 401])["deleted"] == 2
+    check("pk delete")
+    assert t.delete(filter="id >= 302 AND id <= 303")["deleted"] == 2
+    check("filter delete")
+    t.compact()
+    check("compact")
+    t.compact(cluster_by="v", k=2, train="lloyd", rounds=1)
+    check("clustered compact")
+    t.insert([{"id": 600, "val": 1, "v": vec(1)}])
+    check("clustered insert")
+    t.rewrite_zorder(("id", "val"), segments=3)
+    check("rewrite_zorder")
+    assert t.statistics() == {"totalRecords": 30}
+
+
+def test_rewrite_zorder_one_job_per_segment(spark, tmp_path):
+    """rewrite_zorder writes each z-range with its stats observed in
+    the write job: a fixed few jobs (snapshot read and checkpoint, the
+    quantile sketch) plus ONE per segment — not a checkpoint + count +
+    write + stats read-back per segment (7 jobs each, 32 in all here)."""
+    t = _cow_fixture_table(spark, tmp_path / "zjobs", n_segments=3)
+    sc = spark.sparkContext
+    group = "zorder-job-count-pin"
+    sc.setJobGroup(group, "rewrite_zorder job-count pin")
+    try:
+        res = t.rewrite_zorder(("id", "val"), segments=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert res["segmentsAfter"] == 4
+    assert jobs <= res["segmentsAfter"] + 5, f"rewrite_zorder ran {jobs} jobs"
+    meta = t._load_meta()
+    assert meta["row_count"] == t.df().count() == 30

@@ -26,6 +26,25 @@ def _same_kind(a, b) -> bool:
     return isinstance(a, str) == isinstance(b, str)
 
 
+def tighten(
+    bounds: dict[str, tuple[Bound, Bound]], name: str, lo: Bound, hi: Bound
+) -> None:
+    """Intersect ``bounds[name]`` with the closed interval [lo, hi] in
+    place; None leaves that side as it was. A type clash (x > 5 AND
+    x > 'a') keeps the OLDER bound: both are implied by the caller's
+    predicate, so either is safe to prune with."""
+    cur_lo, cur_hi = bounds.get(name, (None, None))
+    if lo is not None and (
+        cur_lo is None or (_same_kind(lo, cur_lo) and lo > cur_lo)
+    ):
+        cur_lo = lo
+    if hi is not None and (
+        cur_hi is None or (_same_kind(hi, cur_hi) and hi < cur_hi)
+    ):
+        cur_hi = hi
+    bounds[name] = (cur_lo, cur_hi)
+
+
 def range_bounds(ast: Node | None) -> dict[str, tuple[Bound, Bound]]:
     """{attr name: (lo, hi)} closed-interval bounds implied by the
     filter; None = unbounded on that side. Empty dict = nothing
@@ -37,20 +56,6 @@ def range_bounds(ast: Node | None) -> dict[str, tuple[Bound, Bound]]:
     out: dict[str, tuple[Bound, Bound]] = {}
     if ast is None:
         return out
-
-    def tighten(name: str, lo: Bound, hi: Bound) -> None:
-        cur_lo, cur_hi = out.get(name, (None, None))
-        # a type clash (x > 5 AND x > 'a') keeps the OLDER bound: both
-        # are implied by the filter, so either is safe to prune with
-        if lo is not None and (
-            cur_lo is None or (_same_kind(lo, cur_lo) and lo > cur_lo)
-        ):
-            cur_lo = lo
-        if hi is not None and (
-            cur_hi is None or (_same_kind(hi, cur_hi) and hi < cur_hi)
-        ):
-            cur_hi = hi
-        out[name] = (cur_lo, cur_hi)
 
     def walk(node: Node) -> None:
         if not isinstance(node, Binary):
@@ -78,11 +83,11 @@ def range_bounds(ast: Node | None) -> dict[str, tuple[Bound, Bound]]:
             )
             if op in ("<", "<="):
                 # closed-interval stats: x < v prunes like x <= v
-                tighten(left.name, None, v)
+                tighten(out, left.name, None, v)
             elif op in (">", ">="):
-                tighten(left.name, v, None)
+                tighten(out, left.name, v, None)
             elif op == "=":
-                tighten(left.name, v, v)
+                tighten(out, left.name, v, v)
 
     walk(ast)
     return out

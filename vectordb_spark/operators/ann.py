@@ -283,9 +283,9 @@ class IVFIndex:
             # unchanged: the same l2_squared zip_with/aggregate fold
             # runs per centroid element, so distances, the
             # first-position-of-min tie-break, and every trained
-            # centroid are bit-identical (profiled + asserted in
-            # scripts/profile_lloyd_r13.py; pinned by the trained-gate
-            # oracles and tests/test_ann.py replay tests).
+            # centroid are bit-identical (profiled in r13, see
+            # OPTIMIZATION_r13.md; pinned by the trained-gate oracles
+            # and tests/test_ann.py replay tests).
             cc = F.lit([[float(x) for x in c] for c in cents])
             dists = F.transform(cc, lambda c: l2_squared(F.col(vec_col), c))
             return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")

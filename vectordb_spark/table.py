@@ -1,15 +1,20 @@
 """Parquet-backed table with the reference engine's full DML/query
 surface (SURVEY.md §2.1, §3).
 
-Storage model: a manifest (``_meta.json``) lists immutable parquet data
-dirs plus ``next_row_id``; inserts append a new data dir, deletes and
-upserts write a consolidated base — the object-store pattern (what
+Storage model: a manifest (``_meta.json``) lists immutable parquet
+segment dirs plus ``next_row_id`` — the object-store pattern (what
 Delta/Iceberg do with a transaction log; the reference's WAL+snapshot,
-table_segment_mvp.cpp:939-1010, collapses into this). Manifest writes
-are atomic tmp+rename. Writes are single-writer per table, like the
-reference's ``data_update_mutex_`` (table_segment_mvp.cpp:456); readers
-always see a complete manifest → snapshot isolation, strictly better
-than the reference's racy lock-free reads (SURVEY.md §3.3).
+table_segment_mvp.cpp:939-1010, collapses into this). Every data
+mutation writes its new segments first and then makes ONE manifest
+commit (``Table._commit``): inserts add a segment; deletes and upserts
+copy-on-write only the segments whose manifest min/max stats overlap
+the mutation and keep the rest verbatim (an upsert's batch lands as an
+added segment in the same commit); ``compact``/``rewrite_zorder``
+replace the whole segment list. Manifest commits are atomic
+link+rename. Writes are single-writer per table, like the reference's
+``data_update_mutex_`` (table_segment_mvp.cpp:456); readers always see
+a complete manifest → snapshot isolation, strictly better than the
+reference's racy lock-free reads (SURVEY.md §3.3).
 
 Every row carries ``_row_id`` — the insertion-order cursor (reference
 table_segment_mvp.cpp:487) — which drives pagination order, KNN
@@ -50,6 +55,7 @@ from vectordb_spark.expr.compile import (
     to_spark_column,
 )
 from vectordb_spark.expr.parser import parse_filter
+from vectordb_spark.expr.prune import range_bounds, segment_overlaps, tighten
 from vectordb_spark.operators.pq import (
     RESIDUAL_CONVENTION as _PQ_RESIDUAL_CONVENTION,
 )
@@ -251,16 +257,6 @@ class Table:
             return self._load_meta().get("partition_by")
         return None
 
-    def _write_segment(self, df: DataFrame, name: str) -> None:
-        if self.partition_by == "_cluster" and "_cluster" not in df.columns:
-            # clustered layout (compact(cluster_by=...)): appended
-            # segments self-assign from the persisted centroids
-            df = self._assign_cluster(df)
-        writer = df.write.mode("overwrite")
-        if self.partition_by:
-            writer = writer.partitionBy(self.partition_by)
-        writer.parquet(os.path.join(self.path, name))
-
     def _save_meta(self, meta: dict) -> None:
         """Manifest commit as a TRUE compare-and-swap. The flock writer
         lock serializes writers on one host, but flock is
@@ -420,24 +416,9 @@ class Table:
         ast = parse_filter(filter, self.field_map())
         files = list(meta["files"])
         stats = meta.get("segment_stats") or {}
-        from vectordb_spark.expr.prune import range_bounds, segment_overlaps
-
         bounds = range_bounds(ast)
-        from vectordb_spark.expr.prune import _same_kind
-
         for col, (lo, hi) in (extra_bounds or {}).items():
-            cur_lo, cur_hi = bounds.get(col, (None, None))
-            if lo is not None and (
-                cur_lo is None
-                or (_same_kind(lo, cur_lo) and lo > cur_lo)
-            ):
-                cur_lo = lo
-            if hi is not None and (
-                cur_hi is None
-                or (_same_kind(hi, cur_hi) and hi < cur_hi)
-            ):
-                cur_hi = hi
-            bounds[col] = (cur_lo, cur_hi)
+            tighten(bounds, col, lo, hi)
         if bounds and stats:
             files = [f for f in files if segment_overlaps(stats.get(f), bounds)]
         df = self._df_for_files(files)
@@ -538,29 +519,8 @@ class Table:
         pk = pk_field.name
         cols = [f.name for f in self.schema.fields]
         old_set, new_set = set(files[v_from]), set(files[v_to])
-
-        def _read(paths: set[str]) -> DataFrame:
-            if not paths:
-                return self.spark.createDataFrame(
-                    [], self.schema.to_spark_schema(with_row_id=True)
-                ).select(*cols)
-            full = [os.path.join(self.path, p) for p in sorted(paths)]
-            if self.partition_by and len(full) > 1:
-                from functools import reduce
-
-                return reduce(
-                    lambda a, b: a.unionByName(b),
-                    (
-                        self._restore_partition_type(self._read_segments(q))
-                        for q in full
-                    ),
-                ).select(*cols)
-            return self._restore_partition_type(
-                self._read_segments(*full)
-            ).select(*cols)
-
-        old = _read(old_set - new_set).alias("o")
-        new = _read(new_set - old_set).alias("n")
+        old = self._df_for_files(sorted(old_set - new_set)).select(*cols).alias("o")
+        new = self._df_for_files(sorted(new_set - old_set)).select(*cols).alias("n")
         j = old.join(new, F.col(f"o.{pk}") == F.col(f"n.{pk}"), "full_outer")
         o_struct = F.struct(*[F.col(f"o.{c}") for c in cols])
         n_struct = F.struct(*[F.col(f"n.{c}") for c in cols])
@@ -610,6 +570,23 @@ class Table:
 
     # --------------------------------------------------------------- insert
 
+    def _pk_list_bounds(self, keys) -> dict[str, tuple]:
+        """Segment-pruning bounds ``{pk: (lo, hi)}`` of a primary-key
+        value list: floats for an integer PK, exact strings for a
+        string PK (the manifest records exact string-PK stats, r12).
+        Empty — prune nothing — when the list is empty or holds values
+        of another type."""
+        pk = self.schema.primary_key
+        if keys and pk.field_type.is_int and all(
+            isinstance(k, int) and not isinstance(k, bool) for k in keys
+        ):
+            return {pk.name: (float(min(keys)), float(max(keys)))}
+        if keys and pk.field_type.is_string and all(
+            isinstance(k, str) for k in keys
+        ):
+            return {pk.name: (min(keys), max(keys))}
+        return {}
+
     @_writer_locked
     def insert(self, records: list[dict], *, upsert: bool = False) -> dict:
         """Batch JSON insert (reference S1, web_controller.hpp:436-507 →
@@ -655,30 +632,17 @@ class Table:
 
         # PKs already in the table
         existing_pks: set = set()
+        pk_bounds: dict = {}
         if pk_field is not None and seen_pks:
             pks = list(seen_pks)
             # same range-pruned conflict check as insert_df (r11):
             # integer- and (r12) string-PK point inserts read only the
             # segments whose manifest min/max overlaps the batch's key
             # range
-            if pk_field.field_type.is_int and all(
-                isinstance(k, int) and not isinstance(k, bool) for k in pks
-            ):
-                snapshot = self.scan_df(
-                    extra_bounds={
-                        pk_field.name: (float(min(pks)), float(max(pks)))
-                    }
-                )
-            elif pk_field.field_type.is_string and all(
-                isinstance(k, str) for k in pks
-            ):
-                snapshot = self.scan_df(
-                    extra_bounds={pk_field.name: (min(pks), max(pks))}
-                )
-            else:
-                snapshot = self.df()
+            pk_bounds = self._pk_list_bounds(pks)
             existing = (
-                snapshot.where(F.col(pk_field.name).isin(pks))
+                self.scan_df(extra_bounds=pk_bounds)
+                .where(F.col(pk_field.name).isin(pks))
                 .select(pk_field.name)
                 .collect()
             )
@@ -701,22 +665,14 @@ class Table:
             # already in hand, so the size and range hints cost zero
             # extra Spark jobs.
             self._bump_mutation_seq(meta)
-            vals = list(seen_pks)
-            pk_rng = None
-            if vals and (
-                all(
-                    isinstance(k, int) and not isinstance(k, bool)
-                    for k in vals
-                )
-                or all(isinstance(k, str) for k in vals)
-            ):
-                pk_rng = (min(vals), max(vals))
             self._cow_upsert(
-                new_df, meta, pk_field, next_row_id,
-                batch_rows=len(rows), pk_range=pk_rng,
+                new_df, meta, next_row_id,
+                batch_rows=len(rows), bounds=pk_bounds,
             )
         else:
-            self._append(new_df, meta, next_row_id)
+            name = f"add_{meta['version'] + 1}"
+            added = {name: self._write_segment_observed(new_df, name)}
+            self._commit(meta, meta["files"], added, next_row_id)
         return {"inserted": len(rows), "skipped": skipped}
 
     @_writer_locked
@@ -732,13 +688,11 @@ class Table:
         # ingest (the row path always stored float32, via
         # createDataFrame over the declared schema): without this a
         # double-element batch landed as a DOUBLE-typed segment next
-        # to FLOAT-typed siblings — masked while upserts consolidated
-        # everything into one rewritten base, fatal once COW keeps
-        # heterogeneous segments live side by side (Parquet readers
-        # refuse mixed element types). Scalar and sparse columns keep
-        # their longstanding pass-through behavior (several gates
-        # deliberately feed int data under a STRING declaration and
-        # read back what they stored).
+        # to FLOAT-typed siblings, and Parquet readers refuse mixed
+        # element types across live segments. Scalar and sparse
+        # columns keep their longstanding pass-through behavior
+        # (several gates deliberately feed int data under a STRING
+        # declaration and read back what they stored).
         dense = {
             f.name for f in self.schema.fields if f.field_type.is_dense_vector
         }
@@ -766,22 +720,21 @@ class Table:
         # post-dedup range — dedup only drops duplicate keys — so the
         # conflict-check pruning bounds below cost zero extra jobs
         pk_field = self.schema.primary_key
-        range_pk = pk_field is not None and (
-            pk_field.field_type.is_int or pk_field.field_type.is_string
-        )
         sel = [pid.alias("_pid")]
         pagg = [F.count(F.lit(1)).alias("c")]
-        if range_pk:
+        if pk_field is not None:
             sel.append(F.col(pk_field.name).alias("_pkv"))
             pagg += [F.min("_pkv").alias("_lo"), F.max("_pkv").alias("_hi")]
         prows = new_df.select(*sel).groupBy("_pid").agg(*pagg).collect()
         pcounts = sorted((int(r["_pid"]), int(r["c"])) for r in prows)
-        pk_lo = pk_hi = None
-        if range_pk:
+        # None when the batch holds no non-NULL key: nothing can
+        # conflict, since a NULL key never matches the anti-join
+        pk_bounds = None
+        if pk_field is not None:
             los = [r["_lo"] for r in prows if r["_lo"] is not None]
             his = [r["_hi"] for r in prows if r["_hi"] is not None]
             if los:
-                pk_lo, pk_hi = min(los), max(his)
+                pk_bounds = self._pk_list_bounds([min(los), max(his)])
         offsets, acc = [], 0
         for p, c in pcounts:
             offsets.append((p, acc))
@@ -823,9 +776,8 @@ class Table:
                 # pre-dedup total is a safe SUPERSET for the broadcast
                 # size gate, and the PK range survives dedup verbatim
                 n = self._cow_upsert(
-                    inserted_df, meta, pk_field, start + total,
-                    batch_rows=total,
-                    pk_range=(pk_lo, pk_hi) if range_pk else None,
+                    inserted_df, meta, start + total,
+                    batch_rows=total, bounds=pk_bounds,
                 )
                 return {"inserted": n, "skipped": 0}
             # PK-conflict check against a RANGE-PRUNED snapshot, not
@@ -839,24 +791,14 @@ class Table:
             # range AND inside its segment's [min, max], so that
             # segment always survives pruning; missing stats keep the
             # segment (scan_df's conservative rule). String PKs prune
-            # on the exact manifest string stats (r12); other PK types
-            # fall back to the full PK-column scan.
-            if range_pk:
-                # bounds came free with the partition-counts action
-                if pk_lo is None:
-                    existing = self.df().select(pk_field.name).limit(0)
-                elif pk_field.field_type.is_string:
-                    existing = self.scan_df(
-                        extra_bounds={pk_field.name: (pk_lo, pk_hi)}
-                    ).select(pk_field.name)
-                else:
-                    existing = self.scan_df(
-                        extra_bounds={
-                            pk_field.name: (float(pk_lo), float(pk_hi))
-                        }
-                    ).select(pk_field.name)
+            # on the exact manifest string stats (r12). The bounds came
+            # free with the partition-counts action.
+            if pk_bounds is None:
+                existing = self.df().select(pk_field.name).limit(0)
             else:
-                existing = self.df().select(pk_field.name)
+                existing = self.scan_df(extra_bounds=pk_bounds).select(
+                    pk_field.name
+                )
             inserted_df = inserted_df.join(existing, pk_field.name, "left_anti")
         for fld in self.schema.fields:
             if fld.is_index_field:
@@ -864,7 +806,9 @@ class Table:
         inserted_df = self._apply_ingest_transforms(inserted_df)
         # the write's own Observation counts the inserted rows — no
         # separate count action re-running the dedup + anti-join (r12)
-        n = self._append(inserted_df, meta, start + total)
+        name = f"add_{meta['version'] + 1}"
+        st, n = self._write_segment_observed(inserted_df, name)
+        self._commit(meta, meta["files"], {name: (st, n)}, start + total)
         return {"inserted": n, "skipped": 0}
 
     def _embed_index_field(self, df: DataFrame, fld: FieldSchema) -> DataFrame:
@@ -945,20 +889,15 @@ class Table:
 
     def _count(self, meta: dict) -> int:
         """Live row count. Maintained transactionally in the manifest
-        (every commit records the delta from parquet footer metadata),
-        so capacity checks / statistics are O(1), not an O(table) scan
-        per insert. Falls back to a real count for pre-row_count
-        manifests."""
+        (every ``_commit`` records the delta from the written segments'
+        row counts), so capacity checks / statistics are O(1), not an
+        O(table) scan per insert. Falls back to a real count for
+        pre-row_count manifests."""
         if meta.get("row_count") is not None:
             return int(meta["row_count"])
         if not meta["files"]:
             return 0
         return self.df().count()
-
-    def _record_history(self, meta: dict) -> None:
-        meta.setdefault("history", []).append(
-            {"version": meta["version"], "files": list(meta["files"])}
-        )
 
     def _dir_count(self, name: str) -> int:
         """Row count of a just-written segment dir — parquet footer
@@ -966,20 +905,10 @@ class Table:
         never a data scan."""
         return int(self.spark.read.parquet(os.path.join(self.path, name)).count())
 
-    def _segment_stats(self, name: str) -> dict[str, list]:
-        """Per-segment min/max of the INTEGER fields, from parquet
-        FOOTER metadata (spark.sql.parquet.aggregatePushdown — no data
-        scan), recorded in the manifest for driver-side segment
-        skipping (expr/prune.py). Integer-only on purpose: int footer
-        stats are exact, while float stats are unreliable under NaN and
-        string stats truncate."""
-        return self._segment_stats_count(name)[0]
-
     # string-PK stats above this length are not recorded (manifest
     # bloat guard); the segment then simply never prunes on the PK
     # (mutations rewrite it like any other candidate — bytes written
-    # are still bounded by candidate kept-rows, same as the legacy
-    # consolidation's whole-base write)
+    # are still bounded by the candidate's kept rows)
     STRING_STAT_MAX_LEN = 256
 
     def _string_stat_pk(self, columns) -> str | None:
@@ -1001,9 +930,10 @@ class Table:
 
     def _stat_agg_exprs(self, columns) -> tuple[list[str], str | None, list]:
         """(int stat columns, string-PK column, aggregate expressions)
-        for the per-segment stats contract — shared by the footer
-        read-back, the COW staging batch pass, and the observed-write
-        path so the three can never drift."""
+        for the per-segment stats contract — shared by the COW staging
+        batch pass and the observed segment write so the two can never
+        drift. Integer-only (plus the exact string PK) on purpose:
+        float min/max is unreliable under NaN."""
         cols = [
             f.name
             for f in self.schema.fields
@@ -1039,35 +969,20 @@ class Table:
             stats[spk] = [row["_slo"], row["_shi"]]
         return stats
 
-    def _segment_stats_count(self, name: str) -> tuple[dict[str, list], int]:
-        """Pruning stats AND row count of an already-written segment in
-        ONE aggregate (r12: the commit path used to run a count job
-        plus a stats job per new segment — two of the fixed per-commit
-        jobs behind the measured ~0.45 commits/s floor). Integer
-        min/max and the count come from parquet FOOTER metadata
-        (aggregatePushdown); when the table has a STRING primary key
-        its exact min/max joins the same aggregate, which then runs as
-        a column-pruned scan instead (string footer stats truncate, so
-        pushdown is off the table for them by design). Fresh writes
-        avoid even this job — see _write_segment_observed."""
-        self.spark.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-        df = self.spark.read.parquet(os.path.join(self.path, name))
-        cols, spk, aggs = self._stat_agg_exprs(df.columns)
-        row = df.agg(*aggs).first()
-        return self._stats_from_row(row, cols, spk), int(row["_n"])
-
     def _write_segment_observed(
         self, df: DataFrame, name: str
     ) -> tuple[dict[str, list], int]:
-        """``_write_segment`` with the pruning stats and row count
-        captured DURING the write action (Observation metrics ride the
-        write job and are exact for successful queries), so a commit
-        pays ONE Spark job for write+stats instead of a write job plus
-        a read-back aggregate — another slice of the fixed per-commit
-        floor (r12)."""
+        """Write ``df`` as segment dir ``name`` and return its pruning
+        stats and row count, captured DURING the write action
+        (Observation metrics ride the write job and are exact for
+        successful queries): ONE Spark job per segment for write+stats,
+        no read-back aggregate (r12). Every segment the table writes
+        outside the COW staging pass goes through here."""
         from pyspark.sql import Observation
 
         if self.partition_by == "_cluster" and "_cluster" not in df.columns:
+            # clustered layout (compact(cluster_by=...)): appended
+            # segments self-assign from the persisted centroids
             df = self._assign_cluster(df)
         cols, spk, aggs = self._stat_agg_exprs(df.columns)
         # unnamed Observation -> UUID name: two tables writing
@@ -1081,48 +996,54 @@ class Table:
         m = obs.get
         return self._stats_from_row(m, cols, spk), int(m["_n"])
 
-    def _append(self, new_df: DataFrame, meta: dict, next_row_id: int) -> int:
-        """Append commit; returns the number of rows written (from the
-        write job's own Observation — callers must not run a separate
-        count action over the ingest pipeline)."""
-        before = self._count(meta)  # resolve before files change (legacy fallback)
-        self._record_history(meta)
-        version = meta["version"] + 1
-        name = f"add_{version}"
-        st, n = self._write_segment_observed(new_df, name)
-        meta["files"].append(name)
-        meta["version"] = version
-        meta["next_row_id"] = next_row_id
-        meta["row_count"] = before + self._register_segment_meta(
-            meta, name, stats=st, rows=n
+    def _commit(
+        self,
+        meta: dict,
+        keep: list[str],
+        added: dict[str, tuple[dict, int]],
+        next_row_id: int,
+    ) -> None:
+        """THE data commit: insert, upsert, delete, compact and
+        ``rewrite_zorder`` write their new segments first and then land
+        here, so every mutation is exactly one new manifest version
+        (Delta Lake's one-commit-per-DML rule). The new segment list is
+        ``keep`` (live segments retained verbatim) followed by
+        ``added`` ({name: (pruning stats, row count)} of the segments
+        just written). The outgoing version joins the time-travel
+        history; each added segment's stats, row count and byte size
+        are registered in the manifest caches — the one place they are
+        populated, so later mutations never re-list or re-count a
+        directory; ``row_count`` moves by the dropped and added
+        segments' cached rows, with no Spark job."""
+        # resolved before files change (a pre-row_count manifest counts
+        # the current snapshot); a full replacement needs no baseline
+        before = self._count(meta) if keep else 0
+        rows = meta.setdefault("segment_rows", {})
+        dropped = set(meta["files"]) - set(keep)
+        removed = sum(int(rows[f]) for f in dropped) if keep else 0
+        meta.setdefault("history", []).append(
+            {"version": meta["version"], "files": list(meta["files"])}
         )
+        for name, (stats, n) in added.items():
+            meta.setdefault("segment_stats", {})[name] = stats
+            rows[name] = int(n)
+            meta.setdefault("segment_bytes", {})[name] = self._walk_bytes(name)
+        meta["files"] = list(keep) + list(added)
+        meta["version"] += 1
+        meta["next_row_id"] = next_row_id
+        meta["row_count"] = before - removed + sum(n for _s, n in added.values())
         meta["index_sources"] = self.index_sources
         self._save_meta(meta)
-        return n
 
     @staticmethod
     def _bump_mutation_seq(meta: dict) -> None:
-        """Count row-REMOVING commits (delete, upsert consolidation).
+        """Count row-REMOVING commits (delete, upsert).
         Indexes stamp the seq at build time; a search whose manifest
         seq still matches KNOWS the index holds no dead ids and skips
         the dead-id semi-join — the common no-deletes case pays zero
         extra base scans. Appends and compaction (row-preserving)
         leave the seq alone."""
         meta["mutation_seq"] = int(meta.get("mutation_seq", 0)) + 1
-
-    def _write_base(self, df: DataFrame, meta: dict, next_row_id: int) -> None:
-        self._record_history(meta)
-        version = meta["version"] + 1
-        name = f"base_{version}"
-        st, n = self._write_segment_observed(df, name)
-        meta["files"] = [name]
-        meta["version"] = version
-        meta["next_row_id"] = next_row_id
-        meta["row_count"] = self._register_segment_meta(
-            meta, name, stats=st, rows=n
-        )
-        meta["index_sources"] = self.index_sources
-        self._save_meta(meta)
 
     # -------------------------------------------------------- maintenance
 
@@ -1138,8 +1059,8 @@ class Table:
         rounds: int = 2,
     ) -> dict:
         """Rewrite the current segment list into ONE base segment (a
-        new manifest version). Every ``_append`` (point insert,
-        streaming micro-batch) adds a parquet dir, so ingest-heavy
+        new manifest version). Every insert (point insert, streaming
+        micro-batch) adds a parquet dir, so ingest-heavy
         tables accrue small files — the classic read-amplification
         problem; compaction is the maintenance job that bounds it
         (reference X3's rebuild discipline applied to storage). Old
@@ -1207,7 +1128,9 @@ class Table:
             meta["partition_by"] = self.partition_by = "_cluster"
         if target_partitions:
             df = df.coalesce(max(1, int(target_partitions)))
-        self._write_base(df, meta, meta["next_row_id"])
+        name = f"base_{meta['version'] + 1}"
+        added = {name: self._write_segment_observed(df, name)}
+        self._commit(meta, [], added, meta["next_row_id"])
         return {"segmentsBefore": n_before, "segmentsAfter": 1}
 
     @_writer_locked
@@ -1223,7 +1146,7 @@ class Table:
         the live rows out z-sorted and cut them into ``segments`` base
         segment dirs. Because z-contiguous runs are tight in BOTH
         source columns, the ordinary per-segment integer min/max stats
-        (``_segment_stats``) then prune a two-column rectangle filter
+        recorded at write time then prune a two-column rectangle filter
         driver-side — no z column is stored, no query-side change: any
         existing ``scan_df("a >= .. AND b <= ..")`` benefits. This
         breaks the one-sort-order limitation (a partkey-sorted layout
@@ -1233,9 +1156,12 @@ class Table:
         Scale shape: boundaries come from a sampled quantile sketch
         (approxQuantile — layout quality, not correctness, depends on
         them), the source snapshot is checkpointed ONCE, and each
-        segment write is a filter over it; on a cluster the same layout
-        is one repartitionByRange write. Old versions stay readable
-        (time travel) until vacuum; readers never block."""
+        segment is one write job filtering it (z-ranges that come out
+        empty are dropped); on a cluster the same layout is one
+        repartitionByRange write. Old versions stay readable (time
+        travel) until vacuum; readers never block."""
+        import shutil
+
         from vectordb_spark.operators.zorder import z_value_sql
 
         a, b = columns
@@ -1256,10 +1182,8 @@ class Table:
         n_seg = max(1, int(segments))
         qs = [i / n_seg for i in range(1, n_seg)]
         bounds = zdf.stat.approxQuantile("_z", qs, 0.001) if qs else []
-        self._record_history(meta)
         version = meta["version"] + 1
-        names: list[str] = []
-        total = 0
+        added: dict[str, tuple[dict, int]] = {}
         for i in range(n_seg):
             lo = bounds[i - 1] if i > 0 else None
             hi = bounds[i] if i < n_seg - 1 else None
@@ -1270,23 +1194,14 @@ class Table:
                 part = part.where(F.col("_z") <= hi)
             part = part.sortWithinPartitions("_z").drop("_z")
             name = f"zrw_{version}_{i}"
-            cnt_df = part.localCheckpoint()  # freeze before the dir write
-            n = cnt_df.count()
+            st, n = self._write_segment_observed(part, name)
             if n == 0:
-                continue  # duplicate-heavy boundary collapsed a bucket
-            self._write_segment(cnt_df, name)
-            names.append(name)
-            total += n
-        meta["files"] = names
-        meta["version"] = version
-        meta["row_count"] = total
-        zst = {n: self._segment_stats_count(n) for n in names}
-        meta["segment_stats"] = {n: s for n, (s, _c) in zst.items()}
-        meta["segment_rows"] = {n: c for n, (_s, c) in zst.items()}
-        meta["segment_bytes"] = {n: self._walk_bytes(n) for n in names}
-        meta["index_sources"] = self.index_sources
-        self._save_meta(meta)
-        return {"segmentsBefore": n_before, "segmentsAfter": len(names)}
+                # duplicate-heavy boundary collapsed a bucket
+                shutil.rmtree(os.path.join(self.path, name))
+                continue
+            added[name] = (st, n)
+        self._commit(meta, [], added, meta["next_row_id"])
+        return {"segmentsBefore": n_before, "segmentsAfter": len(added)}
 
     def _cluster_layout_index(self, meta: dict | None = None):
         """Reconstruct the coarse quantizer from the manifest's
@@ -1395,53 +1310,14 @@ class Table:
         if ast is not None:
             cond = cond & to_spark_column(ast)
         meta = self._load_meta()
-        # segment pruning bounds for the COW path: the filter's
-        # conjunctive ranges plus the PK list's min/max (integer PKs)
-        from vectordb_spark.expr.prune import range_bounds
-
+        # segment pruning bounds for the COW rewrite: the filter's
+        # conjunctive ranges plus the PK list's min/max
         bounds = range_bounds(ast)
         if primary_keys:
-            pk_field = self.schema.primary_key
-            lo = hi = None
-            if pk_field.field_type.is_int and all(
-                isinstance(k, int) and not isinstance(k, bool)
-                for k in primary_keys
-            ):
-                lo, hi = float(min(primary_keys)), float(max(primary_keys))
-            elif pk_field.field_type.is_string and all(
-                isinstance(k, str) for k in primary_keys
-            ):
-                # exact string-PK stats are manifest-recorded (r12),
-                # so string key lists prune segments too
-                lo, hi = min(primary_keys), max(primary_keys)
-            if lo is not None:
-                from vectordb_spark.expr.prune import _same_kind
-
-                cur = bounds.get(pk_field.name, (None, None))
-                bounds[pk_field.name] = (
-                    lo
-                    if (cur[0] is None or not _same_kind(lo, cur[0]))
-                    else max(lo, cur[0]),
-                    hi
-                    if (cur[1] is None or not _same_kind(hi, cur[1]))
-                    else min(hi, cur[1]),
-                )
+            for col, (lo, hi) in self._pk_list_bounds(primary_keys).items():
+                tighten(bounds, col, lo, hi)
         self._bump_mutation_seq(meta)
         return {"deleted": self._cow_delete(cond, meta, bounds)}
-
-    # r12: mutations never consolidate (the r11 ≥COW_REWRITE_FRACTION
-    # crossover is GONE — the streaming key-overlap rehearsal showed it
-    # degenerate: with overlap keys in every micro-batch it collapsed
-    # the base to ONE segment on batch 2 and then re-consolidated
-    # O(table) bytes every batch forever, because a 1-segment base can
-    # never satisfy candidates < fraction again). When candidates span
-    # the whole base, the COW rewrite writes the SAME bytes as the
-    # consolidation would but PRESERVES the per-segment range
-    # structure, so the next local mutation prunes again — the Delta
-    # Lake discipline: DML rewrites matched files, OPTIMIZE/compact()
-    # defragments. ``COW_DISABLED`` opts a table back into the
-    # consolidating legacy path (A/B harnesses, pathological tables).
-    COW_DISABLED = False
 
     def _walk_bytes(self, name: str) -> int:
         total = 0
@@ -1452,42 +1328,6 @@ class Table:
                 except OSError:
                     pass
         return total
-
-    def _dir_bytes(self, name: str, meta: dict | None = None) -> int:
-        """Segment byte size — manifest-cached (``segment_bytes``,
-        recorded once at segment-write time) with a directory-walk
-        fallback for manifests written before the cache existed. On
-        object storage a per-mutation walk is a per-commit LIST storm
-        (VERDICT r11 "what's wrong" #4); with the cache, every
-        mutation-path crossover decision reads the manifest only."""
-        if meta is not None:
-            b = (meta.get("segment_bytes") or {}).get(name)
-            if b is not None:
-                return int(b)
-        return self._walk_bytes(name)
-
-    def _register_segment_meta(
-        self,
-        meta: dict,
-        name: str,
-        *,
-        stats: dict | None = None,
-        rows: int | None = None,
-    ) -> int:
-        """Record a just-written segment's pruning stats, ROW COUNT and
-        byte size in the manifest — the one place all three caches are
-        populated, so later mutations and matview crossover checks
-        never re-list or re-count the directory. ``stats``/``rows``
-        short-circuit the footer job when the caller already computed
-        them (the COW staging batch pass). Returns the row count."""
-        if stats is None or rows is None:
-            s, n = self._segment_stats_count(name)
-            stats = s if stats is None else stats
-            rows = n if rows is None else rows
-        meta.setdefault("segment_stats", {})[name] = stats
-        meta.setdefault("segment_rows", {})[name] = int(rows)
-        meta.setdefault("segment_bytes", {})[name] = self._walk_bytes(name)
-        return int(rows)
 
     # partition-column tag carrying each kept row's source segment
     # through the single COW rewrite job. The tag value is the PARENT
@@ -1506,8 +1346,8 @@ class Table:
     ) -> tuple[dict[str, dict], dict[str, int]]:
         """Per-SOURCE-segment pruning stats and row counts for every
         rewritten segment from ONE column-pruned scan of the staging
-        root (int columns only — the _segment_stats contract), instead
-        of a footer job per new dir."""
+        root (the ``_stat_agg_exprs`` contract), instead of a job per
+        new dir."""
         from pyspark.sql.types import IntegerType, StringType, StructField
 
         tag = self._COW_TAG
@@ -1535,36 +1375,50 @@ class Table:
             stats[src] = self._stats_from_row(row, cols, spk)
         return stats, counts
 
+    # Mutations never consolidate, even when every segment is a
+    # candidate: consolidating on key overlap degenerates — with overlap
+    # keys in every streaming micro-batch it collapses the base to ONE
+    # segment and then rewrites O(table) bytes every batch forever,
+    # since a one-segment base always overlaps. The COW rewrite writes
+    # at most those bytes once and keeps the per-segment range
+    # structure, so the next local mutation prunes again — the Delta
+    # Lake discipline: DML rewrites matched files, compact() defragments.
+
     def _cow_rewrite(
-        self,
-        meta: dict,
-        candidates: list[str],
-        keep_fn,
-        version: int,
-        rows_map: dict[str, int],
-    ) -> tuple[list[str], dict[str, int]]:
-        """The COW mutation's ONE data pass (VERDICT r11 "what's
-        wrong" #1/#2: the old shape scanned candidates once to count
-        matches, then ran a serial Spark write job — plus a footer
-        count and a footer stats job — per matched segment; a
-        scattered-key upsert over a 10k-segment base meant thousands
-        of sequential jobs). Now: kept rows of EVERY candidate segment
-        are tagged with their source segment and written once via
-        ``partitionBy(_cow_src)`` — no shuffle, each scan task holds
-        one source segment's rows — and per-source stats + kept-row
-        counts come from one column-pruned scan of the staging root.
-        Match counts are DERIVED: manifest ``segment_rows`` minus kept
-        rows, so the pre-write count pass is gone entirely. Staging
-        dirs of candidates with zero matches are discarded (their
-        original dirs are retained verbatim in the manifest — the
-        false-positive cost is bounded by how loose the range pruning
-        is, and NEVER exceeds what the legacy whole-base consolidation
-        would write, since candidates ⊆ base); genuinely matched ones
-        are renamed into final ``cow_`` dirs and registered. Returns
-        (new segment names, matched row counts per source segment)."""
+        self, meta: dict, bounds: dict | None, keep_fn
+    ) -> tuple[list[str], dict[str, tuple[dict, int]], int]:
+        """The one data pass of a delete or upsert over the segments
+        whose manifest min/max overlaps ``bounds`` (a segment without
+        stats is always a candidate; ``bounds=None`` means no row can
+        match, so there are none). ``keep_fn`` selects the surviving
+        rows of EVERY candidate, tagged with their source segment and
+        written once via ``partitionBy(_cow_src)`` — no shuffle, each
+        scan task holds one source segment's rows — and per-source
+        stats + kept-row counts come from one column-pruned scan of
+        the staging root: a constant job count however many segments
+        match (VERDICT r11 #1/#2). Match counts are DERIVED (manifest
+        ``segment_rows`` minus kept rows), so there is no count pass.
+        Candidates with zero matches keep their original dirs verbatim
+        (their staging is discarded — the false-positive cost is
+        bounded by how loose the range pruning is); matched ones are
+        renamed into final ``cow_`` dirs, and a segment whose every
+        row matched drops out. Returns (segments kept verbatim, the
+        rewritten segments in ``_commit``'s ``added`` form, rows
+        removed)."""
         import shutil
         from urllib.parse import unquote
 
+        files = list(meta["files"])
+        stats = meta.get("segment_stats") or {}
+        candidates = (
+            []
+            if bounds is None
+            else [f for f in files if segment_overlaps(stats.get(f), bounds)]
+        )
+        if not candidates:
+            return files, {}, 0
+        rows_map = self._candidate_rows(meta, candidates)
+        version = meta["version"] + 1
         tag = self._COW_TAG
         if self.partition_by:
             # hive-partitioned segment roots can't multi-path read
@@ -1607,7 +1461,7 @@ class Table:
                         f"segment {src!r}",
                     )
                 by_src[src] = os.path.join(staging, d)
-            stats, kept_counts = (
+            kept_stats, kept_counts = (
                 self._staging_stats(staging) if by_src else ({}, {})
             )
             matched: dict[str, int] = {}
@@ -1621,19 +1475,15 @@ class Table:
                     )
                 if m > 0:
                     matched[f] = m
-            new_names: list[str] = []
+            added: dict[str, tuple[dict, int]] = {}
             for i, f in enumerate(f for f in candidates if f in matched):
                 if f not in by_src:
                     continue  # every row of f was dropped: segment dies
                 name = f"cow_{version}_{i}"
                 os.rename(by_src[f], os.path.join(self.path, name))
-                new_names.append(name)
-                self._register_segment_meta(
-                    meta, name,
-                    stats=stats.get(f, {}),
-                    rows=kept_counts.get(f, 0),
-                )
-            return new_names, matched
+                added[name] = (kept_stats.get(f, {}), kept_counts.get(f, 0))
+            keep = [f for f in files if f not in matched]
+            return keep, added, sum(matched.values())
         finally:
             shutil.rmtree(staging, ignore_errors=True)
 
@@ -1682,176 +1532,59 @@ class Table:
             rows_map.setdefault(f, 0)
         return rows_map
 
-    # COW upsert gives up (legacy consolidating rewrite) above this
-    # batch size: the batch-key side is force-broadcast into every
-    # rewritten segment's anti-join, so it must stay broadcast-sized.
+    # the upsert's batch-key side is broadcast into the candidates'
+    # anti-join up to this many batch rows; larger batches join unhinted
     COW_UPSERT_MAX_BATCH = 1_000_000
 
     def _cow_upsert(
         self,
         batch_df: DataFrame,
         meta: dict,
-        pk_field,
         next_row_id: int,
         *,
-        batch_rows: int | None = None,
-        pk_range: tuple | None = None,
+        batch_rows: int,
+        bounds: dict | None,
     ) -> int:
-        """Segment-granular copy-on-write upsert (r11, one-pass r12):
-        the legacy path rewrote the ENTIRE live base (anti-join ∪
-        batch) on every upsert commit — O(table) per commit. Now the
-        batch's PK range prunes candidate segments via manifest stats,
-        ONE broadcast-anti-join scan of the candidates writes every
-        surviving row (``_cow_rewrite``: single partitionBy job, match
-        counts derived from manifest ``segment_rows``), only
-        CONFLICTING segments are replaced (surviving rows keep their
-        _row_id), and the batch lands as a normal add segment — all in
-        ONE atomic manifest version, so readers, time travel, and
-        ``changes()`` see exactly the same logical diff as the
-        consolidating path (updated PKs pair into update pre/post
-        images across the rewritten and added dirs). Falls back to the
-        legacy rewrite only when the PK is neither integer nor string,
-        stats are missing, the batch exceeds broadcast size, or
-        ``COW_DISABLED`` is set — never by a bytes crossover (see the
-        COW_DISABLED comment: consolidating on overlap degenerated the
-        streaming key-overlap pattern to O(table) per batch forever,
-        while COW at worst writes the same bytes once and keeps the
-        segment structure prunable)."""
-        pk = pk_field.name
+        """Segment-granular copy-on-write upsert: the batch's PK
+        ``bounds`` (None when the batch holds no non-NULL key, which
+        never matches the anti-join) pick the candidate segments, ONE
+        anti-join scan drops the replaced keys from them
+        (``_cow_rewrite``; surviving rows keep their _row_id), and the
+        batch lands as an ``add_`` segment in the SAME commit — so
+        readers, time travel and ``changes()`` see one logical diff
+        (updated PKs pair into update pre/post images across the
+        rewritten and added dirs). ``batch_rows``, an upper bound on
+        the batch size that the callers already hold, decides the
+        broadcast hint. Returns the number of rows added."""
+        pk = self.schema.primary_key.name
         batch_df = batch_df.localCheckpoint()
-        # both hints ride actions the callers already ran (the ingest
-        # partition-counts job / the row-path key list), so the common
-        # path adds NO count or min/max job here (r12)
-        n = batch_rows if batch_rows is not None else batch_df.count()
-        before = self._count(meta)
-        files = list(meta["files"])
-        stats = meta.get("segment_stats") or {}
-
-        def _legacy() -> int:
-            base = self.df().join(
-                batch_df.select(pk), pk, "left_anti"
-            )
-            full = base.unionByName(batch_df)
-            self._write_base(full, meta, next_row_id)
-            # batch_df is already PK-deduped by every caller, so its
-            # count IS the inserted-rows figure (rare path: one job
-            # over the checkpointed batch)
-            return batch_df.count()
-
-        str_pk = pk_field.field_type.is_string
-        if (
-            not (pk_field.field_type.is_int or str_pk)
-            or n > self.COW_UPSERT_MAX_BATCH
-            or not files
-            or not any((stats.get(f) or {}).get(pk) for f in files)
-        ):
-            return _legacy()
-        if pk_range is not None:
-            lo, hi = pk_range
-        else:
-            rng = batch_df.agg(F.min(pk), F.max(pk)).first()
-            lo, hi = rng[0], rng[1]
-        if lo is None:
-            return _legacy()
-        bounds = {pk: ((lo, hi) if str_pk else (float(lo), float(hi)))}
-        from vectordb_spark.expr.prune import segment_overlaps
-
-        candidates = [
-            f for f in files if segment_overlaps(stats.get(f), bounds)
-        ]
-        if self.COW_DISABLED:
-            return _legacy()
-        rows_map = self._candidate_rows(meta, candidates)
-        self._record_history(meta)
-        version = meta["version"] + 1
-        new_names: list[str] = []
-        matched: dict[str, int] = {}
-        if candidates:
-            bkeys = F.broadcast(batch_df.select(pk))
-            new_names, matched = self._cow_rewrite(
-                meta,
-                candidates,
-                lambda t: t.join(bkeys, pk, "left_anti"),
-                version,
-                rows_map,
-            )
-        removed = sum(matched.values())
-        new_files = [f for f in files if f not in matched] + new_names
-        add_name = f"add_{version}"
-        add_st, add_n = self._write_segment_observed(batch_df, add_name)
-        new_files.append(add_name)
-        self._register_segment_meta(meta, add_name, stats=add_st, rows=add_n)
-        meta["files"] = new_files
-        meta["version"] = version
-        meta["next_row_id"] = next_row_id
-        meta["row_count"] = before - removed + add_n
-        meta["index_sources"] = self.index_sources
-        self._save_meta(meta)
-        return add_n
+        bkeys = batch_df.select(pk)
+        if batch_rows <= self.COW_UPSERT_MAX_BATCH:
+            bkeys = F.broadcast(bkeys)
+        keep, added, _removed = self._cow_rewrite(
+            meta, bounds, lambda t: t.join(bkeys, pk, "left_anti")
+        )
+        name = f"add_{meta['version'] + 1}"
+        st, n = self._write_segment_observed(batch_df, name)
+        added[name] = (st, n)
+        self._commit(meta, keep, added, next_row_id)
+        return n
 
     def _cow_delete(self, cond, meta: dict, bounds: dict) -> int:
-        """Segment-granular copy-on-write delete (r11, one-pass r12).
-        The legacy path rewrote the ENTIRE live base into one segment
-        on every delete — O(table) per commit, the write-path twin of
-        the matview full-rebuild problem. Now: (1) manifest min/max
+        """Segment-granular copy-on-write delete: manifest min/max
         stats prune the candidate segments driver-side (a delete whose
-        PK range or filter ranges miss a segment cannot touch it);
-        (2) ONE scan of the candidates writes every ``~cond`` survivor
-        tagged by source segment (``_cow_rewrite``); match counts are
-        DERIVED from manifest ``segment_rows`` minus staged survivors,
-        so candidates with zero matches are RETAINED as-is (same dirs
-        in the manifest) and there is no separate count pass;
-        (3) only matched segments are replaced (survivors preserve
-        their _row_id, so index delta dirs stay valid); (4) mutations
-        never consolidate (see the COW_DISABLED comment) — at worst
-        (candidates = whole base) the rewrite writes the same bytes a
-        consolidation would, once, and keeps the per-segment range
-        structure so the NEXT mutation prunes; ``compact()`` remains
-        the defragmenter. Changefeed semantics are unchanged:
+        PK range or filter ranges miss a segment cannot touch it), ONE
+        scan of the candidates writes every ``~cond`` survivor
+        (``_cow_rewrite``), and only matched segments are replaced —
+        survivors keep their _row_id, so index delta dirs stay valid.
         ``changes()`` diffs by PK with content-equality cancellation,
         so retained dirs prune at file level and surviving rows in
-        rewritten dirs cancel — only the deleted rows surface, exactly
-        as before (pinned in tests)."""
-        files = list(meta["files"])
-        stats = meta.get("segment_stats") or {}
-        before = self._count(meta)
-        candidates = files
-        if bounds and stats:
-            from vectordb_spark.expr.prune import segment_overlaps
-
-            candidates = [
-                f for f in files if segment_overlaps(stats.get(f), bounds)
-            ]
-
-        def _legacy() -> int:
-            kept = self.df().where(~F.coalesce(cond, F.lit(False)))
-            # the consolidation commit records the surviving count
-            # from parquet footers — no extra O(table) count actions
-            self._write_base(kept, meta, meta["next_row_id"])
-            return before - int(meta["row_count"])
-
-        if self.COW_DISABLED:
-            return _legacy()
-        rows_map = self._candidate_rows(meta, candidates)
-        self._record_history(meta)
-        version = meta["version"] + 1
-        new_names: list[str] = []
-        matched: dict[str, int] = {}
-        if candidates:
-            new_names, matched = self._cow_rewrite(
-                meta,
-                candidates,
-                lambda t: t.where(~F.coalesce(cond, F.lit(False))),
-                version,
-                rows_map,
-            )
-        removed = sum(matched.values())
-        new_files = [f for f in files if f not in matched] + new_names
-        meta["files"] = new_files
-        meta["version"] = version
-        meta["row_count"] = before - removed
-        meta["index_sources"] = self.index_sources
-        self._save_meta(meta)
+        rewritten dirs cancel: only the deleted rows surface. Returns
+        the number of rows deleted."""
+        keep, added, removed = self._cow_rewrite(
+            meta, bounds, lambda t: t.where(~F.coalesce(cond, F.lit(False)))
+        )
+        self._commit(meta, keep, added, meta["next_row_id"])
         return removed
 
     # ---------------------------------------------------------------- query
@@ -2522,7 +2255,7 @@ class Table:
         (PartitionFilters on ``_cluster`` — whole directories skipped
         at file-listing time), with no index dir and no candidate
         join-back. Segments appended since the clustered compact carry
-        write-time assignments (``_write_segment``), so there is no
+        write-time assignments (``_write_segment_observed``), so there is no
         unindexed tail to merge either. Falls back to exact search when
         the table has no cluster layout for the field, or when the
         stored separation statistics reject probing (same planner rule
