@@ -6,16 +6,19 @@ would — which holds iff the array ELEMENTS are never NULL.
 The test replays every query that uses the helper twice over an
 edge-case corpus (empty text, single token, token counts straddling
 each site's gram/chunk/fingerprint width) — once with the committed
-outer form, once with ``_PLAIN_MODE`` flipping the helper to the plain
-generator — and pins row-set equality. A future edit that makes any
+outer form, once with every call site's ``explode_nonnull`` patched to
+its ``plain=True`` form (the plain generator) — and pins row-set
+equality. A future edit that makes any
 site's element expression nullable fails here instead of silently
 dropping rows.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
+import sys
 import tempfile
 
 import pytest
@@ -81,18 +84,34 @@ QUERIES = [
 ]
 
 
+@pytest.fixture
+def plain_explode(monkeypatch):
+    """Returns a switch that rebinds ``explode_nonnull`` to its plain
+    form in every module that imported it, until the test ends."""
+
+    def switch():
+        plain = functools.partial(_explode.explode_nonnull, plain=True)
+        sites = [
+            mod
+            for name, mod in list(sys.modules.items())
+            if name.startswith("vectordb_spark.")
+            and getattr(mod, "explode_nonnull", None) is _explode.explode_nonnull
+        ]
+        assert sites, "no module calls explode_nonnull"
+        for mod in sites:
+            monkeypatch.setattr(mod, "explode_nonnull", plain)
+
+    return switch
+
+
 @pytest.mark.parametrize("name", QUERIES)
-def test_outer_form_matches_plain_explode(spark, edge_dir, name):
+def test_outer_form_matches_plain_explode(spark, edge_dir, plain_explode, name):
     from vectordb_spark.queries import all_queries
 
     fn = dict(all_queries())[name]
-    assert _explode._PLAIN_MODE is False
     outer = _rows(fn(spark, edge_dir))
-    _explode._PLAIN_MODE = True
-    try:
-        plain = _rows(fn(spark, edge_dir))
-    finally:
-        _explode._PLAIN_MODE = False
+    plain_explode()
+    plain = _rows(fn(spark, edge_dir))
     assert outer == plain, (
         f"{name}: outer+filter row set diverged from plain explode — "
         "an element expression became nullable (see _explode.py contract)"

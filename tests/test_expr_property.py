@@ -1,16 +1,24 @@
 """Property-based cross-engine equivalence: random filter expressions
 from the reference grammar must select identical row sets when compiled
-to a Catalyst Column and to DuckDB oracle SQL. This is the fuzzing arm
-of the dual-compilation design."""
+to a Catalyst Column, to DuckDB oracle SQL and — wherever it accepts
+the expression — to the serving tier's pyarrow.compute evaluation. This
+is the fuzzing arm of the multi-compilation design. The rows include
+NULLs, so three-valued logic is exercised on every engine."""
 
 from __future__ import annotations
 
 import duckdb
-import pandas as pd
+import pyarrow as pa
 import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 
-from vectordb_spark.expr import parse_filter, to_duckdb_sql, to_spark_column
+from vectordb_spark.expr import (
+    ArrowUnsupported,
+    parse_filter,
+    to_arrow,
+    to_duckdb_sql,
+    to_spark_column,
+)
 from vectordb_spark.schema import FieldType as FT, VectorDBError
 
 FIELDS = {"i32": FT.INT4, "f64": FT.DOUBLE, "name": FT.STRING, "flag": FT.BOOL}
@@ -21,8 +29,25 @@ ROWS = [
         ["Berlin", "London", "Moscow", "", "O'Brien", "san jose", "SAN", "x_y",
          "a%b", "zz", "Berlin", "lon"] * 2
     )
+] + [
+    # NULL in every column position: NOT over a NULL comparison or a
+    # NULL IN must stay NULL (never selected), like / by zero
+    (24, None, 1.5, "Berlin", True),
+    (25, 3, None, None, None),
+    (26, None, None, "lon", False),
 ]
-PDF = pd.DataFrame(ROWS, columns=["rid", "i32", "f64", "name", "flag"])
+COLUMNS = ["rid", "i32", "f64", "name", "flag"]
+ARROW = pa.table(
+    {c: [r[k] for r in ROWS] for k, c in enumerate(COLUMNS)},
+    schema=pa.schema([("rid", pa.int64()), ("i32", pa.int64()), ("f64", pa.float64()),
+                      ("name", pa.string()), ("flag", pa.bool_())]),
+)
+
+
+def _arrow_ids(ast) -> set[int]:
+    mask = to_arrow(ast, ARROW).to_pylist()
+    return {rid for rid, keep in zip(ARROW.column("rid").to_pylist(), mask) if keep}
+
 
 # ---------------------------------------------------- expression grammar
 
@@ -79,7 +104,7 @@ def _bool_expr(draw, depth=2):
 @pytest.fixture(scope="module")
 def sdf(spark):
     df = spark.createDataFrame(
-        PDF, "rid long, i32 long, f64 double, name string, flag boolean"
+        ROWS, "rid long, i32 long, f64 double, name string, flag boolean"
     )
     df = df.cache()
     df.count()
@@ -90,7 +115,7 @@ def sdf(spark):
 @pytest.fixture(scope="module")
 def duck():
     con = duckdb.connect()
-    con.register("t", PDF)
+    con.register("t", ARROW)
     return con
 
 
@@ -128,6 +153,16 @@ def test_random_numeric_projections_agree(sdf, duck, expr):
         assert (sv is None and dv is None) or sv == dv, (
             f"expr={expr!r} rid={rid}: spark={sv!r} duck={dv!r}"
         )
+    try:
+        arrow = pa.compute.cast(to_arrow(ast, ARROW), pa.float64()).to_pylist()
+    except ArrowUnsupported:
+        return
+    arrow_vals = dict(zip(ARROW.column("rid").to_pylist(), arrow))
+    for rid, sv in spark_vals.items():
+        av = arrow_vals[rid]
+        assert (sv is None and av is None) or (
+            sv is not None and av is not None and sv.hex() == av.hex()
+        ), f"expr={expr!r} rid={rid}: spark={sv!r} arrow={av!r}"
 
 
 @settings(
@@ -149,3 +184,55 @@ def test_random_filters_agree(sdf, duck, expr):
         r[0] for r in duck.execute(f"SELECT rid FROM t WHERE {sql}").fetchall()
     }
     assert spark_ids == duck_ids, f"expr={expr!r}\nsql={sql}"
+    try:
+        arrow_ids = _arrow_ids(ast)
+    except ArrowUnsupported:
+        return  # the serving tier hands this filter to Spark
+    assert arrow_ids == spark_ids, f"expr={expr!r}"
+
+
+@pytest.mark.parametrize(
+    "expr, null_rows_kept",
+    [
+        ("NOT (i32 > 3)", {25}),
+        ("NOT (name IN ('Berlin', 'lon'))", set()),
+        ("NOT ((f64 / 0) = 1)", set()),
+        ("NOT ((i32 / (f64 - f64)) < 1)", set()),
+        ("(NOT flag) OR (i32 = 3)", {25, 26}),
+        ("NOT ((name + 'x') = 'lonx')", {24}),
+    ],
+)
+def test_null_logic_agrees_on_three_engines(sdf, duck, expr, null_rows_kept):
+    """A NULL operand keeps a comparison, an IN, a concatenation and a
+    / by zero NULL under NOT — the row is not selected — while Kleene
+    OR still keeps ``NULL OR TRUE``, on every engine."""
+    ast = parse_filter(expr, FIELDS)
+    spark_ids = {
+        r.rid for r in sdf.where(to_spark_column(ast)).select("rid").collect()
+    }
+    duck_ids = {
+        r[0]
+        for r in duck.execute(f"SELECT rid FROM t WHERE {to_duckdb_sql(ast)}").fetchall()
+    }
+    assert spark_ids == duck_ids == _arrow_ids(ast), expr
+    assert spark_ids & {24, 25, 26} == null_rows_kept, expr
+
+
+@pytest.mark.parametrize(
+    "expr, fields",
+    [
+        ("(i32 % 3) = 1", FIELDS),
+        ("NEARBY(loc, 10.0, 20.0, 5.0)", {**FIELDS, "loc": FT.GEO_POINT}),
+        ("name LIKE 'a\\%b'", FIELDS),
+        ("name LIKE name", FIELDS),
+        ("i32 < 99999999999999999999", FIELDS),
+        ("f64 > 1.0", FIELDS),
+    ],
+)
+def test_arrow_target_declines_what_it_cannot_match(expr, fields):
+    """``%`` (fmod), NEARBY, an escaped or non-literal LIKE pattern, an
+    integer literal beyond BIGINT and a NaN comparison operand are left
+    to Spark."""
+    table = ARROW.set_column(2, "f64", pa.array([float("nan")] * ARROW.num_rows))
+    with pytest.raises(ArrowUnsupported):
+        to_arrow(parse_filter(expr, fields), table)

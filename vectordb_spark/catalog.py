@@ -130,7 +130,7 @@ class Database:
                 i["name"]: i["field"] for i in schema_json.get("indices", [])
             },
         )
-        t._init_storage(capacity=self.init_table_scale)
+        t._init_storage(capacity=self.init_table_scale, replace=True)
         return t
 
     def table(self, name: str, *, embedder=None) -> "Table":  # noqa: F821
@@ -152,7 +152,8 @@ class Database:
         del self._tables[name]
         self._save_catalog()
         # data dirs are left for vacuum — dropping metadata is the
-        # transactional part (object-store discipline).
+        # transactional part (object-store discipline); a later
+        # create_table of the same name starts a fresh manifest.
 
     def release(self) -> None:
         """Free derived in-memory state while staying registered

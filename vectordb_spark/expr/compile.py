@@ -1,4 +1,5 @@
-"""AST → Spark Column and AST → DuckDB SQL compilers.
+"""AST → Spark Column, AST → DuckDB SQL and AST → pyarrow.compute
+compilers.
 
 The Spark backend hands Catalyst a declarative Column tree — pushdown,
 pruning, folding all apply; nothing is evaluated row-at-a-time in
@@ -6,11 +7,18 @@ Python. Numeric evaluation follows the reference evaluator: *all*
 numeric math runs in double (reference expr_evaluator.cpp:127-164
 NumEvaluate returns double — so INT/INT division is double division and
 `%` is fmod). The DuckDB backend emits structurally identical SQL so an
-oracle can replay any filter bit-for-bit.
+oracle can replay any filter bit-for-bit. The pyarrow backend evaluates
+a filter eagerly over an in-memory Arrow table for the driver-resident
+serving tier (serving.py); where it cannot match Spark's result
+exactly it raises ``ArrowUnsupported`` and the caller runs Spark.
 """
 
 from __future__ import annotations
 
+import math
+
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -204,3 +212,114 @@ def _duck_nearby(node: Nearby) -> str:
     return (
         f"(2.0 * 6371.0 * atan2(sqrt({a}), sqrt(1 - {a})) <= {repr(node.radius_km)})"
     )
+
+
+# --------------------------------------------------------------------------
+# pyarrow backend (driver-resident serving tier)
+# --------------------------------------------------------------------------
+
+
+class ArrowUnsupported(Exception):
+    """The pyarrow backend cannot reproduce Spark's result for this
+    node (or, for NaN operands, for this data); answer through Spark."""
+
+
+_ARROW_COMPARE = {
+    "=": pc.equal,
+    "<>": pc.not_equal,
+    ">": pc.greater,
+    ">=": pc.greater_equal,
+    "<": pc.less,
+    "<=": pc.less_equal,
+}
+_ARROW_ARITH = {"+": pc.add, "-": pc.subtract, "*": pc.multiply}
+_INT64 = (-(2**63), 2**63 - 1)
+
+
+def to_arrow(node: Node, table: pa.Table, *, distance_col: str = DISTANCE_COL):
+    """Evaluate ``node`` over every row of ``table`` with the Spark
+    backend's semantics: numeric operands in double, Kleene three-valued
+    AND/OR/NOT, NULL from a NULL operand, from ``IN`` over a NULL and
+    from ``/`` by zero. Returns an array of ``table.num_rows`` values.
+
+    Raises ``ArrowUnsupported`` for what it does not reproduce exactly:
+    ``%`` (fmod), ``NEARBY``, ``LIKE`` against a non-literal pattern or
+    one holding the escape character, integer literals outside BIGINT,
+    and a comparison whose operands hold NaN (Spark orders NaN above
+    every number and equal to itself; IEEE comparisons do not)."""
+    out = _arrow(node, table, distance_col)
+    if isinstance(out, pa.Scalar):
+        out = pa.repeat(out, table.num_rows)
+    return out
+
+
+def _arrow_num(node: Node, table: pa.Table, dcol: str):
+    return pc.cast(_arrow(node, table, dcol), pa.float64())
+
+
+def _no_nan(v) -> None:
+    if isinstance(v, pa.Scalar):
+        nan = v.is_valid and math.isnan(v.as_py())
+    else:
+        nan = bool(pc.any(pc.is_nan(v)).as_py())
+    if nan:
+        raise ArrowUnsupported("NaN comparison operand")
+
+
+def _arrow(node: Node, table: pa.Table, dcol: str):
+    if isinstance(node, Const):
+        v = node.value
+        if node.vtype == ValueType.INT and not _INT64[0] <= v <= _INT64[1]:
+            raise ArrowUnsupported(f"integer literal {v} outside BIGINT")
+        return pa.scalar(v)
+    if isinstance(node, Attr):
+        return table.column(dcol if node.name == "@distance" else node.name)
+    if isinstance(node, Unary):
+        return pc.invert(_arrow(node.child, table, dcol))
+    if isinstance(node, InList):
+        v = _arrow(node.attr, table, dcol)
+        hit = pc.is_in(v, value_set=pa.array(node.items, pa.string()))
+        return pc.if_else(pc.is_null(v), pa.scalar(None, pa.bool_()), hit)
+    if isinstance(node, Binary):
+        op = node.op
+        if op == "AND":
+            return pc.and_kleene(
+                _arrow(node.left, table, dcol), _arrow(node.right, table, dcol)
+            )
+        if op == "OR":
+            return pc.or_kleene(
+                _arrow(node.left, table, dcol), _arrow(node.right, table, dcol)
+            )
+        if op == "LIKE":
+            pat = node.right
+            if not isinstance(pat, Const) or "\\" in str(pat.value):
+                raise ArrowUnsupported("LIKE needs a literal pattern without escapes")
+            return pc.match_like(_arrow(node.left, table, dcol), str(pat.value))
+        if op in _ARROW_COMPARE:
+            if (
+                node.left.vtype in (ValueType.INT, ValueType.DOUBLE)
+                and node.right.vtype in (ValueType.INT, ValueType.DOUBLE)
+            ):
+                left = _arrow_num(node.left, table, dcol)
+                right = _arrow_num(node.right, table, dcol)
+                _no_nan(left)
+                _no_nan(right)
+            else:
+                left = _arrow(node.left, table, dcol)
+                right = _arrow(node.right, table, dcol)
+            return _ARROW_COMPARE[op](left, right)
+        if op == "+" and node.vtype == ValueType.STRING:
+            return pc.binary_join_element_wise(
+                _arrow(node.left, table, dcol), _arrow(node.right, table, dcol), ""
+            )
+        if op in _ARROW_ARITH:
+            return _ARROW_ARITH[op](
+                _arrow_num(node.left, table, dcol), _arrow_num(node.right, table, dcol)
+            )
+        if op == "/":
+            right = _arrow_num(node.right, table, dcol)
+            nonzero = pc.if_else(
+                pc.equal(right, 0.0), pa.scalar(None, pa.float64()), right
+            )
+            return pc.divide(_arrow_num(node.left, table, dcol), nonzero)
+    raise ArrowUnsupported(f"no pyarrow form for {node!r}")

@@ -15,14 +15,22 @@ Semantics replicated:
 
 from __future__ import annotations
 
+import math
 import re
 from dataclasses import dataclass, field
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from vectordb_spark.expr.compile import to_spark_column, references_distance
-from vectordb_spark.expr.parser import parse_filter
+from vectordb_spark.expr.compile import (
+    ArrowUnsupported,
+    references_distance,
+    to_arrow,
+    to_spark_column,
+)
+from vectordb_spark.expr.parser import Attr, Node, ValueType, parse_filter
 from vectordb_spark.schema import FieldType, VectorDBError, invalid_expr
 
 _AGG_RE = re.compile(r"^\s*(SUM|MIN|MAX|COUNT)\s*\((.*)\)\s*$", re.IGNORECASE | re.DOTALL)
@@ -60,15 +68,24 @@ def parse_facets(facets_json: list[dict], field_map: dict[str, FieldType]) -> li
     return specs
 
 
-def _compile_expr(
-    expr_str: str, field_map: dict[str, FieldType], *, has_distance: bool, distance_col: str
-) -> Column:
+def _parse_expr(
+    expr_str: str, field_map: dict[str, FieldType], *, has_distance: bool
+) -> Node:
     ast = parse_filter(expr_str, field_map, check_bool=False)
     if ast is None:
         raise invalid_expr("Empty expression in facet.")
     if references_distance(ast) and not has_distance:
         raise invalid_expr("@distance is not available in this context.")
-    return to_spark_column(ast, distance_col=distance_col)
+    return ast
+
+
+def _compile_expr(
+    expr_str: str, field_map: dict[str, FieldType], *, has_distance: bool, distance_col: str
+) -> Column:
+    return to_spark_column(
+        _parse_expr(expr_str, field_map, has_distance=has_distance),
+        distance_col=distance_col,
+    )
 
 
 def compute_facets(
@@ -144,3 +161,86 @@ def compute_facets(
     for r in rows:
         out[r["_spec"]].append(json.loads(r["_js"]))
     return out
+
+
+def fold_facets(
+    rows: pa.Table,
+    specs: list[FacetSpec],
+    field_map: dict[str, FieldType],
+    *,
+    has_distance: bool = False,
+) -> list[list[dict]]:
+    """:func:`compute_facets` on the driver, over the in-memory result
+    rows of the serving tier (at most ``limit`` of them, in result
+    order). Spark aggregates that single-partition result sequentially
+    in the same order, so each aggregate is the same double fold: SUM
+    is ``0.0 + (((0.0 + v0) + v1) + ...)`` over the non-NULL values,
+    MIN/MAX keep the first of equal values, COUNT counts rows. Groups
+    come out in first-seen order (Spark's are unordered).
+
+    Raises ``ArrowUnsupported`` where the Spark result could differ: an
+    aggregate over a STRING expression (Spark casts it), a NaN among
+    the values or group keys, a FLOAT group key (Spark prints it in
+    single precision), or repeated output names."""
+    out = []
+    for spec in specs:
+        labels = [label for _f, _a, label in spec.aggregates]
+        if len(set(labels)) != len(labels) or spec.group_expr in labels:
+            raise ArrowUnsupported("repeated facet output name")
+        columns = []
+        for func, arg, _label in spec.aggregates:
+            ast = _parse_expr(arg, field_map, has_distance=has_distance)
+            if func == "COUNT":
+                columns.append(None)
+                continue
+            if ast.vtype not in (ValueType.INT, ValueType.DOUBLE, ValueType.BOOL):
+                raise ArrowUnsupported(f"{func} over a {ast.vtype.value} value")
+            values = pc.cast(to_arrow(ast, rows), pa.float64()).to_pylist()
+            _reject_nan(values)
+            columns.append(values)
+        if spec.group_expr is None:
+            groups = {None: list(range(rows.num_rows))}
+        else:
+            key = _parse_expr(spec.group_expr, field_map, has_distance=has_distance)
+            if isinstance(key, Attr) and key.ftype == FieldType.FLOAT:
+                raise ArrowUnsupported("FLOAT group key")
+            keys = to_arrow(key, rows).to_pylist()
+            _reject_nan(keys)
+            groups = {}
+            for i, k in enumerate(keys):
+                # Spark normalizes -0.0 to 0.0 in grouping keys
+                if isinstance(k, float) and k == 0.0:
+                    k = 0.0
+                groups.setdefault(k, []).append(i)
+        facet = []
+        for k, members in groups.items():
+            rec = {} if spec.group_expr is None else {spec.group_expr: k}
+            for (func, _arg, label), values in zip(spec.aggregates, columns):
+                rec[label] = _fold(func, members, values)
+            facet.append(rec)
+        out.append(facet)
+    return out
+
+
+def _reject_nan(values: list) -> None:
+    if any(isinstance(v, float) and math.isnan(v) for v in values):
+        raise ArrowUnsupported("NaN facet value")
+
+
+def _fold(func: str, members: list[int], values: list | None):
+    if func == "COUNT":
+        return float(len(members))
+    acc = None
+    for i in members:
+        v = values[i]
+        if v is None:
+            continue
+        if acc is None:
+            acc = 0.0 + v if func == "SUM" else v
+        elif func == "SUM":
+            acc = acc + v
+        elif (v < acc) if func == "MIN" else (v > acc):
+            acc = v
+    if func == "SUM" and acc is not None:
+        acc = 0.0 + acc
+    return acc

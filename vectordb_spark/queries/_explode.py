@@ -32,10 +32,6 @@ from pyspark.sql import functions as F
 
 ColumnOrName = Column | str
 
-# Flipped (only) by tests/test_explode_nonnull.py to replay every call
-# site through the plain generator and pin row-set equivalence.
-_PLAIN_MODE = False
-
 
 def explode_nonnull(
     df: DataFrame,
@@ -44,14 +40,17 @@ def explode_nonnull(
     *,
     keep: tuple[ColumnOrName, ...] = (),
     pos_alias: str | None = None,
+    plain: bool = False,
 ) -> DataFrame:
     """Explode ``arr`` one-evaluation-per-row (see module docstring).
 
     ``keep`` lists the pass-through columns (names or Columns);
     ``pos_alias`` switches to the positional generator, adding the
-    position column under that name before ``alias``.
+    position column under that name before ``alias``. ``plain`` uses
+    the plain generator instead — the reference form
+    tests/test_explode_nonnull.py compares every call site against.
     """
-    if _PLAIN_MODE:
+    if plain:
         gen = (
             F.posexplode(arr).alias(pos_alias, alias)
             if pos_alias

@@ -3,11 +3,28 @@
 and response envelopes {statusCode, message, result} kept compatible so
 a pyepsilla-style client can point here).
 
-stdlib http.server only (no framework in this environment); requests
-execute sequentially against the shared SparkSession, mirroring the
-reference's per-table single-writer discipline. This is an integration
-surface, not a latency tier — Spark answers in 100s of ms; the win is
-that the SAME engine serves the 100 TB batch path and the API.
+stdlib http.server only (no framework in this environment); mutations
+execute sequentially, mirroring the reference's per-table single-writer
+discipline, and reads run concurrently against committed snapshots.
+
+The read routes are a latency tier. ``/data/query`` (knn and filtered
+knn, with facets) and ``/data/get`` (PK lists and filtered pages) are
+answered on the driver by serving.py from cached Arrow copies of the
+live segments, bit-identical to the Spark path and without a Spark job.
+A request falls back to that Spark path (hundreds of ms) for:
+  - a partitioned table, or a table with a sparse vector field;
+  - more live rows than ``serving.MAX_ROWS``;
+  - a segment whose vector column holds a NULL, a NULL element or an
+    off-width row, or whose columns are not the declared types;
+  - a filter or facet the pyarrow target cannot match exactly: ``%``,
+    ``NEARBY``, an escaped or non-literal ``LIKE`` pattern, a NaN
+    comparison operand, an aggregate over a STRING, a FLOAT group key.
+Cache invalidation: an entry is keyed by the table path, the segment
+dir name and that dir's data-file names (Spark part names carry a
+per-write UUID, so a reused dir name never matches an old entry); each
+request drops the entries of dirs its manifest no longer lists.
+Writes, index searches and the DataFrame surface always run on Spark —
+the SAME engine serves the 100 TB batch path and the API.
 
 Routes (reference web_controller.hpp line refs):
   GET    /                                           (:62, text/plain)

@@ -49,8 +49,10 @@ except ImportError:  # pragma: no cover
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
+from vectordb_spark import serving
 from vectordb_spark.embedding import embed_column
 from vectordb_spark.expr.compile import (
+    ArrowUnsupported,
     references_distance,
     to_spark_column,
 )
@@ -146,7 +148,9 @@ class Table:
         self.embedder = embedder
         self._meta_path = os.path.join(path, "_meta.json")
         # index field name -> source STRING field (auto-embedding, §1.4)
-        self.index_sources = index_sources or self._load_index_sources()
+        self.index_sources = (
+            index_sources if index_sources is not None else self._load_index_sources()
+        )
         # storage partition column (hive-style segment layout): scans
         # filtered on it prune whole directories — the 100 TB
         # data-skipping lever. Persisted at create; on reopen the
@@ -175,20 +179,32 @@ class Table:
         forward)."""
         return bool(self._seq_manifests()) or os.path.exists(self._meta_path)
 
-    def _init_storage(self, capacity: int | None = None) -> None:
+    def _init_storage(self, capacity: int | None = None, *, replace: bool = False) -> None:
+        """Commit the empty first manifest unless a table exists here.
+        ``replace`` (a catalog create) also starts over a DROPPED
+        table's manifest chain — ``Database.drop_table`` removes only
+        the catalog entry: the new table commits a fresh empty
+        manifest that continues the chain's seq (the commit CAS claims
+        the next token), so none of the old rows come back, and the old
+        segment dirs are left for ``vacuum``."""
         os.makedirs(self.path, exist_ok=True)
-        if not self._table_exists():
-            self._save_meta(
-                {
-                    "version": 0,
-                    "files": [],
-                    "next_row_id": 0,
-                    "row_count": 0,
-                    "capacity": int(capacity) if capacity else DEFAULT_CAPACITY,
-                    "index_sources": self.index_sources,
-                    "partition_by": self.partition_by,
-                }
-            )
+        meta = {
+            "version": 0,
+            "files": [],
+            "next_row_id": 0,
+            "row_count": 0,
+            "capacity": int(capacity) if capacity else DEFAULT_CAPACITY,
+        }
+        if self._table_exists():
+            if not replace:
+                return
+            meta["seq"] = int(self._load_meta().get("seq") or 0)
+            # the constructor adopted the dropped manifest's layout; a
+            # catalog table is unpartitioned
+            self.partition_by = None
+        meta["index_sources"] = self.index_sources
+        meta["partition_by"] = self.partition_by
+        self._save_meta(meta)
 
     def _load_meta(self) -> dict:
         # Roll-forward read: the versioned commit files (_meta.s{N}.json,
@@ -725,7 +741,32 @@ class Table:
         if pk_field is not None:
             sel.append(F.col(pk_field.name).alias("_pkv"))
             pagg += [F.min("_pkv").alias("_lo"), F.max("_pkv").alias("_hi")]
+        # ... and counts the NULL and wrong-width dense vectors, which
+        # the row path rejects as INVALID_RECORD (a NULL distance would
+        # rank such a row first in every exact knn)
+        vec_fields = [
+            f for f in self.schema.fields
+            if f.field_type.is_dense_vector and not f.is_index_field
+        ]
+        for i, f in enumerate(vec_fields):
+            v = F.col(f.name)
+            for kind, bad in (
+                ("null", v.isNull()),
+                ("width", v.isNotNull() & (F.size(v) != f.dimension)),
+            ):
+                sel.append(bad.cast("int").alias(f"_v{kind}{i}"))
+                pagg.append(F.sum(f"_v{kind}{i}").alias(f"_v{kind}{i}"))
         prows = new_df.select(*sel).groupBy("_pid").agg(*pagg).collect()
+        for i, f in enumerate(vec_fields):
+            if any(r[f"_vnull{i}"] for r in prows):
+                raise VectorDBError(
+                    "INVALID_RECORD", f"Field {f.name} is missing in the record."
+                )
+            if any(r[f"_vwidth{i}"] for r in prows):
+                raise VectorDBError(
+                    "INVALID_RECORD",
+                    f"Vector field {f.name} must have dimension {f.dimension}.",
+                )
         pcounts = sorted((int(r["_pid"]), int(r["c"])) for r in prows)
         # None when the batch holds no non-NULL key: nothing can
         # conflict, since a NULL key never matches the anti-join
@@ -1670,6 +1711,19 @@ class Table:
                 query_index = idx_fields[0]
         if query_vector is None:
             raise VectorDBError("INVALID_PAYLOAD", "queryVector is required.")
+        # search_df's validation, in its order; the driver-resident tier
+        # (serving.py) answers dense queries it can reproduce exactly
+        f = self._resolve_query_field(query_field, query_index)
+        ast = parse_filter(filter, self.field_map())
+        if f.field_type.is_dense_vector:
+            q = _normalize_dense_query(query_vector, f)
+            rows = serving.query(self, f, q, ast, limit)
+            if rows is not None:
+                reply = self._served_reply(
+                    rows, response, with_distance, facets, has_distance=True
+                )
+                if reply is not None:
+                    return reply
         topk = self.search_df(
             query_vector,
             query_field=query_field,
@@ -1723,6 +1777,13 @@ class Table:
             if pk_field.field_type.is_int and primary_keys:
                 nums = [int(k) for k in primary_keys]
                 extra_bounds = {pk_field.name: (min(nums), max(nums))}
+        rows = serving.get(
+            self, parse_filter(filter, self.field_map()), primary_keys, skip, limit
+        )
+        if rows is not None:
+            reply = self._served_reply(rows, response, False, facets, has_distance=False)
+            if reply is not None:
+                return reply
         df = self.scan_df(filter, extra_bounds=extra_bounds)
         if primary_keys:
             df = df.where(F.col(pk_field.name).isin(primary_keys))
@@ -1747,12 +1808,36 @@ class Table:
 
     # ------------------------------------------------------------- projection
 
-    def _project(
-        self, df: DataFrame, response: list[str] | None, *, with_distance: bool
-    ) -> list[dict]:
-        """Reference P1 (table_mvp.cpp:462-594): default = all non-index
-        fields; JSON strings projected back as objects; sparse/geo as
-        wire-format dicts; @distance appended when requested."""
+    def _served_reply(
+        self, rows, response, with_distance: bool, facets, *, has_distance: bool
+    ) -> dict | None:
+        """The query/get reply over the serving tier's result rows (an
+        Arrow table, ``_distance`` included when ``has_distance``): the
+        same records and facets the Spark path returns, raising the
+        same errors in the same order. None when a facet needs Spark."""
+        fields, want_distance = self._response_fields(response, with_distance)
+        want_distance = want_distance and has_distance
+        cols = [f.name for f in fields] + (["_distance"] if want_distance else [])
+        out: dict = {
+            "result": _records(rows.select(cols).to_pylist(), fields, want_distance)
+        }
+        if facets:
+            from vectordb_spark.operators.facets import fold_facets, parse_facets
+
+            specs = parse_facets(facets, self.field_map())
+            try:
+                out["facets"] = fold_facets(
+                    rows, specs, self.field_map(), has_distance=has_distance
+                )
+            except ArrowUnsupported:
+                return None
+        return out
+
+    def _response_fields(
+        self, response: list[str] | None, with_distance: bool
+    ) -> tuple[list[FieldSchema], bool]:
+        """The projected fields and whether @distance is wanted; an
+        unknown name is INVALID_PAYLOAD."""
         if response:
             fields = []
             for name in response:
@@ -1766,32 +1851,15 @@ class Table:
         else:
             fields = self.schema.projectable_fields()
             want_distance = with_distance
-        cols = [f.name for f in fields]
-        if want_distance and "_distance" in df.columns:
-            cols.append("_distance")
-        rows = df.select(*cols).collect()
-        out = []
-        for r in rows:
-            rec: dict[str, Any] = {}
-            for f in fields:
-                v = r[f.name]
-                if f.field_type == FieldType.JSON:
-                    rec[f.name] = json.loads(v) if isinstance(v, str) else v
-                elif f.field_type.is_sparse_vector:
-                    rec[f.name] = {
-                        "indices": list(v.indices),
-                        "values": [float(x) for x in v.values],
-                    }
-                elif f.field_type == FieldType.GEO_POINT:
-                    rec[f.name] = {"latitude": v.latitude, "longitude": v.longitude}
-                elif f.field_type.is_dense_vector:
-                    rec[f.name] = [float(x) for x in v]
-                else:
-                    rec[f.name] = v
-            if want_distance and "_distance" in df.columns:
-                rec["@distance"] = float(r["_distance"])
-            out.append(rec)
-        return out
+        return fields, want_distance
+
+    def _project(
+        self, df: DataFrame, response: list[str] | None, *, with_distance: bool
+    ) -> list[dict]:
+        fields, want_distance = self._response_fields(response, with_distance)
+        want_distance = want_distance and "_distance" in df.columns
+        cols = [f.name for f in fields] + (["_distance"] if want_distance else [])
+        return _records(df.select(*cols).collect(), fields, want_distance)
 
     # ------------------------------------------------------------- indexes
     # Every index family is a writer (rows → one index dir, shared by
@@ -2794,6 +2862,35 @@ class Table:
 
 class _SkipRecord(Exception):
     pass
+
+
+def _records(rows, fields: list[FieldSchema], with_distance: bool) -> list[dict]:
+    """Reference P1 (table_mvp.cpp:462-594): default = all non-index
+    fields; JSON strings projected back as objects; sparse/geo as
+    wire-format dicts; @distance appended when requested. ``rows`` are
+    Spark Rows or the serving tier's dicts — both index by name."""
+    out = []
+    for r in rows:
+        rec: dict[str, Any] = {}
+        for f in fields:
+            v = r[f.name]
+            if f.field_type == FieldType.JSON:
+                rec[f.name] = json.loads(v) if isinstance(v, str) else v
+            elif f.field_type.is_sparse_vector:
+                rec[f.name] = {
+                    "indices": list(v["indices"]),
+                    "values": [float(x) for x in v["values"]],
+                }
+            elif f.field_type == FieldType.GEO_POINT:
+                rec[f.name] = {"latitude": v["latitude"], "longitude": v["longitude"]}
+            elif f.field_type.is_dense_vector:
+                rec[f.name] = [float(x) for x in v]
+            else:
+                rec[f.name] = v
+        if with_distance:
+            rec["@distance"] = float(r["_distance"])
+        out.append(rec)
+    return out
 
 
 def _rank_by_distance(df: DataFrame, dist, ast, limit: int) -> DataFrame:
