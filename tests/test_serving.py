@@ -195,12 +195,32 @@ def test_fallback_reasons_run_spark(spark, l2_table, monkeypatch):
     ]:
         _out, jobs = _jobs(spark, lambda kw=kw: l2_table.query(query_vector=q, limit=5, **kw))
         assert jobs > 0, f"{kw} must run the Spark path"
-    monkeypatch.setattr(serving, "MAX_ROWS", 10)
+    # the byte cap: a table whose live rows decode to more than the
+    # cache holds is answered by Spark, not re-read on every request
+    size = serving._decoded_bytes(l2_table.schema, l2_table._load_meta())
+    monkeypatch.setattr(serving.CACHE, "max_bytes", size)
+    _out, jobs = _jobs(spark, lambda: l2_table.query(query_vector=q, limit=5))
+    assert jobs == 0, "a table at the byte cap is served"
+    monkeypatch.setattr(serving.CACHE, "max_bytes", size - 1)
     out, jobs = _jobs(spark, lambda: l2_table.query(query_vector=q, limit=5))
-    assert jobs > 0, "a table above MAX_ROWS must run the Spark path"
+    assert jobs > 0, "a table above the byte cap must run the Spark path"
     assert out == served
     _out, jobs = _jobs(spark, lambda: l2_table.get(primary_keys=[1, 2]))
     assert jobs > 0
+
+
+def test_decoded_size_estimate_covers_vectors(l2_table):
+    """The routing estimate counts every dense vector's float32 payload,
+    so a table of wide vectors cannot slip under the byte cap."""
+    meta = l2_table._load_meta()
+    assert serving._decoded_bytes(l2_table.schema, meta) >= meta["row_count"] * DIM * 4
+    wide = TableSchema(name="wide", fields=[
+        FieldSchema(name="id", field_type=FieldType.INT8, primary_key=True),
+        FieldSchema(name="vec", field_type=FieldType.VECTOR_FLOAT, dimension=1536,
+                    metric="COSINE"),
+    ])
+    rows = 200_000
+    assert serving._decoded_bytes(wide, {"row_count": rows, "files": []}) > serving.CACHE_BYTES
 
 
 def _small_schema(name: str, extra: list[FieldSchema] = ()) -> TableSchema:
@@ -256,6 +276,30 @@ def test_fallback_bad_vector_segments_run_spark(spark, tmp_path):
         assert out["result"][0] == {"id": 100 + n}
         out, jobs = _jobs(spark, lambda: t.get(primary_keys=[1]))
         assert jobs > 0 and [r["id"] for r in out["result"]] == [1]
+
+
+def test_bigint_beyond_double_precision_parity(spark, tmp_path):
+    """BIGINT values and literals above 2**53 widen to the nearest
+    double, as Spark's cast does, instead of failing the request."""
+    t = Table(spark, _small_schema("big"), str(tmp_path / "big"))
+    t._init_storage()
+    ids = [2**53 + 1, 2**62 + 7, -(2**63) + 5, 2**63 - 1, 3]
+    t.insert([{"id": i, "vec": [float(n), 1.0], "cat": n} for n, i in enumerate(ids)])
+    q = [0.0, 1.0]
+    for flt in [
+        f"id = {2**53 + 1}",
+        f"id > {2**53}",
+        "(id + 1) > 0 OR cat = 4",
+        f"(id / {2**62 + 1}) >= 1",
+    ]:
+        _assert_parity(spark, lambda flt=flt: t.query(
+            query_vector=q, limit=5, filter=flt, with_distance=True,
+            facets=[{"group": ["cat"], "aggregate": ["SUM(id)", "MIN(id)"]}]))
+    _assert_parity(spark, lambda: t.query(
+        query_vector=q, limit=5,
+        facets=[{"aggregate": ["SUM(id)", "MIN(id)", "MAX(id)", "COUNT(*)"]}]))
+    _assert_parity(spark, lambda: t.get(primary_keys=[2**63 - 1, 2**53 + 1]))
+    _assert_parity(spark, lambda: t.get(filter=f"id <> {2**53 + 1}", limit=3))
 
 
 def _cached_dirs(t) -> set[str]:

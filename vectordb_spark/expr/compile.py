@@ -254,7 +254,9 @@ def to_arrow(node: Node, table: pa.Table, *, distance_col: str = DISTANCE_COL):
 
 
 def _arrow_num(node: Node, table: pa.Table, dcol: str):
-    return pc.cast(_arrow(node, table, dcol), pa.float64())
+    # unsafe: a BIGINT beyond 2**53 rounds to the nearest double, as
+    # Spark's cast does (the safe cast raises on it)
+    return pc.cast(_arrow(node, table, dcol), pa.float64(), safe=False)
 
 
 def _no_nan(v) -> None:

@@ -195,7 +195,8 @@ def fold_facets(
                 continue
             if ast.vtype not in (ValueType.INT, ValueType.DOUBLE, ValueType.BOOL):
                 raise ArrowUnsupported(f"{func} over a {ast.vtype.value} value")
-            values = pc.cast(to_arrow(ast, rows), pa.float64()).to_pylist()
+            # unsafe: BIGINTs beyond 2**53 round as Spark's cast does
+            values = pc.cast(to_arrow(ast, rows), pa.float64(), safe=False).to_pylist()
             _reject_nan(values)
             columns.append(values)
         if spec.group_expr is None:

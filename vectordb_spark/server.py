@@ -13,7 +13,8 @@ answered on the driver by serving.py from cached Arrow copies of the
 live segments, bit-identical to the Spark path and without a Spark job.
 A request falls back to that Spark path (hundreds of ms) for:
   - a partitioned table, or a table with a sparse vector field;
-  - more live rows than ``serving.MAX_ROWS``;
+  - a table whose live rows would decode to more than
+    ``serving.CACHE_BYTES`` (256 MiB), estimated from the manifest;
   - a segment whose vector column holds a NULL, a NULL element or an
     off-width row, or whose columns are not the declared types;
   - a filter or facet the pyarrow target cannot match exactly: ``%``,

@@ -22,10 +22,11 @@ Results are bit-identical to the Spark path:
   (``operators.facets.fold_facets``).
 
 A request returns ``None`` — the caller then runs the unchanged Spark
-path — for a partitioned table, a table with a sparse vector field,
-more live rows than ``MAX_ROWS``, a segment whose columns are not the
-declared types or whose vector column holds a NULL, a NULL element or
-an off-width row, and any filter or facet the pyarrow target declines.
+path — for a partitioned table, a table with a sparse vector field, a
+table whose live rows would decode to more than ``CACHE_BYTES``
+(``_decoded_bytes``), a segment whose columns are not the declared
+types or whose vector column holds a NULL, a NULL element or an
+off-width row, and any filter or facet the pyarrow target declines.
 
 Cache invalidation: segment dirs are immutable once committed, so an
 entry is keyed by the table's real path, the segment dir name and that
@@ -56,11 +57,9 @@ from vectordb_spark.expr.compile import (
 )
 from vectordb_spark.schema import FieldType, TableSchema
 
-# Above this many live rows the request goes to Spark: the fold is
-# O(rows × dim) on one driver thread.
-MAX_ROWS = 200_000
-# Decoded bytes the process keeps across requests; a working set above
-# it is re-read from parquet, never refused.
+# Decoded bytes the process keeps across requests. A table whose live
+# rows would decode to more than this goes to Spark, which streams it,
+# instead of being decoded onto the driver for every request.
 CACHE_BYTES = 256 << 20
 # Rows per block of the distance fold: keeps a block's double-precision
 # terms in the CPU cache while the fold walks its columns.
@@ -78,13 +77,6 @@ _SCALAR_TYPES = {
     FieldType.JSON: pa.string(),
 }
 _GEO_FIELDS = [("latitude", pa.float64()), ("longitude", pa.float64())]
-_METRICS = {
-    "EUCLIDEAN": "EUCLIDEAN",
-    "COSINE": "COSINE",
-    "DOT_PRODUCT": "DOT_PRODUCT",
-    "DOTPRODUCT": "DOT_PRODUCT",
-    "IP": "DOT_PRODUCT",
-}
 
 
 @dataclass(frozen=True)
@@ -214,6 +206,19 @@ def _read_segment(seg_dir: str, files: tuple[str, ...], schema: TableSchema) -> 
     return Segment(rows, row_ids.to_numpy(), vectors)
 
 
+def _decoded_bytes(schema: TableSchema, meta: dict) -> int:
+    """Estimated decoded size of the manifest's live rows: a dense
+    vector takes ``4 × dim`` bytes plus its list offset per row, every
+    other column (and ``_row_id``) 8 — or the segments' parquet bytes
+    when larger, which is where long strings show."""
+    width = 8 + sum(
+        4 * f.dimension + 4 if f.field_type.is_dense_vector else 8
+        for f in schema.fields
+    )
+    on_disk = sum(meta.get("segment_bytes", {}).get(n, 0) for n in meta["files"])
+    return max(meta["row_count"] * width, on_disk)
+
+
 def _snapshot(table) -> list[Segment] | None:
     """The live segments of ``table``'s current manifest, decoded, or
     None when the tier does not serve it."""
@@ -222,8 +227,10 @@ def _snapshot(table) -> list[Segment] | None:
     ):
         return None
     meta = table._load_meta()
-    live_rows = meta.get("row_count")
-    if live_rows is None or live_rows > MAX_ROWS:
+    if (
+        meta.get("row_count") is None
+        or _decoded_bytes(table.schema, meta) > CACHE.max_bytes
+    ):
         return None
     root = os.path.realpath(table.path)
     keys = []
@@ -254,11 +261,10 @@ def fold_distances(metric: str, vectors: np.ndarray, q: np.ndarray) -> np.ndarra
     """Dense distances of ``vectors`` (rows × dim, float32) to ``q``
     (float64): the left fold ``functions/distance.py`` compiles,
     element by element in double, column 0 first, from +0.0."""
-    m = _METRICS[metric.upper()]
     out = np.empty(len(vectors))
     for s in range(0, len(vectors), _FOLD_BLOCK):
         terms = vectors[s : s + _FOLD_BLOCK].T.astype(np.float64)
-        if m == "EUCLIDEAN":
+        if metric == "EUCLIDEAN":
             terms -= q[:, None]
             terms *= terms
         else:
@@ -267,11 +273,11 @@ def fold_distances(metric: str, vectors: np.ndarray, q: np.ndarray) -> np.ndarra
         acc[:] = 0.0
         for term in terms:
             acc += term
-    if m == "COSINE":
-        return 1.0 - out
-    if m == "DOT_PRODUCT":
+    if metric == "EUCLIDEAN":
+        return out
+    if metric == "DOT_PRODUCT":
         return -out
-    return out
+    return 1.0 - out
 
 
 def _mask(ast, rows: pa.Table) -> np.ndarray:
@@ -301,11 +307,7 @@ def query(table, field, q: list[float], ast, limit: int) -> pa.Table | None:
     ``(distance, _row_id)``, with their distances in ``_distance``;
     ``ast`` filters before scoring, or after it when it reads
     ``@distance``. None: answer through Spark."""
-    if (
-        not isinstance(limit, int)
-        or limit < 0
-        or field.metric.upper() not in _METRICS
-    ):
+    if not isinstance(limit, int) or limit < 0:
         return None
     segs = _snapshot(table)
     if segs is None:
