@@ -224,3 +224,16 @@ def test_round13_queue_registered_with_oracles():
         assert name in os_, f"{name} must be oracle-gated"
         assert name in WINDOW_VETTED, f"{name} must be vetted"
         assert name not in ORACLE_WINDOW, f"{name} rotated in early"
+
+
+def test_bench_twins_are_registered_queries():
+    # bench.py swaps each memoized twin in under its gate's name; a
+    # renamed gate would leave a phantom entry and drop the twin
+    # unnoticed. The registry loads first, so importing bench cannot
+    # reorder it.
+    qs = all_queries()
+    import bench
+
+    assert bench._TWINS
+    missing = sorted(n for n in bench._TWINS if n not in qs)
+    assert not missing, f"bench twins of unregistered queries: {missing}"

@@ -351,6 +351,9 @@ def test_drop_and_create_starts_empty(spark, db):
 
 
 def test_insert_df_rejects_null_and_off_width_vectors(spark, tmp_path):
+    """Both ingest routes reject a bad dense vector with the same
+    INVALID_RECORD; a NULL element used to raise TypeError on the row
+    path and get stored by ``insert_df``."""
     t = Table(spark, _small_schema("vals"), str(tmp_path / "vals"))
     t._init_storage()
     t.insert([{"id": 1, "vec": [1.0, 1.0], "cat": 0}])
@@ -358,13 +361,36 @@ def test_insert_df_rejects_null_and_off_width_vectors(spark, tmp_path):
         (None, "Field vec is missing in the record."),
         ([1.0, 2.0, 3.0], "Vector field vec must have dimension 2."),
         ([1.0], "Vector field vec must have dimension 2."),
+        ([1.0, None], "Vector field vec must not hold NULL elements."),
     ]:
         df = spark.createDataFrame(
             [(2, [0.0, 0.0], 0), (3, vec, 1)], "id long, vec array<float>, cat int"
         )
-        with pytest.raises(VectorDBError) as e:
-            t.insert_df(df)
-        assert (e.value.code, e.value.message) == ("INVALID_RECORD", message)
+        for write in (
+            lambda: t.insert_df(df),
+            lambda: t.insert([{"id": 3, "vec": vec, "cat": 1}]),
+        ):
+            with pytest.raises(VectorDBError) as e:
+                write()
+            assert (e.value.code, e.value.message) == ("INVALID_RECORD", message)
     assert t.statistics() == {"totalRecords": 1}
     out = t.query(query_vector=[0.0, 0.0], limit=5, with_distance=True)
     assert [r["id"] for r in out["result"]] == [1]
+
+
+def test_insert_df_reply_counts_skipped_rows(spark, tmp_path):
+    """A plain ``insert_df`` reply counts batch duplicates and PK
+    conflicts as skipped, as the row path does (it used to say 0)."""
+    rows = [(3, [3.0, 0.0], 0), (4, [4.0, 0.0], 0), (4, [4.5, 0.0], 1)]
+    replies = []
+    for name, write in [
+        ("rows", lambda t: t.insert(
+            [{"id": i, "vec": v, "cat": c} for i, v, c in rows])),
+        ("frame", lambda t: t.insert_df(spark.createDataFrame(
+            rows, "id long, vec array<float>, cat int"))),
+    ]:
+        t = Table(spark, _small_schema(name), str(tmp_path / name))
+        t._init_storage()
+        t.insert([{"id": 3, "vec": [0.0, 0.0], "cat": 0}])
+        replies.append(write(t))
+    assert replies == [{"inserted": 1, "skipped": 2}] * 2

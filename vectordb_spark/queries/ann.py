@@ -7,6 +7,9 @@ agreement discipline).
 
 from __future__ import annotations
 
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -604,6 +607,128 @@ def ann_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TRN_K = 8
 _TRN_ROUNDS = 2
 _TRN_NPROBE = 3
+_SMP_MOD = 4
+_SMP_KEEP = 1
+_LLOYD = {"k": _TRN_K, "train": "lloyd", "rounds": _TRN_ROUNDS}
+_SAMPLED = {"train_mod": _SMP_MOD, "train_keep": _SMP_KEEP}
+
+
+def _rebuild(index_type: str, **sampled):
+    """Build step: bulk insert → seeded-Lloyd ``rebuild`` (``sampled``
+    restricts training to the hash subset)."""
+
+    def step(t, insert) -> None:
+        insert()
+        t.rebuild("embedding", index_type=index_type, **_LLOYD, **sampled)
+
+    return step
+
+
+def _clustered_compact(t, insert) -> None:
+    """Build step: bulk insert → Lloyd-clustered ``compact`` (the base
+    itself is rewritten partitioned by the trained assignment)."""
+    insert()
+    t.compact(cluster_by="embedding", **_LLOYD)
+
+
+def _refresh(t, insert) -> None:
+    """Build step: 80% bulk insert → ``rebuild`` → 20% tail insert →
+    ``refresh_index`` (the tail goes to a delta dir, assigned to the
+    stored centroids)."""
+    five = F.col("vec_id") % 5
+    insert(five != 4)
+    t.rebuild("embedding", index_type="IVF", **_LLOYD)
+    insert(five == 4)
+    assert t.refresh_index("embedding")["appendedRecords"] > 0
+
+
+# gate name → (table name, build step); bench.py's memoized twins build
+# their tables from the same specs
+EMB_GATES = {
+    "table_ivf_trained_search": ("trained_ivf_emb", _rebuild("IVF")),
+    "table_ivf_sampled_train_search": (
+        "sampled_ivf_emb", _rebuild("IVF", **_SAMPLED),
+    ),
+    "table_ivfpq_trained_search": ("trained_ivfpq_emb", _rebuild("IVF_PQ")),
+    "table_ivfpq_sampled_train_search": (
+        "sampled_ivfpq_emb", _rebuild("IVF_PQ", **_SAMPLED),
+    ),
+    "table_clustered_compact_search": ("clustered_emb", _clustered_compact),
+    "table_ivf_refresh_search": ("ivf_refresh_emb", _refresh),
+}
+
+
+def build_emb_gate_table(spark: SparkSession, sf_dir: str, work: str,
+                         name: str, build):
+    """Load the embeddings corpus into a fresh ``(vec_id INT8 PK, label,
+    embedding VECTOR_FLOAT EUCLIDEAN)`` table ``name`` under ``work``,
+    run ``build(table, insert)`` on it, and return ``(table,
+    query_vector)``. The returned Table is a NEW object, so everything
+    the search uses must round-trip through the persisted manifest,
+    not driver memory. Shared by the trained-IVF gates and bench.py's
+    memoized twins."""
+    import os as _os
+
+    from vectordb_spark.queries.vector import _query_vector
+    from vectordb_spark.schema import FieldSchema, FieldType, TableSchema
+    from vectordb_spark.table import Table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    qv = _query_vector(spark, sf_dir)
+    schema = TableSchema(
+        name=name,
+        fields=[
+            FieldSchema(name="vec_id", field_type=FieldType.INT8, primary_key=True),
+            FieldSchema(name="label", field_type=FieldType.STRING),
+            FieldSchema(
+                name="embedding",
+                field_type=FieldType.VECTOR_FLOAT,
+                dimension=len(qv),
+                metric="EUCLIDEAN",
+            ),
+        ],
+    )
+    path = _os.path.join(work, name)
+    t = Table(spark, schema, path)
+    t._init_storage()
+
+    def insert(where=None) -> None:
+        # single ordered partition → _row_id order == vec_id order, so
+        # the trainers' "k smallest _row_id" seeds and hash-sampled
+        # subsets line up with the oracles' vec_id arithmetic exactly
+        rows = emb if where is None else emb.where(where)
+        t.insert_df(rows.orderBy("vec_id").coalesce(1))
+
+    build(t, insert)
+    return Table(spark, schema, path), qv
+
+
+def _emb_gate(spark: SparkSession, sf_dir: str, gate: str, serve) -> DataFrame:
+    """Run trained-IVF gate ``gate``: build its table in a temp
+    warehouse, ``serve(table, qv) -> (search result, centroids)``, and
+    re-derive each served row's cluster id from the manifest centroids
+    (the search output drops it; the postings partition by it)."""
+    from vectordb_spark.functions.distance import l2_squared, vector_literal
+
+    name, build = EMB_GATES[gate]
+    work = tempfile.mkdtemp(prefix=f"vdb_{name}_")
+    try:
+        res, centroids = serve(
+            *build_emb_gate_table(spark, sf_dir, work, name, build)
+        )
+        dists = F.array(
+            *[l2_squared(F.col("embedding"), vector_literal(c)) for c in centroids]
+        )
+        return (
+            res.withColumn(
+                "cluster",
+                (F.array_position(dists, F.array_min(dists)) - 1).cast("bigint"),
+            )
+            .select("vec_id", "label", "cluster", F.col("_distance").alias("distance"))
+            .localCheckpoint()  # materialize before the warehouse dies
+        )
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
 
 
 def _lloyd_round_sql(prev: str, out: str, n: int, corpus: str = "corpus") -> str:
@@ -701,74 +826,14 @@ def table_ivf_trained_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan with k broadcast-literal distance folds plus one k·dim-sized
     shuffle; serving is partition pruning on `_cluster`
     (reference X1-X3, table_mvp.cpp:94-203 rebuild cycle)."""
-    import shutil as _shutil
-    import tempfile as _tempfile
 
-    from vectordb_spark.queries.vector import _query_vector
-    from vectordb_spark.schema import FieldSchema, FieldType, TableSchema
-    from vectordb_spark.table import Table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    qv = _query_vector(spark, sf_dir)
-    schema = TableSchema(
-        name="trained_ivf_emb",
-        fields=[
-            FieldSchema(name="vec_id", field_type=FieldType.INT8, primary_key=True),
-            FieldSchema(name="label", field_type=FieldType.STRING),
-            FieldSchema(
-                name="embedding",
-                field_type=FieldType.VECTOR_FLOAT,
-                dimension=len(qv),
-                metric="EUCLIDEAN",
-            ),
-        ],
-    )
-    work = _tempfile.mkdtemp(prefix="vdb_trained_ivf_")
-    try:
-        import os as _os
-
-        t = Table(spark, schema, _os.path.join(work, "trained_ivf_emb"))
-        t._init_storage()
-        # single ordered partition → _row_id == vec_id, so the
-        # trainer's "k smallest _row_id" seeds are exactly the
-        # oracle's vec_id < k rows
-        t.insert_df(emb.orderBy("vec_id").coalesce(1))
-        t.rebuild(
-            "embedding", index_type="IVF", k=_TRN_K, train="lloyd",
-            rounds=_TRN_ROUNDS,
-        )
-        # fresh Table: everything the search uses must round-trip
-        # through the persisted manifest, not driver memory
-        t2 = Table(spark, schema, _os.path.join(work, "trained_ivf_emb"))
-        info = t2._load_meta()["indexes"]["embedding"]
+    def serve(t, qv):
+        info = t._load_meta()["indexes"]["embedding"]
         assert info["train"] == "lloyd" and len(info["centroids"]) == _TRN_K
-        res = t2.search_indexed_df(qv, limit=10, nprobe=_TRN_NPROBE)
-        # re-derive the served cluster id from the manifest centroids
-        # (search output drops it): postings dir partitions by it
-        from vectordb_spark.functions.distance import l2_squared, vector_literal
+        res = t.search_indexed_df(qv, limit=10, nprobe=_TRN_NPROBE)
+        return res, info["centroids"]
 
-        dists = F.array(
-            *[
-                l2_squared(F.col("embedding"), vector_literal(c))
-                for c in info["centroids"]
-            ]
-        )
-        out = (
-            res.withColumn(
-                "cluster",
-                (F.array_position(dists, F.array_min(dists)) - 1).cast("bigint"),
-            )
-            .select(
-                "vec_id",
-                "label",
-                "cluster",
-                F.col("_distance").alias("distance"),
-            )
-            .localCheckpoint()  # materialize before the warehouse dies
-        )
-        return out
-    finally:
-        _shutil.rmtree(work, ignore_errors=True)
+    return _emb_gate(spark, sf_dir, "table_ivf_trained_search", serve)
 
 
 # --------------------------------- SAMPLED-trained IVF via the table path
@@ -784,9 +849,6 @@ def table_ivf_trained_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # whole lifecycle (sampled seeds, both sampled Lloyd rounds, full
 # assignment, manifest round-trip, probe-pruned serving) replayed by
 # the oracle from raw parquet.
-
-_SMP_MOD = 4
-_SMP_KEEP = 1
 
 
 def _smp_filter_sql(id_expr: str = "vec_id") -> str:
@@ -867,69 +929,15 @@ def table_ivf_sampled_train_search(
     sampling mirrors the reference's NSG build operating on a
     candidate-pool subset (nsg.cpp:488-686) re-imagined as a
     deterministic hash slice."""
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
 
-    from vectordb_spark.functions.distance import l2_squared, vector_literal
-    from vectordb_spark.queries.vector import _query_vector
-    from vectordb_spark.schema import FieldSchema, FieldType, TableSchema
-    from vectordb_spark.table import Table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    qv = _query_vector(spark, sf_dir)
-    schema = TableSchema(
-        name="sampled_ivf_emb",
-        fields=[
-            FieldSchema(name="vec_id", field_type=FieldType.INT8, primary_key=True),
-            FieldSchema(name="label", field_type=FieldType.STRING),
-            FieldSchema(
-                name="embedding",
-                field_type=FieldType.VECTOR_FLOAT,
-                dimension=len(qv),
-                metric="EUCLIDEAN",
-            ),
-        ],
-    )
-    work = _tempfile.mkdtemp(prefix="vdb_sampled_ivf_")
-    try:
-        t = Table(spark, schema, _os.path.join(work, "sampled_ivf_emb"))
-        t._init_storage()
-        # single ordered partition → _row_id == vec_id, so the hash
-        # filter and the "k smallest sampled ids" seeds line up with
-        # the oracle's vec_id arithmetic exactly
-        t.insert_df(emb.orderBy("vec_id").coalesce(1))
-        t.rebuild(
-            "embedding", index_type="IVF", k=_TRN_K, train="lloyd",
-            rounds=_TRN_ROUNDS, train_mod=_SMP_MOD, train_keep=_SMP_KEEP,
-        )
-        t2 = Table(spark, schema, _os.path.join(work, "sampled_ivf_emb"))
-        info = t2._load_meta()["indexes"]["embedding"]
+    def serve(t, qv):
+        info = t._load_meta()["indexes"]["embedding"]
         assert info["train_mod"] == _SMP_MOD and info["train_keep"] == _SMP_KEEP
         assert len(info["centroids"]) == _TRN_K
-        res = t2.search_indexed_df(qv, limit=10, nprobe=_TRN_NPROBE)
-        dists = F.array(
-            *[
-                l2_squared(F.col("embedding"), vector_literal(c))
-                for c in info["centroids"]
-            ]
-        )
-        out = (
-            res.withColumn(
-                "cluster",
-                (F.array_position(dists, F.array_min(dists)) - 1).cast("bigint"),
-            )
-            .select(
-                "vec_id",
-                "label",
-                "cluster",
-                F.col("_distance").alias("distance"),
-            )
-            .localCheckpoint()  # materialize before the warehouse dies
-        )
-        return out
-    finally:
-        _shutil.rmtree(work, ignore_errors=True)
+        res = t.search_indexed_df(qv, limit=10, nprobe=_TRN_NPROBE)
+        return res, info["centroids"]
+
+    return _emb_gate(spark, sf_dir, "table_ivf_sampled_train_search", serve)
 
 
 # ------------------------------------- trained residual IVFPQ lifecycle
@@ -1109,71 +1117,16 @@ def table_ivfpq_trained_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     or M·K (fine) broadcast-literal integer folds + one small shuffle;
     serving = partition pruning on `_cluster`, ADC reads 4 B/row codes,
     floats touched only for the 64 re-rank candidates."""
-    import shutil as _shutil
-    import tempfile as _tempfile
 
-    from vectordb_spark.queries.vector import _query_vector
-    from vectordb_spark.schema import FieldSchema, FieldType, TableSchema
-    from vectordb_spark.table import Table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    qv = _query_vector(spark, sf_dir)
-    schema = TableSchema(
-        name="trained_ivfpq_emb",
-        fields=[
-            FieldSchema(name="vec_id", field_type=FieldType.INT8, primary_key=True),
-            FieldSchema(name="label", field_type=FieldType.STRING),
-            FieldSchema(
-                name="embedding",
-                field_type=FieldType.VECTOR_FLOAT,
-                dimension=len(qv),
-                metric="EUCLIDEAN",
-            ),
-        ],
-    )
-    work = _tempfile.mkdtemp(prefix="vdb_trained_ivfpq_")
-    try:
-        import os as _os
-
-        t = Table(spark, schema, _os.path.join(work, "trained_ivfpq_emb"))
-        t._init_storage()
-        # single ordered partition → _row_id == vec_id: trainer seeds
-        # (k smallest _row_id) are exactly the oracle's vec_id < k rows
-        t.insert_df(emb.orderBy("vec_id").coalesce(1))
-        t.rebuild(
-            "embedding", index_type="IVF_PQ", k=_TRN_K, train="lloyd",
-            rounds=_TRN_ROUNDS,
-        )
-        t2 = Table(spark, schema, _os.path.join(work, "trained_ivfpq_emb"))
-        info = t2._load_meta()["indexes"]["embedding"]
+    def serve(t, qv):
+        info = t._load_meta()["indexes"]["embedding"]
         assert info["train"] == "lloyd" and info["type"] == "IVF_PQ"
         assert info["pq_residual"] and len(info["pq_codebook"]) == _PQT_M
         assert all(len(cb) == _PQT_KC for cb in info["pq_codebook"])
-        res = t2.search_indexed_df(qv, limit=10, nprobe=_TRN_NPROBE)
-        from vectordb_spark.functions.distance import l2_squared, vector_literal
+        res = t.search_indexed_df(qv, limit=10, nprobe=_TRN_NPROBE)
+        return res, info["centroids"]
 
-        dists = F.array(
-            *[
-                l2_squared(F.col("embedding"), vector_literal(c))
-                for c in info["centroids"]
-            ]
-        )
-        out = (
-            res.withColumn(
-                "cluster",
-                (F.array_position(dists, F.array_min(dists)) - 1).cast("bigint"),
-            )
-            .select(
-                "vec_id",
-                "label",
-                "cluster",
-                F.col("_distance").alias("distance"),
-            )
-            .localCheckpoint()  # materialize before the warehouse dies
-        )
-        return out
-    finally:
-        _shutil.rmtree(work, ignore_errors=True)
+    return _emb_gate(spark, sf_dir, "table_ivfpq_trained_search", serve)
 
 
 @query("table_clustered_compact_search", oracle=_trained_ivf_oracle())
@@ -1193,67 +1146,14 @@ def table_clustered_compact_search(spark: SparkSession, sf_dir: str) -> DataFram
     reads: probe cost is file listing, and the float column is read
     only inside the probed directories (reference X1-X3 re-imagined as
     Delta-style OPTIMIZE clustering; SCALING.md "Clustered compaction")."""
-    import shutil as _shutil
-    import tempfile as _tempfile
 
-    from vectordb_spark.queries.vector import _query_vector
-    from vectordb_spark.schema import FieldSchema, FieldType, TableSchema
-    from vectordb_spark.table import Table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    qv = _query_vector(spark, sf_dir)
-    schema = TableSchema(
-        name="clustered_emb",
-        fields=[
-            FieldSchema(name="vec_id", field_type=FieldType.INT8, primary_key=True),
-            FieldSchema(name="label", field_type=FieldType.STRING),
-            FieldSchema(
-                name="embedding",
-                field_type=FieldType.VECTOR_FLOAT,
-                dimension=len(qv),
-                metric="EUCLIDEAN",
-            ),
-        ],
-    )
-    work = _tempfile.mkdtemp(prefix="vdb_clustered_")
-    try:
-        import os as _os
-
-        t = Table(spark, schema, _os.path.join(work, "clustered_emb"))
-        t._init_storage()
-        # single ordered partition → _row_id == vec_id: the trainer's
-        # k-smallest-_row_id seeds are the oracle's vec_id < k rows
-        t.insert_df(emb.orderBy("vec_id").coalesce(1))
-        t.compact(cluster_by="embedding", k=_TRN_K, train="lloyd",
-                  rounds=_TRN_ROUNDS)
-        t2 = Table(spark, schema, _os.path.join(work, "clustered_emb"))
-        layout = t2._load_meta()["cluster_layout"]
+    def serve(t, qv):
+        layout = t._load_meta()["cluster_layout"]
         assert layout["train"] == "lloyd" and len(layout["centroids"]) == _TRN_K
-        res = t2.search_clustered_df(qv, limit=10, nprobe=_TRN_NPROBE)
-        from vectordb_spark.functions.distance import l2_squared, vector_literal
+        res = t.search_clustered_df(qv, limit=10, nprobe=_TRN_NPROBE)
+        return res, layout["centroids"]
 
-        dists = F.array(
-            *[
-                l2_squared(F.col("embedding"), vector_literal(c))
-                for c in layout["centroids"]
-            ]
-        )
-        out = (
-            res.withColumn(
-                "cluster",
-                (F.array_position(dists, F.array_min(dists)) - 1).cast("bigint"),
-            )
-            .select(
-                "vec_id",
-                "label",
-                "cluster",
-                F.col("_distance").alias("distance"),
-            )
-            .localCheckpoint()  # materialize before the warehouse dies
-        )
-        return out
-    finally:
-        _shutil.rmtree(work, ignore_errors=True)
+    return _emb_gate(spark, sf_dir, "table_clustered_compact_search", serve)
 
 
 # --------------------------- SAMPLED-trained IVF_PQ via the table path
@@ -1395,71 +1295,15 @@ def table_ivfpq_sampled_train_search(
     keeps the ENTIRE composite auditable from raw parquet, which no
     library `.sample()` trainer can offer. Serving shape identical to
     table_ivfpq_trained_search (X1-X3, table_mvp.cpp:94-203)."""
-    import shutil as _shutil
-    import tempfile as _tempfile
 
-    from vectordb_spark.queries.vector import _query_vector
-    from vectordb_spark.schema import FieldSchema, FieldType, TableSchema
-    from vectordb_spark.table import Table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    qv = _query_vector(spark, sf_dir)
-    schema = TableSchema(
-        name="sampled_ivfpq_emb",
-        fields=[
-            FieldSchema(name="vec_id", field_type=FieldType.INT8, primary_key=True),
-            FieldSchema(name="label", field_type=FieldType.STRING),
-            FieldSchema(
-                name="embedding",
-                field_type=FieldType.VECTOR_FLOAT,
-                dimension=len(qv),
-                metric="EUCLIDEAN",
-            ),
-        ],
-    )
-    work = _tempfile.mkdtemp(prefix="vdb_sampled_ivfpq_")
-    try:
-        import os as _os
-
-        t = Table(spark, schema, _os.path.join(work, "sampled_ivfpq_emb"))
-        t._init_storage()
-        # single ordered partition → _row_id == vec_id: both trainers'
-        # hash filters and seed picks line up with the oracle's vec_id
-        # arithmetic exactly
-        t.insert_df(emb.orderBy("vec_id").coalesce(1))
-        t.rebuild(
-            "embedding", index_type="IVF_PQ", k=_TRN_K, train="lloyd",
-            rounds=_TRN_ROUNDS, train_mod=_SMP_MOD, train_keep=_SMP_KEEP,
-        )
-        t2 = Table(spark, schema, _os.path.join(work, "sampled_ivfpq_emb"))
-        info = t2._load_meta()["indexes"]["embedding"]
+    def serve(t, qv):
+        info = t._load_meta()["indexes"]["embedding"]
         assert info["train_mod"] == _SMP_MOD and info["type"] == "IVF_PQ"
         assert info["pq_residual"] and len(info["pq_codebook"]) == _PQT_M
-        res = t2.search_indexed_df(qv, limit=10, nprobe=_TRN_NPROBE)
-        from vectordb_spark.functions.distance import l2_squared, vector_literal
+        res = t.search_indexed_df(qv, limit=10, nprobe=_TRN_NPROBE)
+        return res, info["centroids"]
 
-        dists = F.array(
-            *[
-                l2_squared(F.col("embedding"), vector_literal(c))
-                for c in info["centroids"]
-            ]
-        )
-        out = (
-            res.withColumn(
-                "cluster",
-                (F.array_position(dists, F.array_min(dists)) - 1).cast("bigint"),
-            )
-            .select(
-                "vec_id",
-                "label",
-                "cluster",
-                F.col("_distance").alias("distance"),
-            )
-            .localCheckpoint()  # materialize before the warehouse dies
-        )
-        return out
-    finally:
-        _shutil.rmtree(work, ignore_errors=True)
+    return _emb_gate(spark, sf_dir, "table_ivfpq_sampled_train_search", serve)
 
 
 # ------------------------------------ 960-d wide-vector ADC parity gate
@@ -1659,70 +1503,11 @@ def table_ivf_refresh_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference rebuilds from scratch each cycle
     (table_mvp.cpp:94-203); this is the incremental-commit
     re-imagination, same answers."""
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
 
-    from vectordb_spark.queries.vector import _query_vector
-    from vectordb_spark.schema import FieldSchema, FieldType, TableSchema
-    from vectordb_spark.table import Table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    qv = _query_vector(spark, sf_dir)
-    schema = TableSchema(
-        name="ivf_refresh_emb",
-        fields=[
-            FieldSchema(name="vec_id", field_type=FieldType.INT8, primary_key=True),
-            FieldSchema(name="label", field_type=FieldType.STRING),
-            FieldSchema(
-                name="embedding",
-                field_type=FieldType.VECTOR_FLOAT,
-                dimension=len(qv),
-                metric="EUCLIDEAN",
-            ),
-        ],
-    )
-    work = _tempfile.mkdtemp(prefix="vdb_ivf_refresh_")
-    try:
-        t = Table(spark, schema, _os.path.join(work, "ivf_refresh_emb"))
-        t._init_storage()
-        five = F.col("vec_id") % 5
-        # single ordered partition → _row_id order == vec_id order, so
-        # the trainer's "k smallest _row_id" seeds are the oracle's
-        # first-k-by-vec_id rows of the training subset
-        t.insert_df(emb.where(five != 4).orderBy("vec_id").coalesce(1))
-        t.rebuild(
-            "embedding", index_type="IVF", k=_TRN_K, train="lloyd",
-            rounds=_TRN_ROUNDS,
-        )
-        t.insert_df(emb.where(five == 4).orderBy("vec_id").coalesce(1))
-        res_refresh = t.refresh_index("embedding")
-        assert res_refresh["appendedRecords"] > 0
-        # fresh Table: centroids, delta dirs, and cluster sizes must
-        # round-trip through the persisted manifest
-        t2 = Table(spark, schema, _os.path.join(work, "ivf_refresh_emb"))
-        info = t2._load_meta()["indexes"]["embedding"]
+    def serve(t, qv):
+        info = t._load_meta()["indexes"]["embedding"]
         assert info.get("deltas"), "refresh did not produce a delta dir"
-        res = t2.search_indexed_df(qv, limit=10, nprobe=_TRN_NPROBE)
-        from vectordb_spark.functions.distance import l2_squared, vector_literal
+        res = t.search_indexed_df(qv, limit=10, nprobe=_TRN_NPROBE)
+        return res, info["centroids"]
 
-        dists = F.array(
-            *[
-                l2_squared(F.col("embedding"), vector_literal(c))
-                for c in info["centroids"]
-            ]
-        )
-        out = (
-            res.withColumn(
-                "cluster",
-                (F.array_position(dists, F.array_min(dists)) - 1).cast("bigint"),
-            )
-            .select(
-                "vec_id", "label", "cluster",
-                F.col("_distance").alias("distance"),
-            )
-            .localCheckpoint()
-        )
-        return out
-    finally:
-        _shutil.rmtree(work, ignore_errors=True)
+    return _emb_gate(spark, sf_dir, "table_ivf_refresh_search", serve)

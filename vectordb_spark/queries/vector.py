@@ -445,7 +445,12 @@ _CITY_ROWS = [
     (5, "Shanghai", [0.24, 0.18, 0.22, 0.44]),
 ]
 _CITY_Q = [0.35, 0.55, 0.47, 0.94]
-_CITY_METRICS = ("EUCLIDEAN", "COSINE", "DOT_PRODUCT")
+# metric → its vector field; key order is the gate's output order
+_CITY_FIELDS = {
+    "EUCLIDEAN": "emb_euclidean",
+    "COSINE": "emb_cosine",
+    "DOT_PRODUCT": "emb_dot",
+}
 
 
 def _city_parity_oracle() -> str:
@@ -490,65 +495,25 @@ def knn_metric_ordering_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     scales nothing: the lifecycle under test is the engine's, not the
     data's. Limit 6 > 5 rows mirrors the reference query
     (db_server.cpp:281-291, withDistance=true, limit=6)."""
-    import os as _os
     import shutil as _shutil
     import tempfile as _tempfile
 
-    from vectordb_spark.schema import FieldSchema, FieldType, TableSchema
-    from vectordb_spark.table import Table
-
-    fields = [
-        FieldSchema(name="id", field_type=FieldType.INT8, primary_key=True),
-        FieldSchema(name="doc", field_type=FieldType.STRING),
-    ]
-    vec_field = {
-        "EUCLIDEAN": "emb_euclidean",
-        "COSINE": "emb_cosine",
-        "DOT_PRODUCT": "emb_dot",
-    }
-    for m, fname in vec_field.items():
-        fields.append(
-            FieldSchema(
-                name=fname, field_type=FieldType.VECTOR_FLOAT,
-                dimension=4, metric=m,
-            )
-        )
     work = _tempfile.mkdtemp(prefix="vdb_city_parity_")
     try:
-        t = Table(
-            spark, TableSchema(name="cities_dense", fields=fields),
-            _os.path.join(work, "cities_dense"),
-        )
-        t._init_storage()
-        recs = [
-            {"id": i, "doc": d, **{f: list(v) for f in vec_field.values()}}
-            for i, d, v in _CITY_ROWS
-        ]
-        t.insert(recs)
-        # duplicate-PK row must be SKIPPED on plain insert
-        # (test.py:59-61, table_segment_mvp.cpp:652-741)
-        t.insert([recs[0]])
-        for fname in vec_field.values():
-            t.rebuild(fname, index_type="IVF", k=2, train="lloyd", rounds=1)
-        # fresh Table: the served orderings must come from the manifest
-        t2 = Table(
-            spark, TableSchema(name="cities_dense", fields=fields),
-            _os.path.join(work, "cities_dense"),
-        )
-        assert t2.df().count() == len(_CITY_ROWS), "duplicate PK row not skipped"
+        t, qv = build_city_gate_table(spark, sf_dir, work)
+        assert t.df().count() == len(_CITY_ROWS), "duplicate PK row not skipped"
         out_rows = []
-        for m in _CITY_METRICS:
-            fname = vec_field[m]
+        for m, fname in _CITY_FIELDS.items():
             idx = [
                 (int(r["id"]), r["doc"])
-                for r in t2.search_indexed_df(
-                    _CITY_Q, query_field=fname, limit=6, nprobe=2
+                for r in t.search_indexed_df(
+                    qv, query_field=fname, limit=6, nprobe=2
                 ).collect()
             ]
             exact = [
                 (int(r["id"]), r["doc"])
-                for r in t2.search_df(
-                    _CITY_Q, query_field=fname, limit=6
+                for r in t.search_df(
+                    qv, query_field=fname, limit=6
                 ).collect()
             ]
             # the reference's pre/post-rebuild agreement, per metric
@@ -563,6 +528,48 @@ def knn_metric_ordering_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).orderBy("metric", "rank")
     finally:
         _shutil.rmtree(work, ignore_errors=True)
+
+
+def build_city_gate_table(spark: SparkSession, sf_dir: str, work: str):
+    """Run the parity gate's lifecycle on the city fixture under
+    ``work`` — insert, a duplicate-PK insert that must be skipped, one
+    seeded-Lloyd IVF rebuild per metric field — and return ``(table,
+    query_vector)``. The table is a FRESH object, so the served
+    orderings come from the manifest. Shared with bench.py's memoized
+    twin; ``sf_dir`` is unused (the fixture is literal)."""
+    import os as _os
+
+    from vectordb_spark.schema import FieldSchema, FieldType, TableSchema
+    from vectordb_spark.table import Table
+
+    schema = TableSchema(
+        name="cities_dense",
+        fields=[
+            FieldSchema(name="id", field_type=FieldType.INT8, primary_key=True),
+            FieldSchema(name="doc", field_type=FieldType.STRING),
+            *[
+                FieldSchema(
+                    name=fname, field_type=FieldType.VECTOR_FLOAT,
+                    dimension=4, metric=m,
+                )
+                for m, fname in _CITY_FIELDS.items()
+            ],
+        ],
+    )
+    path = _os.path.join(work, "cities_dense")
+    t = Table(spark, schema, path)
+    t._init_storage()
+    recs = [
+        {"id": i, "doc": d, **{f: list(v) for f in _CITY_FIELDS.values()}}
+        for i, d, v in _CITY_ROWS
+    ]
+    t.insert(recs)
+    # duplicate-PK row must be SKIPPED on plain insert
+    # (test.py:59-61, table_segment_mvp.cpp:652-741)
+    t.insert([recs[0]])
+    for fname in _CITY_FIELDS.values():
+        t.rebuild(fname, index_type="IVF", k=2, train="lloyd", rounds=1)
+    return Table(spark, schema, path), _CITY_Q
 
 
 # ------------------------- top principal component (power iteration)

@@ -741,9 +741,9 @@ class Table:
         if pk_field is not None:
             sel.append(F.col(pk_field.name).alias("_pkv"))
             pagg += [F.min("_pkv").alias("_lo"), F.max("_pkv").alias("_hi")]
-        # ... and counts the NULL and wrong-width dense vectors, which
-        # the row path rejects as INVALID_RECORD (a NULL distance would
-        # rank such a row first in every exact knn)
+        # ... and counts the NULL, wrong-width and NULL-element dense
+        # vectors, which the row path rejects as INVALID_RECORD (a NULL
+        # distance would rank such a row first in every exact knn)
         vec_fields = [
             f for f in self.schema.fields
             if f.field_type.is_dense_vector and not f.is_index_field
@@ -753,6 +753,7 @@ class Table:
             for kind, bad in (
                 ("null", v.isNull()),
                 ("width", v.isNotNull() & (F.size(v) != f.dimension)),
+                ("elem", F.exists(v, lambda x: x.isNull())),
             ):
                 sel.append(bad.cast("int").alias(f"_v{kind}{i}"))
                 pagg.append(F.sum(f"_v{kind}{i}").alias(f"_v{kind}{i}"))
@@ -766,6 +767,11 @@ class Table:
                 raise VectorDBError(
                     "INVALID_RECORD",
                     f"Vector field {f.name} must have dimension {f.dimension}.",
+                )
+            if any(r[f"_velem{i}"] for r in prows):
+                raise VectorDBError(
+                    "INVALID_RECORD",
+                    f"Vector field {f.name} must not hold NULL elements.",
                 )
         pcounts = sorted((int(r["_pid"]), int(r["c"])) for r in prows)
         # None when the batch holds no non-NULL key: nothing can
@@ -850,7 +856,8 @@ class Table:
         name = f"add_{meta['version'] + 1}"
         st, n = self._write_segment_observed(inserted_df, name)
         self._commit(meta, meta["files"], {name: (st, n)}, start + total)
-        return {"inserted": n, "skipped": 0}
+        # skipped = batch duplicates + PK conflicts, as the row path counts
+        return {"inserted": n, "skipped": total - n}
 
     def _embed_index_field(self, df: DataFrame, fld: FieldSchema) -> DataFrame:
         src = self.index_sources.get(fld.name)
@@ -887,6 +894,11 @@ class Table:
                     raise VectorDBError(
                         "INVALID_RECORD",
                         f"Vector field {f.name} must have dimension {f.dimension}.",
+                    )
+                if any(x is None for x in v):
+                    raise VectorDBError(
+                        "INVALID_RECORD",
+                        f"Vector field {f.name} must not hold NULL elements.",
                     )
                 vals[f.name] = [float(x) for x in v]
             elif ft.is_sparse_vector:
