@@ -1,11 +1,19 @@
 """Generate PLANS.md: formatted physical plans for representative
 queries, with the scale-relevant features called out. Run:
     python scripts/gen_plans.py
+
+The output depends only on the code: whatever ``SPARK_GRAFT_CPUS``
+says, the session plans with 32 shuffle partitions and a default
+parallelism of 32 (the width of the testdata readers' rebalance), and
+Spark's process-global ``plan_id=`` and ``#NNN`` expression ids are
+renumbered in order of appearance within each plan. Two runs of one
+commit write the same file.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -15,6 +23,8 @@ from vectordb_spark.plans.audit import plan_of
 from vectordb_spark.queries import all_queries
 
 SF = "/root/testdata/sf0.001"
+# the shuffle and rebalance width the committed plans show
+SHUFFLE_PARTITIONS = 32
 
 SHOWCASE = {
     "t1_knn_l2": (
@@ -188,19 +198,39 @@ SHOWCASE = {
 }
 
 
+def stable_ids(plan: str) -> str:
+    """``plan`` with its ``plan_id=`` and ``#NNN`` ids renumbered from 0
+    in order of appearance: the raw numbers count every plan the
+    process built before this one."""
+    for prefix in ("plan_id=", "#"):
+        ids: dict[str, int] = {}
+        plan = re.sub(
+            re.escape(prefix) + r"(\d+)",
+            lambda m: f"{prefix}{ids.setdefault(m.group(1), len(ids))}",
+            plan,
+        )
+    return plan
+
+
 def main() -> None:
-    spark = get_spark("plans")
+    spark = get_spark(
+        "plans",
+        shuffle_partitions=SHUFFLE_PARTITIONS,
+        extra_conf={"spark.default.parallelism": str(SHUFFLE_PARTITIONS)},
+    )
     qs = all_queries()
     out = [
         "# PLANS — physical plans of representative queries",
         "",
         "Generated by `python scripts/gen_plans.py` (Spark "
-        f"{spark.version}, sf0.001 inputs; plan shapes are SF-independent).",
+        f"{spark.version}, sf0.001 inputs; plan shapes are SF-independent;",
+        f"{SHUFFLE_PARTITIONS} shuffle partitions; `plan_id=` and `#NNN` ids "
+        "renumbered per plan in order of appearance).",
         "Assertions over these properties run in `tests/test_plans.py`.",
         "",
     ]
     for name, note in SHOWCASE.items():
-        plan = plan_of(qs[name](spark, SF))
+        plan = stable_ids(plan_of(qs[name](spark, SF)))
         out.append(f"## {name}")
         out.append("")
         out.append(note)

@@ -169,6 +169,50 @@ def test_rest_error_envelopes(base_url):
     assert "bitwise" in out["message"]
 
 
+def test_malformed_record_values_are_400(base_url):
+    """A value that is not a number where one is declared, or an integer
+    outside its declared width, is INVALID_RECORD (HTTP 400) and writes
+    nothing; it used to escape as a ValueError (HTTP 500), or reach the
+    stored column unchecked."""
+    code, out = _call(base_url, "POST", "/api/load", {"name": "valdb"})
+    assert code == 200, out
+    schema = {
+        "name": "Vals",
+        "fields": [
+            {"name": "id", "dataType": "BIGINT", "primaryKey": True},
+            {"name": "small", "dataType": "TINYINT"},
+            {"name": "mid", "dataType": "INT"},
+            {"name": "v", "dataType": "VECTOR_FLOAT", "dimensions": 2,
+             "metricType": "EUCLIDEAN"},
+        ],
+    }
+    code, out = _call(base_url, "POST", "/api/valdb/schema/tables", schema)
+    assert code == 200, out
+    good = {"id": 1, "small": 127, "mid": -(2**31), "v": [1.0, 2.0]}
+    for bad, field in [
+        ({"v": [1.0, "abc"]}, "v"),
+        ({"id": "x"}, "id"),
+        ({"small": 128}, "small"),
+        ({"small": -129}, "small"),
+        ({"mid": 2**31}, "mid"),
+        ({"id": 2**63}, "id"),
+    ]:
+        code, out = _call(
+            base_url, "POST", "/api/valdb/data/insert",
+            {"table": "Vals", "data": [{**good, **bad}]},
+        )
+        assert code == 400, (bad, out)
+        assert f"Field {field} " in out["message"], (bad, out)
+    code, out = _call(
+        base_url, "POST", "/api/valdb/data/insert", {"table": "Vals", "data": [good]}
+    )
+    assert code == 200 and out["result"] == {"inserted": 1, "skipped": 0}, out
+    code, out = _call(
+        base_url, "POST", "/api/valdb/data/get", {"table": "Vals"}
+    )
+    assert code == 200 and out["result"] == [good], out
+
+
 def test_vector_scale_capacity_parity(base_url):
     # reference vectorScale (web_controller.hpp:120-122): load with a
     # tiny capacity, overflow returns the reference's 500 + error text

@@ -11,6 +11,7 @@ import os
 from unittest import mock
 
 import numpy as np
+import pyarrow as pa
 import pytest
 
 from vectordb_spark import serving
@@ -103,7 +104,7 @@ def _jobs(spark, fn):
 
 @contextlib.contextmanager
 def _spark_path():
-    with mock.patch.object(serving, "_snapshot", lambda table: None):
+    with mock.patch.object(serving, "_snapshot", lambda table, meta=None: None):
         yield
 
 
@@ -394,3 +395,113 @@ def test_insert_df_reply_counts_skipped_rows(spark, tmp_path):
         t.insert([{"id": 3, "vec": [0.0, 0.0], "cat": 0}])
         replies.append(write(t))
     assert replies == [{"inserted": 1, "skipped": 2}] * 2
+
+
+def _build_with_nulls(spark, db, metric: str, name: str):
+    """``_build`` plus an ``insert_df`` batch whose scalar columns hold
+    NULLs, which only that route can store."""
+    t = _build(spark, db, metric, name)
+    rng = np.random.default_rng(11)
+    rows = [
+        (r["id"], r["vec"], None if r["id"] % 3 else r["cat"],
+         None if r["id"] % 4 == 1 else r["score"], r["f"], r["flag"],
+         None if r["id"] % 5 == 2 else r["tag"], json.dumps(r["meta"]),
+         (r["loc"]["latitude"], r["loc"]["longitude"]))
+        for r in _records(range(120, 150), rng)
+    ]
+    declared = t.schema.to_spark_schema()
+    nullable = type(declared)([type(f)(f.name, f.dataType, True) for f in declared])
+    t.insert_df(spark.createDataFrame(rows, nullable))
+    return t
+
+
+def _row_path_ops(t) -> list[dict]:
+    """One sequence of row-path writes, with its replies."""
+    rng = np.random.default_rng(13)
+    fresh = _records(range(200, 230), rng)
+    dup = {**fresh[3], "score": 0.0}
+    return [
+        # an in-batch duplicate and an existing key are skipped
+        t.insert(fresh + [dup] + _records([5], rng)),
+        # a point upsert replacing keys of three segments, plus new keys
+        # (the last of a duplicated batch key wins)
+        t.insert(_records([10, 47, 201, 300, 300, 301], rng), upsert=True),
+        t.delete(primary_keys=[1, 2, 200, 90, 999]),
+        # three-valued logic over the NULL-valued batch
+        t.delete(filter="cat = 1 OR tag = 'red'"),
+        t.delete(filter="NOT (score > 0.5) AND id >= 120"),
+        # every remaining row of the fresh insert: its segment drops out
+        t.delete(filter="id >= 200 AND id < 230"),
+        t.insert([{**r, "vec": [0.0] * DIM} for r in _records([400, 401], rng)]),
+    ]
+
+
+def _state(t, v0: int) -> dict:
+    meta = t._load_meta()
+    rows = sorted(
+        (r.asDict(recursive=True) for r in t.df().collect()),
+        key=lambda r: r["_row_id"],
+    )
+    feed = sorted(
+        json.dumps(_bits(r.asDict(recursive=True)), sort_keys=True)
+        for r in t.changes(v0, update_preimages=True).collect()
+    )
+    keys = ("version", "next_row_id", "row_count", "files", "segment_stats",
+            "segment_rows", "mutation_seq")
+    past = sorted(r["id"] for r in t.df(version=v0 + 3).select("id").collect())
+    return {"rows": _bits(rows), "changes": feed, "past": past,
+            **{k: meta.get(k) for k in keys}}
+
+
+@pytest.mark.parametrize("metric", ["EUCLIDEAN", "DOT_PRODUCT", "COSINE"])
+def test_row_path_writes_match_spark(spark, db, metric):
+    """Inserts, upserts and deletes commit from the driver with zero
+    Spark jobs and leave the table, its manifest and its changefeed
+    exactly as the Spark path leaves them."""
+    served = _build_with_nulls(spark, db, metric, f"rw_{metric.lower()}")
+    with _spark_path():
+        spark_t = _build_with_nulls(spark, db, metric, f"rw_{metric.lower()}_spark")
+    v0 = served._load_meta()["version"]
+    assert spark_t._load_meta()["version"] == v0
+    replies, jobs = _jobs(spark, lambda: _row_path_ops(served))
+    assert jobs == 0, "a driver-side write ran Spark jobs"
+    with _spark_path():
+        ref_replies, ref_jobs = _jobs(spark, lambda: _row_path_ops(spark_t))
+    assert ref_jobs > 0
+    assert replies == ref_replies
+    assert replies[0] == {"inserted": 30, "skipped": 2}
+    assert replies[1] == {"inserted": 5, "skipped": 0}
+    assert all(r["deleted"] > 0 for r in replies[2:6])
+    got, want = _state(served, v0), _state(spark_t, v0)
+    assert got.pop("rows") == want.pop("rows")
+    assert got == want
+    assert not any(f.startswith("cowstage_") for f in os.listdir(served.path))
+
+
+def test_write_seeds_the_cache(spark, db):
+    """The segments a write commits enter the cache, so the next knn
+    decodes nothing — the rewritten base included."""
+    t = _build(spark, db, "EUCLIDEAN", "seeded")
+    q = [0.5] * DIM
+    t.query(query_vector=q, limit=3)
+    for write in (
+        lambda: t.delete(primary_keys=[4, 50, 100]),
+        lambda: t.insert(_records([500, 501], np.random.default_rng(2))),
+        lambda: t.insert(_records([6, 502], np.random.default_rng(3)), upsert=True),
+    ):
+        write()
+        with mock.patch.object(serving, "_read_segment", wraps=serving._read_segment) as read:
+            _assert_parity(spark, lambda: t.query(query_vector=q, limit=5, with_distance=True))
+        assert read.call_count == 0
+        assert _cached_dirs(t) == set(t._load_meta()["files"])
+
+
+def test_segment_write_replaces_a_reused_dir(tmp_path):
+    """A write to a dir name an earlier attempt left behind replaces it:
+    one part file, under a new name each time."""
+    rows = pa.table({"id": [1, 2]})
+    first = serving.write_segment(str(tmp_path), "add_1", rows)
+    second = serving.write_segment(str(tmp_path), "add_1", rows)
+    assert first != second
+    assert os.listdir(tmp_path / "add_1") == [second]
+    assert os.listdir(tmp_path) == ["add_1"]

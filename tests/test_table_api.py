@@ -4,8 +4,12 @@
 
 from __future__ import annotations
 
+import contextlib
+from unittest import mock
+
 import pytest
 
+from vectordb_spark import serving
 from vectordb_spark.catalog import Warehouse
 from vectordb_spark.embedding import MockEmbedder
 from vectordb_spark.schema import VectorDBError
@@ -828,14 +832,26 @@ def test_cow_delete_table_path_with_space(spark, tmp_path):
     assert t.df().count() == 28
 
 
-def test_cow_multi_segment_rewrite_is_one_write_job(spark, tmp_path):
+@contextlib.contextmanager
+def _write_path(kind: str):
+    """Row-path writes on the driver (serving.py's Arrow commit, the
+    default for these unpartitioned tables) or forced onto Spark."""
+    if kind == "driver":
+        yield
+        return
+    with mock.patch.object(serving, "_snapshot", lambda table, meta=None: None):
+        yield
+
+
+@pytest.mark.parametrize("path", ["driver", "spark"])
+def test_cow_multi_segment_rewrite_is_one_write_job(spark, tmp_path, path):
     """VERDICT r11 "what's wrong" #1/#2: rewriting k matched segments
     must not run k serial Spark jobs (a scattered-key mutation over a
     10k-segment base would run thousands). The whole COW delete —
     match-count pass, ONE partitionBy write for every rewritten
     segment, one staging stats batch — is bounded by a CONSTANT job
     count independent of k (pre-fix: 8 matched segments cost ~17 jobs;
-    the bound below fails that plan)."""
+    the bound below fails that plan). Pinned on both write paths."""
     sc = spark.sparkContext
 
     def jobs_for_delete(tag, n_matched):
@@ -843,14 +859,15 @@ def test_cow_multi_segment_rewrite_is_one_write_job(spark, tmp_path):
             spark, tmp_path / f"cowjobs_{tag}",
             n_segments=20, rows_per=10, step=100,
         )
-        group = f"cow-one-job-pin-{tag}"
+        group = f"cow-one-job-pin-{tag}-{path}"
         sc.setJobGroup(group, "job-count pin")
         try:
             # one key per matched segment, always below the
             # consolidation crossover (<= 8/20 of the bytes)
-            res = t.delete(
-                primary_keys=[s * 100 + 5 for s in range(n_matched)]
-            )
+            with _write_path(path):
+                res = t.delete(
+                    primary_keys=[s * 100 + 5 for s in range(n_matched)]
+                )
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         assert res["deleted"] == n_matched
@@ -1010,12 +1027,14 @@ def test_overlapping_upserts_preserve_segment_structure(spark, tmp_path):
         assert all(rows[k] == b for k in range(lo - 10, lo))
 
 
-def test_pre_cache_manifest_backfills_segment_rows_in_one_job(spark, tmp_path):
+@pytest.mark.parametrize("path", ["driver", "spark"])
+def test_pre_cache_manifest_backfills_segment_rows_in_one_job(spark, tmp_path, path):
     """r12: a manifest written before the segment_rows cache existed
     backfills row counts for ALL candidate segments in ONE zero-column
     count job (pre-fix risk: one serial footer job per segment — a
     10k-segment legacy table's first mutation would run 10k jobs),
-    and the backfilled counts commit back to the manifest."""
+    and the backfilled counts commit back to the manifest. The driver
+    path backfills from the decoded segments, with no job."""
     t = _cow_fixture_table(
         spark, tmp_path / "legacyrows", n_segments=8, rows_per=10, step=100
     )
@@ -1026,10 +1045,11 @@ def test_pre_cache_manifest_backfills_segment_rows_in_one_job(spark, tmp_path):
     t._save_meta(meta)
 
     sc = spark.sparkContext
-    group = "rows-backfill-pin"
+    group = f"rows-backfill-pin-{path}"
     sc.setJobGroup(group, "backfill job-count pin")
     try:
-        res = t.delete(primary_keys=[s * 100 + 5 for s in range(3)])
+        with _write_path(path):
+            res = t.delete(primary_keys=[s * 100 + 5 for s in range(3)])
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert res["deleted"] == 3

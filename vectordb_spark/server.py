@@ -24,8 +24,13 @@ Cache invalidation: an entry is keyed by the table path, the segment
 dir name and that dir's data-file names (Spark part names carry a
 per-write UUID, so a reused dir name never matches an old entry); each
 request drops the entries of dirs its manifest no longer lists.
-Writes, index searches and the DataFrame surface always run on Spark —
-the SAME engine serves the 100 TB batch path and the API.
+Small REST writes — ``/data/insert`` (upserts included) and
+``/data/delete`` — commit from the driver too on a table the tier
+serves: pyarrow writes the new segments and the manifest commit is the
+Spark path's, with zero Spark jobs; a delete filter the pyarrow target
+cannot match exactly runs on Spark. CSV loads, index builds and
+searches and the DataFrame surface always run on Spark — the SAME
+engine serves the 100 TB batch path and the API.
 
 Routes (reference web_controller.hpp line refs):
   GET    /                                           (:62, text/plain)

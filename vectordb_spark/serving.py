@@ -1,12 +1,30 @@
-"""Driver-resident serving tier for the REST read routes.
+"""Driver-resident serving tier for the REST routes.
 
 ``Table.query`` (knn, filtered knn) and ``Table.get`` answer from
 in-memory Arrow copies of the live segments instead of building a
 Spark plan over parquet — the reference's in-memory segment with a
 brute-force scan (SURVEY.md §1.1). At serving sizes a Spark request
 costs hundreds of milliseconds of planning and job scheduling, while
-the scan itself takes a few. Everything else — ``search_df``,
-``scan_df``, the indexes and every DataFrame surface — stays on Spark.
+the scan itself takes a few. The row-path writes — ``Table.insert``
+(with its point upsert) and ``Table.delete`` — commit from the same
+copies: the reference's insert appends to the in-memory segment
+(table_segment_mvp.cpp:455-814). Everything else — ``insert_df``,
+``search_df``, ``scan_df``, the indexes, compaction and every
+DataFrame surface — stays on Spark.
+
+One eligibility rule, ``servable``, decides for reads and writes
+alike: an unpartitioned table without sparse vector fields, within
+``CACHE_BYTES``, whose segments hold the declared types
+(``_snapshot``). A write on such a table checks PK conflicts against
+the range-pruned candidates' cached key columns, writes each new
+segment as one zstd parquet file with ``pyarrow`` (``write_segment``),
+records the same manifest stats Spark's write would, commits through
+the unchanged ``Table._commit``, and then seeds the cache with what it
+wrote (``seed``), so the next request decodes nothing. A delete filter
+or key list the pyarrow target cannot match exactly sends the whole
+mutation to Spark before anything is written. The stored rows are the
+Spark path's to the bit: FLOAT values round to float32 as Spark's cast
+does, and COSINE vectors are normalized with ``l2_normalize``'s fold.
 
 Results are bit-identical to the Spark path:
 
@@ -184,7 +202,15 @@ def _read_segment(seg_dir: str, files: tuple[str, ...], schema: TableSchema) -> 
                 want.type,
             )
         )
-    rows = pa.Table.from_arrays(columns, schema=target).combine_chunks()
+    return _segment(pa.Table.from_arrays(columns, schema=target), schema)
+
+
+def _segment(rows: pa.Table, schema: TableSchema) -> Segment:
+    """The served form of ``rows`` (in ``_arrow_schema`` order): one
+    chunk per column, a float32 matrix view per dense field and the
+    ``_row_id`` array — or an unservable Segment for a NULL, off-width
+    or NULL-element vector or a NULL ``_row_id``."""
+    rows = rows.combine_chunks()
     vectors = {}
     for f in schema.fields:
         if not f.field_type.is_dense_vector:
@@ -219,18 +245,27 @@ def _decoded_bytes(schema: TableSchema, meta: dict) -> int:
     return max(meta["row_count"] * width, on_disk)
 
 
-def _snapshot(table) -> list[Segment] | None:
-    """The live segments of ``table``'s current manifest, decoded, or
-    None when the tier does not serve it."""
-    if table.partition_by or any(
-        f.field_type.is_sparse_vector for f in table.schema.fields
-    ):
-        return None
-    meta = table._load_meta()
-    if (
-        meta.get("row_count") is None
-        or _decoded_bytes(table.schema, meta) > CACHE.max_bytes
-    ):
+def servable(table, meta: dict) -> bool:
+    """The tier's one layout rule, shared by the reads and the row-path
+    writes: an unpartitioned table without sparse vector fields whose
+    manifest counts its rows and whose live rows decode to at most
+    ``CACHE_BYTES``. (Its segments must also hold the declared types,
+    which only reading them shows: ``_snapshot``.)"""
+    return (
+        not table.partition_by
+        and not any(f.field_type.is_sparse_vector for f in table.schema.fields)
+        and meta.get("row_count") is not None
+        and _decoded_bytes(table.schema, meta) <= CACHE.max_bytes
+    )
+
+
+def _snapshot(table, meta: dict | None = None) -> dict[str, Segment] | None:
+    """The live segments of ``meta`` (default: ``table``'s current
+    manifest), decoded, by dir name — or None when the tier does not
+    serve the table."""
+    if meta is None:
+        meta = table._load_meta()
+    if not servable(table, meta):
         return None
     root = os.path.realpath(table.path)
     keys = []
@@ -241,7 +276,7 @@ def _snapshot(table) -> list[Segment] | None:
                 (root, name, tuple(sorted(n for n in names if not n.startswith(("_", ".")))))
             )
         CACHE.retain(root, set(keys))
-        segs = []
+        segs = {}
         for key in keys:
             seg = CACHE.get(key)
             if seg is None:
@@ -250,7 +285,7 @@ def _snapshot(table) -> list[Segment] | None:
                 )
             if seg.rows is None:
                 return None
-            segs.append(seg)
+            segs[key[1]] = seg
     except FileNotFoundError:
         # a segment vacuumed after the manifest was read: Spark reports it
         return None
@@ -284,6 +319,20 @@ def _mask(ast, rows: pa.Table) -> np.ndarray:
     return pc.fill_null(to_arrow(ast, rows), False).to_numpy(zero_copy_only=False)
 
 
+def rows_matching(
+    rows: pa.Table, ast, pk: str | None = None, keys: pa.Array | None = None
+) -> np.ndarray:
+    """Which of ``rows`` pass ``ast`` and, when ``keys`` (a
+    ``pk_value_set``) is given, hold a ``pk`` in it: the row predicate
+    of ``get`` and of a delete. A NULL result does not match."""
+    keep = np.ones(rows.num_rows, dtype=bool)
+    if ast is not None:
+        keep &= _mask(ast, rows)
+    if keys is not None:
+        keep &= pk_in(rows, pk, keys)
+    return keep
+
+
 def _gather(schema: pa.Schema, segs: list[Segment], seg: np.ndarray, idx: np.ndarray) -> pa.Table:
     """Row ``idx[i]`` of segment ``seg[i]``, for every i, in order."""
     parts, where = [], []
@@ -312,6 +361,7 @@ def query(table, field, q: list[float], ast, limit: int) -> pa.Table | None:
     segs = _snapshot(table)
     if segs is None:
         return None
+    segs = list(segs.values())
     post = references_distance(ast)
     qv = np.asarray(q, dtype=np.float64)
     picks = []
@@ -335,7 +385,7 @@ def query(table, field, q: list[float], ast, limit: int) -> pa.Table | None:
     return rows.append_column(DISTANCE_COL, pa.array(d[order], pa.float64()))
 
 
-def _pk_value_set(pk, keys: list) -> pa.Array | None:
+def pk_value_set(pk, keys: list) -> pa.Array | None:
     """The PK list as an Arrow value set Spark's ``isin`` would match
     identically, or None (mixed or out-of-range types go to Spark)."""
     if pk.field_type.is_int and all(
@@ -348,6 +398,13 @@ def _pk_value_set(pk, keys: list) -> pa.Array | None:
     return None
 
 
+def pk_in(rows: pa.Table, pk: str, keys: pa.Array) -> np.ndarray:
+    """Which rows' ``pk`` is in ``keys`` (a ``pk_value_set``); a NULL
+    key matches nothing."""
+    col = pc.cast(rows.column(pk), keys.type)
+    return pc.fill_null(pc.is_in(col, value_set=keys), False).to_numpy(zero_copy_only=False)
+
+
 def get(table, ast, primary_keys: list | None, skip: int, limit: int) -> pa.Table | None:
     """Rows passing ``ast`` (and in ``primary_keys``, when given) in
     ``_row_id`` order, ``skip`` rows skipped, at most ``limit`` kept.
@@ -357,28 +414,123 @@ def get(table, ast, primary_keys: list | None, skip: int, limit: int) -> pa.Tabl
         or references_distance(ast)
     ):
         return None
-    keys = None
+    pk = keys = None
     if primary_keys:
-        pk = table.schema.primary_key
-        keys = _pk_value_set(pk, primary_keys)
+        field = table.schema.primary_key
+        keys = pk_value_set(field, primary_keys)
         if keys is None:
             return None
+        pk = field.name
     segs = _snapshot(table)
     if segs is None:
         return None
+    segs = list(segs.values())
     picks = []
     try:
         for k, s in enumerate(segs):
-            keep = np.ones(s.rows.num_rows, dtype=bool)
-            if ast is not None:
-                keep &= _mask(ast, s.rows)
-            if keys is not None:
-                col = pc.cast(s.rows.column(pk.name), keys.type)
-                keep &= pc.is_in(col, value_set=keys).to_numpy(zero_copy_only=False)
-            idx = np.flatnonzero(keep)
+            idx = np.flatnonzero(rows_matching(s.rows, ast, pk, keys))
             picks.append((s.row_ids[idx], np.full(len(idx), k), idx))
     except ArrowUnsupported:
         return None
     rid, seg, idx = _concat(picks, (np.int64, np.int64, np.int64))
     order = np.argsort(rid, kind="stable")[skip : skip + limit]
     return _gather(_arrow_schema(table.schema), segs, seg[order], idx[order])
+
+
+# ------------------------------------------------------- row-path writes
+
+
+def _l2_normalize(vectors: np.ndarray) -> np.ndarray:
+    """``functions.distance.l2_normalize`` over float32 rows: the norm
+    is the square root of the left fold from +0.0 of the squares in
+    double, each element is divided by it in double (and kept as is
+    when the norm is 0.0), and the result rounds to float32."""
+    x = vectors.astype(np.float64)
+    acc = np.zeros(len(x))
+    for col in x.T:
+        acc += col * col
+    norm = np.sqrt(acc)[:, None]
+    with np.errstate(all="ignore"):
+        out = np.divide(x, norm, out=x.copy(), where=norm != 0.0)
+    return out.astype(np.float32)
+
+
+def arrow_rows(schema: TableSchema, rows: list[tuple]) -> pa.Table | None:
+    """``Table.insert``'s validated row tuples (the declared fields, then
+    ``_row_id``) as one Arrow table in ``_arrow_schema`` order, holding
+    what the Spark path stores: FLOAT values and vector elements rounded
+    to float32, COSINE vectors normalized at ingest. None when a value
+    does not fit the declared type (a lone surrogate in a string, an
+    embedder vector of another width): the Spark path stores those as
+    it always has."""
+    target = _arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(target)
+    arrays = []
+    try:
+        for f, vals, want in zip(schema.fields, columns, target):
+            if f.field_type.is_dense_vector:
+                with np.errstate(over="ignore"):
+                    v = np.array(vals, dtype=np.float64).astype(np.float32)
+                v = v.reshape(len(vals), f.dimension)
+                if f.metric == "COSINE":
+                    v = _l2_normalize(v)
+                offsets = np.arange(0, v.size + 1, f.dimension, dtype=np.int32)
+                arr = pa.ListArray.from_arrays(
+                    pa.array(offsets), pa.array(v.ravel()), type=want.type
+                )
+            elif f.field_type == FieldType.GEO_POINT:
+                arr = pa.StructArray.from_arrays(
+                    [pa.array([g[i] for g in vals], pa.float64()) for i in range(2)],
+                    fields=list(want.type),
+                )
+            elif f.field_type == FieldType.FLOAT:
+                with np.errstate(over="ignore"):
+                    arr = pa.array(np.array(vals, dtype=np.float64).astype(np.float32))
+            else:
+                arr = pa.array(list(vals), want.type)
+            arrays.append(arr)
+    except (pa.ArrowException, UnicodeEncodeError, ValueError):
+        return None
+    arrays.append(pa.array(list(columns[-1]), pa.int64()))  # _row_id
+    return pa.Table.from_arrays(arrays, schema=target)
+
+
+def write_segment(root: str, name: str, rows: pa.Table) -> str:
+    """Write ``rows`` as segment dir ``name`` of the table at ``root``:
+    one zstd part file (the session's codec) whose name carries a
+    per-write UUID, as Spark's part names do, which is returned. The
+    file goes into a fresh staging dir that is then renamed into place,
+    replacing whatever an earlier failed attempt left under ``name``
+    (Spark's overwrite), so a retried write never leaves two part
+    files."""
+    import shutil
+    import uuid
+
+    import pyarrow.parquet as pq
+
+    part = f"part-{uuid.uuid4()}.zstd.parquet"
+    # the staging prefix vacuum reclaims after a crash
+    stage = os.path.join(root, f"cowstage_{name}_{uuid.uuid4().hex}")
+    os.makedirs(stage)
+    try:
+        # vector elements seldom repeat: a dictionary attempt over them
+        # doubles the write time and then falls back anyway
+        dictionary = [f.name for f in rows.schema if not pa.types.is_list(f.type)]
+        pq.write_table(
+            rows, os.path.join(stage, part), compression="zstd", use_dictionary=dictionary
+        )
+        final = os.path.join(root, name)
+        shutil.rmtree(final, ignore_errors=True)
+        os.rename(stage, final)
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
+    return part
+
+
+def seed(table, written: dict[str, tuple[str, pa.Table]]) -> None:
+    """Enter committed segments (dir name -> (part file, rows)) into the
+    cache under the keys the next ``_snapshot`` lists, so the request
+    after a write does not decode what the write had in hand."""
+    root = os.path.realpath(table.path)
+    for name, (part, rows) in written.items():
+        CACHE.put((root, name, (part,)), _segment(rows, table.schema))

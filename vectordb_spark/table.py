@@ -46,6 +46,8 @@ try:  # POSIX advisory file locks (Linux/macOS); absent on Windows
 except ImportError:  # pragma: no cover
     fcntl = None  # type: ignore[assignment]
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
@@ -645,6 +647,9 @@ class Table:
             rows.append(tuple(vals[f.name] for f in self.schema.fields) + (next_row_id,))
             next_row_id += 1
         rows = [r for r in rows if r is not None]
+        # the driver-resident copy of the table (serving.py), when the
+        # tier serves it: the write then runs without a Spark job
+        segs = serving._snapshot(self, meta)
 
         # PKs already in the table
         existing_pks: set = set()
@@ -656,25 +661,43 @@ class Table:
             # segments whose manifest min/max overlaps the batch's key
             # range
             pk_bounds = self._pk_list_bounds(pks)
-            existing = (
-                self.scan_df(extra_bounds=pk_bounds)
-                .where(F.col(pk_field.name).isin(pks))
-                .select(pk_field.name)
-                .collect()
-            )
-            existing_pks = {r[0] for r in existing}
+            keys = serving.pk_value_set(pk_field, pks)
+            if segs is not None and keys is not None:
+                for f in self._candidates(meta, pk_bounds):
+                    seg = segs[f].rows
+                    hits = seg.column(pk_field.name).filter(
+                        serving.pk_in(seg, pk_field.name, keys)
+                    )
+                    existing_pks.update(hits.to_pylist())
+            else:
+                segs = None
+                existing = (
+                    self.scan_df(extra_bounds=pk_bounds)
+                    .where(F.col(pk_field.name).isin(pks))
+                    .select(pk_field.name)
+                    .collect()
+                )
+                existing_pks = {r[0] for r in existing}
         if pk_field is not None and existing_pks and not upsert:
             before = len(rows)
             pk_idx = [f.name for f in self.schema.fields].index(pk_field.name)
             rows = [r for r in rows if r[pk_idx] not in existing_pks]
             skipped += before - len(rows)
+        replace = bool(pk_field is not None and existing_pks and upsert)
+
+        batch = None if segs is None else serving.arrow_rows(self.schema, rows)
+        if batch is not None:
+            self._insert_arrow(
+                meta, segs, batch, next_row_id, pk_bounds if replace else None
+            )
+            return {"inserted": len(rows), "skipped": skipped}
 
         new_df = self.spark.createDataFrame(
             rows, self.schema.to_spark_schema(with_row_id=True)
         )
         new_df = self._apply_ingest_transforms(new_df)
 
-        if pk_field is not None and existing_pks and upsert:
+        if replace:
             # replaced PKs leave via the segment-granular COW path
             # (only their segments rewrite); the batch lands as one
             # add segment in the same atomic commit. The key list is
@@ -690,6 +713,29 @@ class Table:
             added = {name: self._write_segment_observed(new_df, name)}
             self._commit(meta, meta["files"], added, next_row_id)
         return {"inserted": len(rows), "skipped": skipped}
+
+    def _insert_arrow(
+        self, meta: dict, segs: dict, batch: pa.Table, next_row_id: int,
+        replace_bounds: dict | None,
+    ) -> None:
+        """``insert``'s driver-side commit: with ``replace_bounds`` (an
+        upsert that replaces keys) the batch's keys first leave the
+        candidate segments (``_arrow_rewrite``), as in ``_cow_upsert``;
+        the batch lands as one ``add_`` segment in the same commit, and
+        every written segment seeds the serving cache."""
+        keep, added, written = meta["files"], {}, {}
+        if replace_bounds is not None:
+            pk = self.schema.primary_key.name
+            keys = batch.column(pk).combine_chunks()
+            self._bump_mutation_seq(meta)
+            matches = self._arrow_matches(
+                meta, segs, replace_bounds, lambda rows: serving.pk_in(rows, pk, keys)
+            )
+            keep, added, _removed = self._arrow_rewrite(meta, segs, matches, written)
+        name = f"add_{meta['version'] + 1}"
+        added[name] = self._write_arrow(name, batch, written)
+        self._commit(meta, keep, added, next_row_id)
+        serving.seed(self, written)
 
     @_writer_locked
     def insert_df(self, df: DataFrame, *, upsert: bool = False) -> dict:
@@ -900,7 +946,7 @@ class Table:
                         "INVALID_RECORD",
                         f"Vector field {f.name} must not hold NULL elements.",
                     )
-                vals[f.name] = [float(x) for x in v]
+                vals[f.name] = [_coerce(float, x, f) for x in v]
             elif ft.is_sparse_vector:
                 vals[f.name] = _validate_sparse(v, f.dimension)
             elif ft == FieldType.GEO_POINT:
@@ -924,9 +970,16 @@ class Table:
             elif ft == FieldType.BOOL:
                 vals[f.name] = bool(v)
             elif ft.is_int:
-                vals[f.name] = int(v)
+                n = _coerce(int, v, f)
+                bits = _INT_BITS[ft]
+                if not -(2 ** (bits - 1)) <= n < 2 ** (bits - 1):
+                    raise VectorDBError(
+                        "INVALID_RECORD",
+                        f"Field {f.name} is out of range for {ft.value}.",
+                    )
+                vals[f.name] = n
             elif ft.is_real:
-                vals[f.name] = float(v)
+                vals[f.name] = _coerce(float, v, f)
             else:
                 vals[f.name] = str(v)
         if self.embedder is not None:
@@ -981,12 +1034,12 @@ class Table:
             return pk.name
         return None
 
-    def _stat_agg_exprs(self, columns) -> tuple[list[str], str | None, list]:
-        """(int stat columns, string-PK column, aggregate expressions)
-        for the per-segment stats contract — shared by the COW staging
-        batch pass and the observed segment write so the two can never
-        drift. Integer-only (plus the exact string PK) on purpose:
-        float min/max is unreliable under NaN."""
+    def _stat_columns(self, columns) -> tuple[list[str], str | None]:
+        """(int stat columns, string-PK column) of the per-segment stats
+        contract — shared by the COW staging batch pass, the observed
+        segment write and the driver-side writes (``_arrow_stats``) so
+        they can never drift. Integer-only (plus the exact string PK)
+        on purpose: float min/max is unreliable under NaN."""
         cols = [
             f.name
             for f in self.schema.fields
@@ -999,7 +1052,12 @@ class Table:
             # the difference between reading the tail and re-reading
             # the table per refresh
             cols.append("_row_id")
-        spk = self._string_stat_pk(columns)
+        return cols, self._string_stat_pk(columns)
+
+    def _stat_agg_exprs(self, columns) -> tuple[list[str], str | None, list]:
+        """``_stat_columns`` plus the Spark aggregate expressions that
+        compute them."""
+        cols, spk = self._stat_columns(columns)
         aggs = [F.count(F.lit(1)).alias("_n")]
         for c in cols:
             aggs += [F.min(c).alias(f"lo_{c}"), F.max(c).alias(f"hi_{c}")]
@@ -1021,6 +1079,28 @@ class Table:
         ):
             stats[spk] = [row["_slo"], row["_shi"]]
         return stats
+
+    def _arrow_stats(self, rows: pa.Table) -> dict[str, list]:
+        """``_stats_from_row`` over an Arrow table: the same min/max of
+        the same columns, computed on the driver."""
+        cols, spk = self._stat_columns(rows.column_names)
+        agg = {}
+        for c in cols:
+            mm = pc.min_max(rows.column(c)).as_py()
+            agg[f"lo_{c}"], agg[f"hi_{c}"] = mm["min"], mm["max"]
+        if spk:
+            mm = pc.min_max(rows.column(spk)).as_py()
+            agg["_slo"], agg["_shi"] = mm["min"], mm["max"]
+        return self._stats_from_row(agg, cols, spk)
+
+    def _write_arrow(
+        self, name: str, rows: pa.Table, written: dict
+    ) -> tuple[dict[str, list], int]:
+        """``_write_segment_observed``'s twin for a row-path write on the
+        driver: ``rows`` becomes segment dir ``name`` and joins
+        ``written`` (for ``serving.seed`` after the commit)."""
+        written[name] = (serving.write_segment(self.path, name, rows), rows)
+        return self._arrow_stats(rows), rows.num_rows
 
     def _write_segment_observed(
         self, df: DataFrame, name: str
@@ -1351,17 +1431,12 @@ class Table:
             raise VectorDBError(
                 "INVALID_PAYLOAD", "Delete requires primaryKeys and/or filter."
             )
-        cond = F.lit(True)
-        if primary_keys:
-            pk_field = self.schema.primary_key
-            if pk_field is None:
-                raise VectorDBError(
-                    "DB_UNEXPECTED_ERROR", f"Primary key not found: {self.schema.name}"
-                )
-            cond = cond & F.col(pk_field.name).isin(primary_keys)
+        pk_field = self.schema.primary_key
+        if primary_keys and pk_field is None:
+            raise VectorDBError(
+                "DB_UNEXPECTED_ERROR", f"Primary key not found: {self.schema.name}"
+            )
         ast = parse_filter(filter, self.field_map())
-        if ast is not None:
-            cond = cond & to_spark_column(ast)
         meta = self._load_meta()
         # segment pruning bounds for the COW rewrite: the filter's
         # conjunctive ranges plus the PK list's min/max
@@ -1369,8 +1444,49 @@ class Table:
         if primary_keys:
             for col, (lo, hi) in self._pk_list_bounds(primary_keys).items():
                 tighten(bounds, col, lo, hi)
+        segs = serving._snapshot(self, meta)
+        if segs is not None:
+            removed = self._delete_arrow(meta, segs, bounds, primary_keys, ast)
+            if removed is not None:
+                return {"deleted": removed}
+        cond = F.lit(True)
+        if primary_keys:
+            cond = cond & F.col(pk_field.name).isin(primary_keys)
+        if ast is not None:
+            cond = cond & to_spark_column(ast)
         self._bump_mutation_seq(meta)
         return {"deleted": self._cow_delete(cond, meta, bounds)}
+
+    def _delete_arrow(
+        self, meta: dict, segs: dict, bounds: dict, primary_keys, ast
+    ) -> int | None:
+        """``_cow_delete`` on the driver over the decoded segments: the
+        same candidates, rows matched by ``serving.rows_matching``, one
+        commit, and the rewritten segments seed the serving cache.
+        None — nothing written — when the key list or the filter is
+        not one the pyarrow target matches exactly."""
+        pk = keys = None
+        if primary_keys:
+            if not isinstance(primary_keys, list):
+                return None
+            keys = serving.pk_value_set(self.schema.primary_key, primary_keys)
+            if keys is None:
+                return None
+            pk = self.schema.primary_key.name
+        if references_distance(ast):
+            return None
+        try:
+            matches = self._arrow_matches(
+                meta, segs, bounds, lambda rows: serving.rows_matching(rows, ast, pk, keys)
+            )
+        except ArrowUnsupported:
+            return None
+        self._bump_mutation_seq(meta)
+        written: dict = {}
+        keep, added, removed = self._arrow_rewrite(meta, segs, matches, written)
+        self._commit(meta, keep, added, meta["next_row_id"])
+        serving.seed(self, written)
+        return removed
 
     def _walk_bytes(self, name: str) -> int:
         total = 0
@@ -1462,12 +1578,7 @@ class Table:
         from urllib.parse import unquote
 
         files = list(meta["files"])
-        stats = meta.get("segment_stats") or {}
-        candidates = (
-            []
-            if bounds is None
-            else [f for f in files if segment_overlaps(stats.get(f), bounds)]
-        )
+        candidates = self._candidates(meta, bounds)
         if not candidates:
             return files, {}, 0
         rows_map = self._candidate_rows(meta, candidates)
@@ -1539,6 +1650,48 @@ class Table:
             return keep, added, sum(matched.values())
         finally:
             shutil.rmtree(staging, ignore_errors=True)
+
+    @staticmethod
+    def _candidates(meta: dict, bounds: dict | None) -> list[str]:
+        """The live segments whose manifest min/max overlaps ``bounds``
+        (every segment for ``{}``, none for None)."""
+        if bounds is None:
+            return []
+        stats = meta.get("segment_stats") or {}
+        return [f for f in meta["files"] if segment_overlaps(stats.get(f), bounds)]
+
+    def _arrow_matches(self, meta: dict, segs: dict, bounds: dict | None, match) -> dict:
+        """``{candidate: bool mask of its matched rows}`` over the
+        decoded segments (``match`` maps an Arrow table to the mask).
+        Nothing is written yet, so an ``ArrowUnsupported`` from any
+        candidate still leaves the whole mutation to Spark."""
+        return {f: match(segs[f].rows) for f in self._candidates(meta, bounds)}
+
+    def _arrow_rewrite(
+        self, meta: dict, segs: dict, matches: dict, written: dict
+    ) -> tuple[list[str], dict[str, tuple[dict, int]], int]:
+        """``_cow_rewrite`` on the driver: each candidate with a match
+        is rewritten to ``cow_{version}_{i}`` with its unmatched rows
+        (or drops out when none is left), the rest stay verbatim; a
+        candidate's row count missing from the manifest is backfilled
+        from its decoded rows, as ``_candidate_rows`` would count it.
+        Returns ``_cow_rewrite``'s (kept segments, added, rows
+        removed)."""
+        if matches:
+            rows_map = meta.setdefault("segment_rows", {})
+            for f in matches:
+                rows_map.setdefault(f, segs[f].rows.num_rows)
+        matched = [f for f, m in matches.items() if m.any()]
+        version = meta["version"] + 1
+        added: dict[str, tuple[dict, int]] = {}
+        for i, f in enumerate(matched):
+            kept = segs[f].rows.filter(~matches[f])
+            if kept.num_rows:
+                name = f"cow_{version}_{i}"
+                added[name] = self._write_arrow(name, kept, written)
+        dropped = set(matched)
+        keep = [f for f in meta["files"] if f not in dropped]
+        return keep, added, sum(int(matches[f].sum()) for f in matched)
 
     def _candidate_rows(
         self, meta: dict, candidates: list[str]
@@ -2870,6 +3023,20 @@ class Table:
     def statistics(self) -> dict:
         """Reference S11 (db_server.cpp:105-119)."""
         return {"totalRecords": self._count(self._load_meta())}
+
+
+_INT_BITS = {FieldType.INT1: 8, FieldType.INT2: 16, FieldType.INT4: 32, FieldType.INT8: 64}
+
+
+def _coerce(kind, v, f: FieldSchema):
+    """``kind(v)`` (int or float) for field ``f``; a value that does not
+    convert is INVALID_RECORD, as every other malformed value is."""
+    try:
+        return kind(v)
+    except (TypeError, ValueError, OverflowError):
+        raise VectorDBError(
+            "INVALID_RECORD", f"Field {f.name} must hold {kind.__name__} values."
+        ) from None
 
 
 class _SkipRecord(Exception):
