@@ -251,8 +251,11 @@ def _process_cas_worker(args):
     """Child-process commit loop WITHOUT the writer lock — simulating a
     writer on a DIFFERENT host, where flock (advisory, host-local)
     gives no protection and only the manifest-version CAS inside
-    _save_meta stands between the writers. Returns (wins, losses)."""
-    path, n_iters = args
+    _save_meta stands between the writers. Every worker's first commit
+    waits at ``barrier`` until all workers hold the same loaded
+    manifest, so the windows overlap however the host schedules them.
+    Returns (wins, losses)."""
+    path, n_iters, barrier = args
     import random
     import sys
     import time
@@ -278,8 +281,12 @@ def _process_cas_worker(args):
     )
     t = Table(None, schema, path)
     wins = losses = 0
-    for _ in range(n_iters):
+    for i in range(n_iters):
         base = t._load_meta()
+        if i == 0:
+            # all workers now hold the same manifest: at most one of
+            # their first commits can win
+            barrier.wait(timeout=120)
         time.sleep(random.random() * 0.01)  # widen the stale window
         base["version"] += 1
         base["next_row_id"] += 1
@@ -318,8 +325,11 @@ def test_cross_host_stale_writer_loses_cleanly(tmp_path):
 
     n_procs, n_iters = 3, 20
     ctx = mp.get_context("spawn")
-    with ctx.Pool(n_procs) as pool:
-        results = pool.map(_process_cas_worker, [(path, n_iters)] * n_procs)
+    with ctx.Manager() as manager, ctx.Pool(n_procs) as pool:
+        barrier = manager.Barrier(n_procs)
+        results = pool.map(
+            _process_cas_worker, [(path, n_iters, barrier)] * n_procs
+        )
     wins = sum(w for w, _ in results)
     losses = sum(l for _, l in results)
     assert wins + losses == n_procs * n_iters

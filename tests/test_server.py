@@ -4,14 +4,17 @@ db_server.cpp / concurrency/test.py)."""
 
 from __future__ import annotations
 
+import contextlib
 import json
 import threading
 import urllib.request
+from unittest import mock
 
 import pytest
 
+from vectordb_spark import serving
 from vectordb_spark.embedding import MockEmbedder
-from vectordb_spark.server import make_server
+from vectordb_spark.server import EngineAPI, make_server
 
 
 @pytest.fixture(scope="module")
@@ -211,6 +214,61 @@ def test_malformed_record_values_are_400(base_url):
         base_url, "POST", "/api/valdb/data/get", {"table": "Vals"}
     )
     assert code == 200 and out["result"] == [good], out
+
+
+@pytest.mark.parametrize("path", ["driver", "spark"])
+def test_wrong_type_primary_keys_are_400(spark, tmp_path, path):
+    """A primary key the PK column cannot be compared with is
+    INVALID_PAYLOAD (HTTP 400) on get and delete, before any Spark job,
+    and deletes nothing: on an INT key "x" used to raise ValueError in
+    get and fail the delete's write job (CAST_INVALID_INPUT), both HTTP
+    500. A key's decimal string still matches its integer key."""
+    api = EngineAPI(spark, str(tmp_path / "wh"))
+    assert api.handle("POST", "/api/load", {"name": "pkdb"}, {})[0] == 200
+    for name, pk_type, keys in (
+        ("IntKeys", "INT", [1, 2, 3]),
+        ("StrKeys", "STRING", ["a", "b", "c"]),
+    ):
+        schema = {"name": name, "fields": [
+            {"name": "id", "dataType": pk_type, "primaryKey": True},
+            {"name": "v", "dataType": "VECTOR_FLOAT", "dimensions": 2,
+             "metricType": "EUCLIDEAN"},
+        ]}
+        code, out = api.handle("POST", "/api/pkdb/schema/tables", schema, {})
+        assert code == 200, out
+        code, out = api.handle("POST", "/api/pkdb/data/insert", {
+            "table": name, "data": [{"id": k, "v": [0.0, 1.0]} for k in keys],
+        }, {})
+        assert code == 200, out
+    sc = spark.sparkContext
+    group = f"wrong-type-pk-{path}"
+    bad = [("IntKeys", "x"), ("IntKeys", "1.5"), ("IntKeys", "02"),
+           ("IntKeys", True), ("IntKeys", [1]), ("IntKeys", 2**64),
+           ("StrKeys", 1)]
+    with (mock.patch.object(serving, "_snapshot", lambda table, meta=None: None)
+          if path == "spark" else contextlib.nullcontext()):
+        sc.setJobGroup(group, "no job before the key check")
+        try:
+            for table, key in bad:
+                for route in ("get", "delete"):
+                    code, out = api.handle(
+                        "POST", f"/api/pkdb/data/{route}",
+                        {"table": table, "primaryKeys": [key]}, {},
+                    )
+                    assert code == 400, (route, table, key, out)
+                    assert "Primary key" in out["message"], out
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        code, out = api.handle("POST", "/api/pkdb/data/get",
+                               {"table": "IntKeys", "primaryKeys": ["1"]}, {})
+        assert code == 200 and [r["id"] for r in out["result"]] == [1], out
+        code, out = api.handle("POST", "/api/pkdb/data/delete",
+                               {"table": "IntKeys", "primaryKeys": ["2"]}, {})
+        assert code == 200 and out["result"] == {"deleted": 1}, out
+    for table, n in (("IntKeys", 2), ("StrKeys", 3)):
+        code, out = api.handle("POST", "/api/pkdb/data/get", {"table": table}, {})
+        assert code == 200 and len(out["result"]) == n, out
 
 
 def test_vector_scale_capacity_parity(base_url):

@@ -269,7 +269,7 @@ def test_fallback_bad_vector_segments_run_spark(spark, tmp_path):
         )
         meta = t._load_meta()
         name = f"add_bad{n}"
-        t._commit(meta, good, {name: t._write_segment_observed(df, name)},
+        t._commit(meta, good, {name: t._write_segment_observed(df, name, meta)},
                   meta["next_row_id"] + 1)
         out, jobs = _jobs(spark, lambda: t.query(
             query_vector=[0.0, 0.0], limit=3, response=["id"]))

@@ -271,7 +271,7 @@ class IncrementalAggView:
         meta = self.table._load_meta()
         v = int(meta["version"])
         self._commit(
-            self._agg(self._prepare(self.table._df_for_files(meta["files"]))),
+            self._agg(self._prepare(self.table._df_for_files(meta["files"], meta))),
             v,
         )
         return v
@@ -736,8 +736,8 @@ class IncrementalJoinAggView:
         self._commit(
             self._agg(
                 self._joined(
-                    self.fact._df_for_files(fmeta["files"]),
-                    self.dim._df_for_files(dmeta["files"]),
+                    self.fact._df_for_files(fmeta["files"], fmeta),
+                    self.dim._df_for_files(dmeta["files"], dmeta),
                 )
             ),
             vf,
@@ -803,7 +803,7 @@ class IncrementalJoinAggView:
             "fact0_segments_total": len(files),
             "fact0_segments_scanned": len(keep),
         }
-        return self.fact._df_for_files(keep)
+        return self.fact._df_for_files(keep, fmeta)
 
     _SIGNED = ("insert", "update_post")
 
@@ -1221,7 +1221,7 @@ class IncrementalTopKView:
         # _load_meta() and the scan must not leak post-v rows
         meta = self.table._load_meta()
         v = int(meta["version"])
-        self._commit(self._cut(self.table._df_for_files(meta["files"])), v)
+        self._commit(self._cut(self.table._df_for_files(meta["files"], meta)), v)
         return v
 
     # ---------------------------------------------------------- refresh

@@ -6,13 +6,25 @@ An index over one field is a manifest entry plus immutable parquet dirs:
 a versioned main dir written by a full (re)build and zero or more delta
 dirs, each written by a refresh over the rows inserted since the last
 build/refresh. The entry records the dirs, the ``_row_id`` watermark
-below which every row is indexed (``indexed_up_to``) and the table's
-``mutation_seq`` at build time. Readers union the main and delta dirs
-(each pruned on its own partition column), drop dead ids with a semi-join
-only when a delete/upsert has committed since the build, and merge the
-segment-pruned unindexed tail. Index work is paid a little at a time as
-the tail grows (the Progressive Indexes pattern); a rebuild writes the
-next version and leaves the old dirs for ``vacuum``.
+below which every row is indexed (``indexed_up_to``), the table's
+``mutation_seq`` at build time and, per dir, the non-empty values of its
+partition column (``leaves``: IVF ``_cluster``, text ``_tb``, sparse
+``_db``), observed during the write. Readers union the main and delta
+dirs, drop dead ids with a semi-join only when a delete/upsert has
+committed since the build, and merge the segment-pruned unindexed tail.
+Index work is paid a little at a time as the tail grows (the Progressive
+Indexes pattern); a rebuild writes the next version and leaves the old
+dirs for ``vacuum``.
+
+Reads run no Spark job of their own. Each family declares its postings
+schema next to its writer; ``save`` refuses a dir whose columns differ
+from it, and ``read`` hands it to Spark, so no parquet footer is
+inferred. A search passes the leaves it probes, and ``read`` opens only
+those of them the entry records (with ``basePath``, so the partition
+column still comes from the path) — the Lucene rule: the commit names
+its files and nobody lists a directory. A dir whose entry has no leaf
+list, or whose probed leaves would pass Spark's parallel-discovery
+threshold, is read whole and pruned by the partition filter.
 
 ``SegmentedIndex`` owns all of that; an index family supplies only a
 writer (rows → one dir) and a scorer (dirs → candidates), both in
@@ -29,6 +41,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from vectordb_spark.schema import VectorDBError
 
@@ -38,22 +51,25 @@ class IndexFamily:
     key: str  # manifest key: {field: entry}
     prefix: str  # versioned main dir: <prefix><field>_v<version>
     missing: str  # refresh/search error when the field has no entry
+    leaf: str  # integer partition column of every postings dir
     # per-dir sidecar written next to the main and each delta dir
     sidecar: str | None = None
 
 
 IVF = IndexFamily(
-    "indexes", "index_", "No index on field {}; call rebuild first."
+    "indexes", "index_", "No index on field {}; call rebuild first.", "_cluster"
 )
 TEXT = IndexFamily(
     "text_indexes",
     "textindex_",
     "No text index on field {}; call rebuild_text_index first.",
+    "_tb",
 )
 SPARSE = IndexFamily(
     "sparse_indexes",
     "sparseindex_",
     "No sparse index on field {}; call rebuild_sparse_index first.",
+    "_db",
     sidecar="_norms",
 )
 FAMILIES = (IVF, TEXT, SPARSE)
@@ -63,6 +79,17 @@ DIR_PREFIXES = tuple(f.prefix for f in FAMILIES)
 # SegmentedIndex.save/save_bucketed and folds its statistics into the
 # entry. None means "every row id below the watermark" (the IVF reply).
 Writer = Callable[[DataFrame, str, dict], "int | None"]
+
+
+def column_types(fields) -> list[tuple[str, str]]:
+    """(name, type) of each field, nullability aside: what a parquet
+    file stores (Spark writes every column nullable)."""
+    return [(f.name, f.dataType.simpleString()) for f in fields]
+
+
+def postings_schema(*columns) -> StructType:
+    """A declared postings schema from (name, Spark type) pairs."""
+    return StructType([StructField(n, t) for n, t in columns])
 
 
 def live_dirs(meta: dict) -> set[str]:
@@ -108,17 +135,51 @@ class SegmentedIndex:
     def path(self, name: str) -> str:
         return os.path.join(self.table.path, name)
 
-    def save(self, df: DataFrame, name: str, partition_by: str | None = None) -> None:
-        """The one write mode for every index dir. Overwrite, so a
-        build or refresh that lost its commit (CONCURRENT_WRITE) can be
-        retried: its orphan dir is referenced by no manifest and the
-        retry reuses the name."""
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(partition_by)
-        writer.parquet(self.path(name))
+    def save(
+        self,
+        df: DataFrame,
+        name: str,
+        info: dict,
+        schema: StructType,
+        *,
+        partitioned: bool = True,
+    ) -> int:
+        """The one write mode for every index dir; returns the rows
+        written. Overwrite, so a build or refresh that lost its commit
+        (CONCURRENT_WRITE) can be retried: its orphan dir is referenced
+        by no manifest and the retry reuses the name. ``df`` must hold
+        exactly the columns of ``schema``, the family's declared
+        postings schema that ``read`` hands to Spark. A partitioned
+        dir's non-empty leaf values go into ``info["leaves"][name]``;
+        the row count and the leaves are observed during the write job
+        itself, so neither costs a read-back."""
+        from pyspark.sql import Observation
 
-    def save_bucketed(self, postings: DataFrame, bucket: str, name: str) -> None:
+        leaf = self.family.leaf if partitioned else None
+        stored = column_types(f for f in df.schema.fields if f.name != leaf)
+        declared = column_types(f for f in schema.fields if f.name != leaf)
+        if stored != declared:
+            raise VectorDBError(
+                "INTERNAL",
+                f"index dir {name} would store {stored}, not its declared "
+                f"postings schema {declared}",
+            )
+        obs = Observation()
+        metrics = [F.count(F.lit(1)).alias("n")]
+        if leaf:
+            metrics.append(F.collect_set(leaf).alias("leaves"))
+        writer = df.observe(obs, *metrics).write.mode("overwrite")
+        if leaf:
+            writer = writer.partitionBy(leaf)
+        writer.parquet(self.path(name))
+        m = obs.get
+        if leaf:
+            info.setdefault("leaves", {})[name] = sorted(int(v) for v in m["leaves"])
+        return int(m["n"])
+
+    def save_bucketed(
+        self, postings: DataFrame, name: str, info: dict, schema: StructType
+    ) -> int:
         """Bucket-partitioned postings write (text and sparse). The
         shuffle key is (bucket, row-hash): plain ``bucket`` would funnel
         each bucket — and with zipfian tokens/dims the hot bucket holds a
@@ -126,12 +187,14 @@ class SegmentedIndex:
         every bucket across 4 writers (4 files per bucket dir) while
         partitionBy still lays out one directory per bucket for
         file-listing pruning."""
-        self.save(
+        bucket = self.family.leaf
+        return self.save(
             postings.repartition(
                 F.col(bucket), F.pmod(F.xxhash64("_row_id"), F.lit(4))
             ),
             name,
-            partition_by=bucket,
+            info,
+            schema,
         )
 
     def sidecar(self, name: str) -> str:
@@ -148,7 +211,7 @@ class SegmentedIndex:
             version = prev.get("version", 0) + 1
             name = f"{self.family.prefix}{field}_v{version}"
             info = dict(config)
-            n = write(t._df_for_files(meta["files"]), name, info)
+            n = write(t._df_for_files(meta["files"], meta), name, info)
             info.update(
                 version=version,
                 dir=name,
@@ -203,26 +266,48 @@ class SegmentedIndex:
     def read(
         self,
         info: dict,
+        schema: StructType,
         prune: Callable[[DataFrame], DataFrame] | None = None,
         *,
+        probe: list[int] | None = None,
         sidecar: bool = False,
     ) -> DataFrame:
-        """Main dir + deltas (or their sidecars): each is its own
-        partitioned root, read with ``prune`` applied per dir (so
-        partition filters prune every dir independently), then unioned —
-        the Lucene multi-segment read."""
+        """Main dir + deltas (or their sidecars), each read with the
+        family's declared ``schema`` and ``prune`` applied per dir, then
+        unioned — the Lucene multi-segment read. With ``probe`` (the
+        leaf values a search needs) a dir whose entry records its
+        leaves opens only the probed ones it holds, and a dir holding
+        none of them is skipped."""
         if sidecar:
             names = [info["norms_dir"], *info.get("norms_deltas", [])]
         else:
             names = [info["dir"], *info.get("deltas", [])]
         spark = self.table.spark
-        return reduce(
-            DataFrame.unionByName,
-            [
-                (prune or (lambda d: d))(spark.read.parquet(self.path(n)))
-                for n in names
-            ],
+        prune = prune or (lambda d: d)
+        leaves = {} if sidecar or probe is None else info.get("leaves", {})
+        wanted = {int(v) for v in probe or ()}
+        # above this many paths Spark lists them in a parallel job
+        max_paths = int(
+            spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold")
         )
+        parts = []
+        for n in names:
+            root = self.path(n)
+            reader = spark.read.schema(schema)
+            paths = [root]
+            if n in leaves:
+                hit = sorted(wanted.intersection(leaves[n]))
+                if not hit:
+                    continue
+                if len(hit) <= max_paths:
+                    reader = reader.option("basePath", root)
+                    paths = [
+                        os.path.join(root, f"{self.family.leaf}={v}") for v in hit
+                    ]
+            parts.append(prune(reader.parquet(*paths)))
+        if not parts:
+            return prune(spark.createDataFrame([], schema))
+        return reduce(DataFrame.unionByName, parts)
 
     def live(
         self, df: DataFrame, info: dict, meta: dict, base: DataFrame
@@ -252,4 +337,4 @@ class SegmentedIndex:
         stats = meta.get("segment_stats") or {}
         bounds = {"_row_id": (float(up_to), None)}
         keep = [f for f in meta["files"] if segment_overlaps(stats.get(f), bounds)]
-        return self.table._df_for_files(keep).where(F.col("_row_id") >= up_to)
+        return self.table._df_for_files(keep, meta).where(F.col("_row_id") >= up_to)

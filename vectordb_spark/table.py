@@ -35,6 +35,7 @@ import functools
 import json
 import math
 import os
+import re
 import tempfile
 import threading
 import time
@@ -50,6 +51,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from vectordb_spark import serving
 from vectordb_spark.embedding import embed_column
@@ -82,7 +84,9 @@ from vectordb_spark.segmented_index import (
     SPARSE,
     TEXT,
     SegmentedIndex,
+    column_types as _columns,
     live_dirs as _live_index_dirs,
+    postings_schema as _postings_schema,
 )
 
 DEFAULT_CAPACITY = 2**31 - 1
@@ -206,6 +210,10 @@ class Table:
             self.partition_by = None
         meta["index_sources"] = self.index_sources
         meta["partition_by"] = self.partition_by
+        # every segment this table writes is noted here when it does
+        # not read with _default_schema (_record_segment_schema), so
+        # every read can name its schema
+        meta["segment_schemas"] = {}
         self._save_meta(meta)
 
     def _load_meta(self) -> dict:
@@ -390,27 +398,35 @@ class Table:
                         f"Version {version} not in table history.",
                     )
                 files = hist[version]
-        return self._df_for_files(files)
+        return self._df_for_files(files, meta)
 
-    def _df_for_files(self, files: list[str]) -> DataFrame:
-        paths = [os.path.join(self.path, p) for p in files]
-        if not paths:
+    def _df_for_files(self, files: list[str], meta: dict | None = None) -> DataFrame:
+        """The segments ``files`` of manifest ``meta`` (the current one
+        when None), read with the schema the manifest says they were
+        written with: no footer-inference job."""
+        if not files:
             return self.spark.createDataFrame(
                 [], self.schema.to_spark_schema(with_row_id=True)
             )
-        if self.partition_by and len(paths) > 1:
+        if meta is None:
+            meta = self._load_meta()
+        if self.partition_by and len(files) > 1:
             # each segment dir is its own hive-partitioned root; a
             # multi-path read would try to treat them as partition
             # siblings of one table. Per-segment reads unioned by name
             # keep the per-segment PartitionFilters pruning intact.
             from functools import reduce
 
-            dfs = [
-                self._restore_partition_type(self._read_segments(q))
-                for q in paths
-            ]
-            return reduce(lambda a, b: a.unionByName(b), dfs)
-        return self._restore_partition_type(self._read_segments(*paths))
+            return reduce(
+                lambda a, b: a.unionByName(b),
+                [self._df_for_files([f], meta) for f in files],
+            )
+        return self._restore_partition_type(
+            self._read_segments(
+                self._read_schema(meta, files),
+                *[os.path.join(self.path, f) for f in files],
+            )
+        )
 
     def scan_df(
         self,
@@ -439,26 +455,93 @@ class Table:
             tighten(bounds, col, lo, hi)
         if bounds and stats:
             files = [f for f in files if segment_overlaps(stats.get(f), bounds)]
-        df = self._df_for_files(files)
+        df = self._df_for_files(files, meta)
         if ast is not None:
             df = df.where(to_spark_column(ast))
         return df
 
-    def _read_segments(self, *paths: str) -> DataFrame:
-        """Segment read with partition-type-inference protection. When
-        the partition column is a DECLARED field, read with the
-        declared schema: Spark then parses the partition directory
-        value directly as that type, so a STRING key '001' round-trips
+    def _read_segments(self, schema: T.StructType | None, *paths: str) -> DataFrame:
+        """Segment read with ``schema`` (``_read_schema``): Spark reads no
+        footer to infer one, and it parses the partition directory value
+        directly as the declared type, so a STRING key '001' round-trips
         intact. (The cast-back in _restore_partition_type cannot undo
         lossy inference — '001' inferred as int 1 reads back as '1'.)
-        Internal partition keys (_cluster) keep inference: they are
-        engine-written ints, never lossy."""
+        Without one (a manifest that predates the schema records, or
+        segments written with different columns) the footer decides,
+        except that a DECLARED partition column reads with the declared
+        schema."""
         reader = self.spark.read
-        if self.partition_by:
-            declared = self.schema.to_spark_schema(with_row_id=True)
-            if self.partition_by in {f.name for f in declared.fields}:
-                reader = reader.schema(declared)
+        if schema is None and self.schema.get(self.partition_by or "") is not None:
+            schema = self.schema.to_spark_schema(with_row_id=True)
+        if schema is not None:
+            reader = reader.schema(schema)
         return reader.parquet(*paths)
+
+    def _default_schema(self) -> T.StructType:
+        """How a segment written with the declared columns under the
+        current layout reads: the fields and ``_row_id``, then the
+        partition column (Spark reads it from the path, last)."""
+        declared = self.schema.to_spark_schema(with_row_id=True)
+        if not self.partition_by:
+            return declared
+        part = (
+            declared[self.partition_by]
+            if self.schema.get(self.partition_by) is not None
+            # engine-written cluster key (always int)
+            else T.StructField(self.partition_by, T.IntegerType())
+        )
+        return T.StructType(
+            [f for f in declared.fields if f.name != self.partition_by] + [part]
+        )
+
+    def _read_schema(self, meta: dict, files: list[str]) -> T.StructType | None:
+        """The schema ``files`` read with: ``_default_schema``, or the
+        one ``_record_segment_schema`` noted for them. None when the
+        manifest predates the records or the segments disagree; the
+        footer then decides."""
+        records = meta.get("segment_schemas")
+        if records is None:
+            return None
+        stored = {records.get(f) for f in files}
+        if len(stored) != 1:
+            return None
+        (rec,) = stored
+        if rec is None:
+            return self._default_schema()
+        return T.StructType.fromJson(json.loads(rec))
+
+    def _record_segment_schema(
+        self, meta: dict, name: str, written: T.StructType
+    ) -> None:
+        """Note in the manifest how segment ``name`` (written from a frame
+        of schema ``written``) reads when that is not
+        ``_default_schema``: ``insert_df`` keeps scalar and sparse
+        columns as given, and an auto-embedded field lands after
+        ``_row_id``. A no-op on a manifest without the records."""
+        records = meta.get("segment_schemas")
+        if records is None:
+            return
+        default = self._default_schema()
+        schema = T.StructType(
+            [f for f in written.fields if f.name != self.partition_by]
+            + ([default[self.partition_by]] if self.partition_by else [])
+        )
+        if _columns(schema) == _columns(default):
+            records.pop(name, None)
+        else:
+            records[name] = schema.json()
+
+    def _pin_segment_schemas(self, meta: dict) -> None:
+        """Before a compaction changes the layout: every segment the
+        manifest still reaches (current or by time travel) keeps the
+        schema it reads with under the layout it was written in."""
+        records = meta.get("segment_schemas")
+        if records is None:
+            return
+        default = self._default_schema().json()
+        for files in (meta["files"], *(h["files"] for h in meta.get("history", []))):
+            for f in files:
+                records.setdefault(f, default)
 
     def _restore_partition_type(self, df: DataFrame) -> DataFrame:
         """Belt-and-braces for segments read WITHOUT an explicit schema
@@ -537,8 +620,8 @@ class Table:
         pk = pk_field.name
         cols = [f.name for f in self.schema.fields]
         old_set, new_set = set(files[v_from]), set(files[v_to])
-        old = self._df_for_files(sorted(old_set - new_set)).select(*cols).alias("o")
-        new = self._df_for_files(sorted(new_set - old_set)).select(*cols).alias("n")
+        old = self._df_for_files(sorted(old_set - new_set), meta).select(*cols).alias("o")
+        new = self._df_for_files(sorted(new_set - old_set), meta).select(*cols).alias("n")
         j = old.join(new, F.col(f"o.{pk}") == F.col(f"n.{pk}"), "full_outer")
         o_struct = F.struct(*[F.col(f"o.{c}") for c in cols])
         n_struct = F.struct(*[F.col(f"n.{c}") for c in cols])
@@ -604,6 +687,48 @@ class Table:
         ):
             return {pk.name: (min(keys), max(keys))}
         return {}
+
+    # an integer primary key also matches a key given as its decimal
+    # string ("1" finds id 1): Spark compares the two by value under
+    # ANSI and as text otherwise, which agree on this canonical form only
+    _INT_KEY_STR = re.compile(r"0|-?[1-9][0-9]*")
+
+    def _check_pk_keys(self, primary_keys) -> None:
+        """Reject, as INVALID_PAYLOAD and before any Spark job, a
+        primary-key list holding a value the PK column cannot be
+        compared with: Spark would fail the lookup or the delete's
+        write job (a non-numeric string on an integer key, a number on
+        a string key, a boolean, a nested value, an integer beyond
+        BIGINT). A NULL key matches nothing, and numbers on an integer
+        key compare numerically, as before."""
+        pk = self.schema.primary_key
+        if not isinstance(primary_keys, (list, tuple)):
+            raise VectorDBError("INVALID_PAYLOAD", "primaryKeys must be a list.")
+
+        def comparable(k) -> bool:
+            if k is None:
+                return True
+            if pk.field_type.is_string:
+                return isinstance(k, str)
+            if isinstance(k, str):
+                if not self._INT_KEY_STR.fullmatch(k):
+                    return False
+                k = int(k)
+            if isinstance(k, float):
+                return True
+            return (
+                isinstance(k, int)
+                and not isinstance(k, bool)
+                and -(2**63) <= k < 2**63
+            )
+
+        for k in primary_keys:
+            if not comparable(k):
+                raise VectorDBError(
+                    "INVALID_PAYLOAD",
+                    f"Primary key {k!r} cannot be a value of "
+                    f"{pk.name} ({pk.field_type.value}).",
+                )
 
     @_writer_locked
     def insert(self, records: list[dict], *, upsert: bool = False) -> dict:
@@ -710,7 +835,7 @@ class Table:
             )
         else:
             name = f"add_{meta['version'] + 1}"
-            added = {name: self._write_segment_observed(new_df, name)}
+            added = {name: self._write_segment_observed(new_df, name, meta)}
             self._commit(meta, meta["files"], added, next_row_id)
         return {"inserted": len(rows), "skipped": skipped}
 
@@ -900,7 +1025,7 @@ class Table:
         # the write's own Observation counts the inserted rows — no
         # separate count action re-running the dedup + anti-join (r12)
         name = f"add_{meta['version'] + 1}"
-        st, n = self._write_segment_observed(inserted_df, name)
+        st, n = self._write_segment_observed(inserted_df, name, meta)
         self._commit(meta, meta["files"], {name: (st, n)}, start + total)
         # skipped = batch duplicates + PK conflicts, as the row path counts
         return {"inserted": n, "skipped": total - n}
@@ -1005,12 +1130,6 @@ class Table:
             return 0
         return self.df().count()
 
-    def _dir_count(self, name: str) -> int:
-        """Row count of a just-written segment dir — parquet footer
-        metadata only (Spark answers unfiltered count(*) from footers),
-        never a data scan."""
-        return int(self.spark.read.parquet(os.path.join(self.path, name)).count())
-
     # string-PK stats above this length are not recorded (manifest
     # bloat guard); the segment then simply never prunes on the PK
     # (mutations rewrite it like any other candidate — bytes written
@@ -1103,20 +1222,22 @@ class Table:
         return self._arrow_stats(rows), rows.num_rows
 
     def _write_segment_observed(
-        self, df: DataFrame, name: str
+        self, df: DataFrame, name: str, meta: dict
     ) -> tuple[dict[str, list], int]:
         """Write ``df`` as segment dir ``name`` and return its pruning
         stats and row count, captured DURING the write action
         (Observation metrics ride the write job and are exact for
         successful queries): ONE Spark job per segment for write+stats,
         no read-back aggregate (r12). Every segment the table writes
-        outside the COW staging pass goes through here."""
+        outside the COW staging pass goes through here, and ``meta``
+        (the manifest it commits into) notes its stored columns."""
         from pyspark.sql import Observation
 
         if self.partition_by == "_cluster" and "_cluster" not in df.columns:
             # clustered layout (compact(cluster_by=...)): appended
             # segments self-assign from the persisted centroids
             df = self._assign_cluster(df)
+        self._record_segment_schema(meta, name, df.schema)
         cols, spk, aggs = self._stat_agg_exprs(df.columns)
         # unnamed Observation -> UUID name: two tables writing
         # same-named segments concurrently (streaming tests) must not
@@ -1258,11 +1379,13 @@ class Table:
                     else idx.mean_nn_centroid_dist
                 ),
             }
+            if self.partition_by != "_cluster":
+                self._pin_segment_schemas(meta)
             meta["partition_by"] = self.partition_by = "_cluster"
         if target_partitions:
             df = df.coalesce(max(1, int(target_partitions)))
         name = f"base_{meta['version'] + 1}"
-        added = {name: self._write_segment_observed(df, name)}
+        added = {name: self._write_segment_observed(df, name, meta)}
         self._commit(meta, [], added, meta["next_row_id"])
         return {"segmentsBefore": n_before, "segmentsAfter": 1}
 
@@ -1327,10 +1450,11 @@ class Table:
                 part = part.where(F.col("_z") <= hi)
             part = part.sortWithinPartitions("_z").drop("_z")
             name = f"zrw_{version}_{i}"
-            st, n = self._write_segment_observed(part, name)
+            st, n = self._write_segment_observed(part, name, meta)
             if n == 0:
                 # duplicate-heavy boundary collapsed a bucket
                 shutil.rmtree(os.path.join(self.path, name))
+                meta.get("segment_schemas", {}).pop(name, None)
                 continue
             added[name] = (st, n)
         self._commit(meta, [], added, meta["next_row_id"])
@@ -1406,7 +1530,9 @@ class Table:
                 shutil.rmtree(full)
                 removed += 1
         meta["history"] = kept
-        for cache in ("segment_stats", "segment_rows", "segment_bytes"):
+        for cache in (
+            "segment_stats", "segment_rows", "segment_bytes", "segment_schemas"
+        ):
             if meta.get(cache):
                 meta[cache] = {
                     k: v for k, v in meta[cache].items() if k in referenced
@@ -1436,6 +1562,8 @@ class Table:
             raise VectorDBError(
                 "DB_UNEXPECTED_ERROR", f"Primary key not found: {self.schema.name}"
             )
+        if primary_keys:
+            self._check_pk_keys(primary_keys)
         ast = parse_filter(filter, self.field_map())
         meta = self._load_meta()
         # segment pruning bounds for the COW rewrite: the filter's
@@ -1511,30 +1639,16 @@ class Table:
     _COW_TAG = "_cow_src"
 
     def _staging_stats(
-        self, staging: str
+        self, staging: str, schema: T.StructType
     ) -> tuple[dict[str, dict], dict[str, int]]:
         """Per-SOURCE-segment pruning stats and row counts for every
         rewritten segment from ONE column-pruned scan of the staging
         root (the ``_stat_agg_exprs`` contract), instead of a job per
-        new dir."""
-        from pyspark.sql.types import IntegerType, StringType, StructField
-
+        new dir. ``schema`` is the staging write's own, so no footer is
+        inferred and a DECLARED string partition field parses
+        losslessly instead of through hive type inference."""
         tag = self._COW_TAG
-        # explicit schema: the staging layout is table schema + _row_id
-        # under (tag[, partition]) dirs — skipping footer schema
-        # inference saves a listing job per mutation, and a DECLARED
-        # string partition field parses losslessly instead of through
-        # hive type inference
-        base = self.schema.to_spark_schema(with_row_id=True)
-        fields = list(base.fields)
-        names = {f.name for f in fields}
-        if self.partition_by and self.partition_by not in names:
-            # engine-written cluster key (always int)
-            fields.append(StructField(self.partition_by, IntegerType()))
-        fields.append(StructField(tag, StringType()))
-        df = self.spark.read.schema(
-            type(base)(fields)
-        ).parquet(staging)
+        df = self.spark.read.schema(schema).parquet(staging)
         cols, spk, aggs = self._stat_agg_exprs(df.columns)
         stats: dict[str, dict] = {}
         counts: dict[str, int] = {}
@@ -1593,18 +1707,19 @@ class Table:
             tagged = reduce(
                 lambda a, b: a.unionByName(b),
                 [
-                    self._df_for_files([f]).withColumn(tag, F.lit(f))
+                    self._df_for_files([f], meta).withColumn(tag, F.lit(f))
                     for f in candidates
                 ],
             )
             part_cols = [tag, self.partition_by]
         else:
-            tagged = self._df_for_files(candidates).withColumn(
+            tagged = self._df_for_files(candidates, meta).withColumn(
                 tag,
                 F.regexp_extract(F.input_file_name(), r"/([^/]+)/[^/]*$", 1),
             )
             part_cols = [tag]
         kept = keep_fn(tagged)
+        written = kept.schema
         # no leading underscore: Spark's hidden-path filter warns on
         # underscore-prefixed roots; crash leftovers are vacuum's job
         staging = os.path.join(self.path, f"cowstage_{version}")
@@ -1626,7 +1741,16 @@ class Table:
                     )
                 by_src[src] = os.path.join(staging, d)
             kept_stats, kept_counts = (
-                self._staging_stats(staging) if by_src else ({}, {})
+                self._staging_stats(
+                    staging,
+                    # partitionBy moves the partition columns last
+                    T.StructType(
+                        [f for f in written.fields if f.name not in part_cols]
+                        + [written[c] for c in part_cols]
+                    ),
+                )
+                if by_src
+                else ({}, {})
             )
             matched: dict[str, int] = {}
             for f in candidates:
@@ -1645,6 +1769,11 @@ class Table:
                     continue  # every row of f was dropped: segment dies
                 name = f"cow_{version}_{i}"
                 os.rename(by_src[f], os.path.join(self.path, name))
+                self._record_segment_schema(
+                    meta,
+                    name,
+                    T.StructType([c for c in written.fields if c.name != tag]),
+                )
                 added[name] = (kept_stats.get(f, {}), kept_counts.get(f, 0))
             keep = [f for f in files if f not in matched]
             return keep, added, sum(matched.values())
@@ -1704,19 +1833,19 @@ class Table:
         mutation), cached back so the cost is paid once per table.
         Partitioned tables keep the per-segment count (their segment
         counts are compaction-bounded and parent dirs are partition
-        values, not segment names)."""
+        values, not segment names). Both read with the manifest's
+        schema (``_df_for_files``)."""
         rows_map = meta.setdefault("segment_rows", {})
         missing = [f for f in candidates if f not in rows_map]
         if not missing:
             return rows_map
         if self.partition_by or len(missing) == 1:
             for f in missing:
-                rows_map[f] = self._dir_count(f)
+                rows_map[f] = int(self._df_for_files([f], meta).count())
             return rows_map
-        paths = [os.path.join(self.path, f) for f in missing]
         counted: dict[str, int] = {}
         for r in (
-            self.spark.read.parquet(*paths)
+            self._df_for_files(missing, meta)
             .groupBy(
                 F.regexp_extract(
                     F.input_file_name(), r"/([^/]+)/[^/]*$", 1
@@ -1771,7 +1900,7 @@ class Table:
             meta, bounds, lambda t: t.join(bkeys, pk, "left_anti")
         )
         name = f"add_{meta['version'] + 1}"
-        st, n = self._write_segment_observed(batch_df, name)
+        st, n = self._write_segment_observed(batch_df, name, meta)
         added[name] = (st, n)
         self._commit(meta, keep, added, next_row_id)
         return n
@@ -1939,9 +2068,8 @@ class Table:
                 raise VectorDBError(
                     "DB_UNEXPECTED_ERROR", f"Primary key not found: {self.schema.name}"
                 )
-            if pk_field.field_type.is_int and primary_keys:
-                nums = [int(k) for k in primary_keys]
-                extra_bounds = {pk_field.name: (min(nums), max(nums))}
+            self._check_pk_keys(primary_keys)
+            extra_bounds = self._pk_list_bounds(primary_keys)
         rows = serving.get(
             self, parse_filter(filter, self.field_map()), primary_keys, skip, limit
         )
@@ -2142,8 +2270,8 @@ class Table:
                 else idx.mean_nn_centroid_dist
             )
             self._ivf.save(
-                self._ivf_encode(assigned, field, info), name,
-                partition_by="_cluster",
+                self._ivf_encode(assigned, field, info), name, info,
+                _ivf_postings(info, field),
             )
             return None  # the reply's indexedRecords is the watermark
 
@@ -2246,7 +2374,9 @@ class Table:
         from vectordb_spark.operators.pq import ResidualPQIndex
 
         full_check_max = 65536
-        stored = self.spark.read.parquet(self._ivf.path(info["dir"])).select(
+        stored = self.spark.read.schema(_ivf_postings(info, field)).parquet(
+            self._ivf.path(info["dir"])
+        ).select(
             "_row_id",
             F.col("_pq_codes").cast("array<int>").alias("_stored"),
             F.col("_cluster").cast("int").alias("_cluster"),
@@ -2316,7 +2446,7 @@ class Table:
                     )
             # one compute: write + sizes
             assigned = self._ivf_encode(assigned, field, info).localCheckpoint()
-            self._ivf.save(assigned, name, partition_by="_cluster")
+            self._ivf.save(assigned, name, info, _ivf_postings(info, field))
             delta_sizes = {
                 str(r["_cluster"]): int(r["n"])
                 for r in assigned.groupBy("_cluster")
@@ -2378,8 +2508,10 @@ class Table:
         # then the candidate streams union
         probed = self._ivf.read(
             info,
+            _ivf_postings(info, f.name),
             None if clusters is None
             else (lambda d: d.where(F.col("_cluster").isin(clusters))),
+            probe=clusters,
         )
         base = self.df()
         if info.get("type") == "IVF_SQ8":
@@ -2582,7 +2714,7 @@ class Table:
         n_docs, sum_dl = df.select(
             F.count(F.lit(1)), F.sum(F.size(F.split(F.col(field), " ", -1))).cast("long")
         ).first()
-        self._text.save_bucketed(postings, "_tb", name)
+        self._text.save_bucketed(postings, name, info, _TEXT_POSTINGS)
         info["n_docs"] = int(info.get("n_docs", 0)) + int(n_docs or 0)
         info["sum_dl"] = int(info.get("sum_dl", 0)) + int(sum_dl or 0)
         return int(n_docs or 0)
@@ -2673,16 +2805,17 @@ class Table:
         # job for a handful of strings
         from vectordb_spark.functions.hashing import pmod_bucket
 
-        tbs = [pmod_bucket(t, buckets) for t in terms]
+        tbs = sorted({pmod_bucket(t, buckets) for t in terms})
         idx = self._text.read(
             info,
+            _TEXT_POSTINGS,
             lambda d: d.where(
-                F.col("_tb").isin(sorted(set(tbs)))
-                & F.col("_token").isin(*terms)
+                F.col("_tb").isin(tbs) & F.col("_token").isin(*terms)
             ).select(
                 "_row_id", "_dl", "_token", "_tf",
                 *(["_pos"] if phrase else []),
             ),
+            probe=tbs,
         )
         base = self.df()
         tail = self._text.tail(meta, info)
@@ -2823,7 +2956,8 @@ class Table:
     ) -> int:
         """Sparse-index writer (build and refresh): one posting row per
         nonzero (doc, dim) as a bucket-partitioned dir, plus the norms
-        sidecar. Returns the sidecar's row count."""
+        sidecar. Returns the sidecar's row count, observed during its
+        write."""
         from vectordb_spark.functions.distance import sparse_norm_sq
 
         buckets = int(info["buckets"])
@@ -2842,12 +2976,14 @@ class Table:
             )
             .withColumn("_db", F.pmod(F.col("_dim"), F.lit(buckets)).cast("int"))
         )
-        self._sparse.save_bucketed(postings, "_db", name)
-        norms = self._sparse.sidecar(name)
-        self._sparse.save(
-            df.select("_row_id", sparse_norm_sq(v).alias("_norm2")), norms
+        self._sparse.save_bucketed(postings, name, info, _SPARSE_POSTINGS)
+        return self._sparse.save(
+            df.select("_row_id", sparse_norm_sq(v).alias("_norm2")),
+            self._sparse.sidecar(name),
+            info,
+            _SPARSE_NORMS,
+            partitioned=False,
         )
-        return self._dir_count(norms)
 
     def search_sparse_indexed_df(
         self,
@@ -2889,11 +3025,13 @@ class Table:
         ast = parse_filter(filter, self.field_map())
         idx_ids = self._sparse.read(
             info,
+            _SPARSE_POSTINGS,
             lambda d: d.where(
                 F.col("_db").isin(dbs) & F.col("_dim").isin(dims)
             ).select("_row_id"),
+            probe=dbs,
         )
-        norms = self._sparse.read(info, sidecar=True)
+        norms = self._sparse.read(info, _SPARSE_NORMS, sidecar=True)
         idx_ids = self._sparse.live(idx_ids, info, meta, base)
         norms = self._sparse.live(norms, info, meta, base)
         tail = self._sparse.tail(meta, info)
@@ -3095,6 +3233,41 @@ def _nearest_centroid(field: str, centroids: list[list[float]]):
         *[l2_squared(F.col(field), vector_literal(c)) for c in centroids]
     )
     return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
+
+
+# The declared postings schemas: SegmentedIndex.save refuses a dir that
+# would store other columns, and every read hands them to Spark.
+_TEXT_POSTINGS = _postings_schema(
+    ("_row_id", T.LongType()),
+    ("_dl", T.LongType()),
+    ("_token", T.StringType()),
+    ("_tf", T.LongType()),
+    ("_pos", T.ArrayType(T.IntegerType())),
+    ("_tb", T.IntegerType()),
+)
+_SPARSE_POSTINGS = _postings_schema(
+    ("_row_id", T.LongType()),
+    ("_dim", T.LongType()),
+    ("_val", T.DoubleType()),
+    ("_db", T.IntegerType()),
+)
+_SPARSE_NORMS = _postings_schema(("_row_id", T.LongType()), ("_norm2", T.DoubleType()))
+
+
+def _ivf_postings(info: dict, field: str) -> T.StructType:
+    """The columns ``Table._ivf_encode`` stores for the entry's index
+    type, then the ``_cluster`` partition column."""
+    stored = {
+        "IVF_SQ8": [
+            ("_scale", T.DoubleType()),
+            ("_q", T.ArrayType(T.ByteType())),
+            ("_norm2", T.DoubleType()),
+        ],
+        "IVF_PQ": [("_pq_codes", T.ArrayType(T.LongType()))],
+    }.get(info.get("type"), [(field, T.ArrayType(T.FloatType()))])
+    return _postings_schema(
+        ("_row_id", T.LongType()), *stored, ("_cluster", T.IntegerType())
+    )
 
 
 def _ivf_from_info(info: dict):
