@@ -568,7 +568,8 @@ def test_pq_fit_hash_sample_string_ids_under_ansi(spark):
         for i in range(600)
     ]
     df = spark.createDataFrame(rows, "doc_id string, embedding array<float>")
-    ansi0 = spark.conf.get("spark.sql.ansi.enabled", "false")
+    # the value in effect, so the shared session gets back what it had
+    ansi0 = spark.conf.get("spark.sql.ansi.enabled")
     spark.conf.set("spark.sql.ansi.enabled", "true")
     try:
         fwd = PQ.PQIndex(m=2, k=4, seed=3, train_size=128).fit(
@@ -586,6 +587,7 @@ def test_pq_fit_hash_sample_string_ids_under_ansi(spark):
         assert old.codebook != fwd.codebook
     finally:
         spark.conf.set("spark.sql.ansi.enabled", ansi0)
+    assert spark.conf.get("spark.sql.ansi.enabled") == ansi0
 
 
 def test_encode_arrow_map_passthrough_and_nulls(spark):

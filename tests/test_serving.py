@@ -224,6 +224,57 @@ def test_decoded_size_estimate_covers_vectors(l2_table):
     assert serving._decoded_bytes(wide, {"row_count": rows, "files": []}) > serving.CACHE_BYTES
 
 
+def _folded_rows(spark, call) -> int:
+    """Rows ``call``'s served reply put through the distance fold, after
+    checking the reply against the Spark path's bits."""
+    with mock.patch.object(serving, "fold_distances", wraps=serving.fold_distances) as fold:
+        _assert_parity(spark, call)
+    return sum(len(c.args[1]) for c in fold.call_args_list)
+
+
+def test_prefilter_fallbacks_match_spark(spark, l2_table, tmp_path):
+    """Each case that skips the knn prefilter folds every row and still
+    answers bit-identically; a plain knn folds only its candidates."""
+    rows = l2_table.statistics()["totalRecords"]
+    q = [0.5] * DIM
+    assert _folded_rows(spark, lambda: l2_table.query(
+        query_vector=q, limit=5, with_distance=True)) < rows
+    for call in [
+        # a filter on @distance applies after scoring
+        lambda: l2_table.query(query_vector=q, limit=5, filter="@distance > 2.0",
+                               with_distance=True),
+        # limit ≥ rows
+        lambda: l2_table.query(query_vector=q, limit=rows, with_distance=True),
+        # float32(q) overflows: no finite approximate distance
+        lambda: l2_table.query(query_vector=[1e39] + q[1:], limit=5, with_distance=True),
+    ]:
+        assert _folded_rows(spark, call) == rows
+    assert _folded_rows(spark, lambda: l2_table.query(query_vector=q, limit=0)) == 0
+    # a segment holding an inf element has no norms to bound with
+    t = Table(spark, _small_schema("inf"), str(tmp_path / "inf"))
+    t._init_storage()
+    t.insert([{"id": i, "vec": [float(i), 1.0], "cat": 0} for i in range(20)])
+    t.insert([{"id": 20 + i, "vec": [float(i), 0.5], "cat": 1} for i in range(20)]
+             + [{"id": 99, "vec": [float("inf"), 0.0], "cat": 1}])
+    assert 21 < _folded_rows(spark, lambda: t.query(
+        query_vector=[2.0, 0.75], limit=3, with_distance=True)) < 41
+    assert _folded_rows(spark, lambda: t.query(
+        query_vector=[2.0, 0.75], limit=3, filter="cat = 1", with_distance=True)) == 21
+
+
+def test_segment_bytes_count_the_norms(l2_table):
+    """The cached per-row norms (8 bytes a row per dense field) count
+    against the cache's byte cap."""
+    segs = serving._snapshot(l2_table)
+    assert len(segs) > 1
+    for seg in segs.values():
+        norms = seg.norms["vec"]
+        assert norms.dtype == np.float64 and len(norms) == seg.rows.num_rows
+        assert seg.nbytes == seg.rows.nbytes + norms.nbytes
+    meta = l2_table._load_meta()
+    assert serving._decoded_bytes(l2_table.schema, meta) >= meta["row_count"] * (DIM * 4 + 8)
+
+
 def _small_schema(name: str, extra: list[FieldSchema] = ()) -> TableSchema:
     return TableSchema(name=name, fields=[
         FieldSchema(name="id", field_type=FieldType.INT8, primary_key=True),

@@ -39,6 +39,23 @@ Results are bit-identical to the Spark path:
 - facets fold on the driver over the result rows
   (``operators.facets.fold_facets``).
 
+A knn does not fold every row. Each decoded segment keeps, per dense
+field, float64 upper bounds ν ≥ ‖x‖ of its rows (``_norms``; 8 bytes a
+row, counted in ``Segment.nbytes``), or None when the field holds a
+non-finite element. A query first runs one float32 matvec
+``X @ float32(q)`` and turns it into approximate distances with a
+rigorous per-row error bound that covers any summation order (FMA
+included), the rounding of q to float32, float32 and double underflow
+(gradual, as IEEE 754 specifies), the fold's own rounding and the
+bound's double arithmetic (``_candidates``). Only the rows whose lower
+bound is at most the ``limit``-th smallest upper bound can rank, and
+only they go through the fold — so every reported distance is still
+the fold's, and the ranking is the full fold's to the bit. The full fold runs instead when
+``limit`` ≥ the rows in the segment (or in its filtered rows), when the
+filter reads ``@distance`` (it filters after scoring), when the segment
+has no norms, and when any approximate distance or bound is not finite
+(``float32(q)`` overflows, say).
+
 A request returns ``None`` — the caller then runs the unchanged Spark
 path — for a partitioned table, a table with a sparse vector field, a
 table whose live rows would decode to more than ``CACHE_BYTES``
@@ -58,6 +75,7 @@ caps the cache (least recently used first out).
 
 from __future__ import annotations
 
+import math
 import os
 import threading
 from collections import OrderedDict
@@ -82,6 +100,11 @@ CACHE_BYTES = 256 << 20
 # Rows per block of the distance fold: keeps a block's double-precision
 # terms in the CPU cache while the fold walks its columns.
 _FOLD_BLOCK = 2048
+# Unit roundoffs of double and float32 arithmetic, and the smallest
+# subnormal double (the prefilter's error bound, ``_candidates``).
+_U64 = 2.0**-53
+_U32 = 2.0**-24
+_TINY64 = 2.0**-1074
 
 _SCALAR_TYPES = {
     FieldType.INT1: pa.int8(),
@@ -106,10 +129,16 @@ class Segment:
     row_ids: np.ndarray | None = None
     # dense field -> (rows × dim) float32 view of the Arrow buffer
     vectors: dict | None = None
+    # dense field -> per-row float64 upper bounds on ‖x‖ (``_norms``),
+    # or None when the field's matrix holds a non-finite element
+    norms: dict | None = None
 
     @property
     def nbytes(self) -> int:
-        return 0 if self.rows is None else self.rows.nbytes
+        if self.rows is None:
+            return 0
+        norms = sum(n.nbytes for n in self.norms.values() if n is not None)
+        return self.rows.nbytes + norms
 
 
 class SegmentCache:
@@ -229,16 +258,35 @@ def _segment(rows: pa.Table, schema: TableSchema) -> Segment:
     row_ids = rows.column("_row_id")
     if row_ids.null_count:
         return Segment(None)
-    return Segment(rows, row_ids.to_numpy(), vectors)
+    norms = {name: _norms(v) for name, v in vectors.items()}
+    return Segment(rows, row_ids.to_numpy(), vectors, norms)
+
+
+def _norms(vectors: np.ndarray) -> np.ndarray | None:
+    """Upper bounds ν_i ≥ ‖x_i‖ of the float32 rows, or None when an
+    element is not finite. The squares are exact in double and their
+    sum (in any order) is within γ_{d-1} of ‖x‖², so the inflation by
+    (1 + (d+2)·2⁻⁵³) covers that, the square root's rounding and its
+    own."""
+    sq = np.empty(len(vectors))
+    for s in range(0, len(vectors), _FOLD_BLOCK):
+        block = vectors[s : s + _FOLD_BLOCK].astype(np.float64)
+        np.einsum("ij,ij->i", block, block, out=sq[s : s + _FOLD_BLOCK])
+    if not np.isfinite(sq).all():
+        return None
+    nu = np.sqrt(sq, out=sq)
+    nu *= 1.0 + (vectors.shape[1] + 2) * _U64
+    return nu
 
 
 def _decoded_bytes(schema: TableSchema, meta: dict) -> int:
     """Estimated decoded size of the manifest's live rows: a dense
-    vector takes ``4 × dim`` bytes plus its list offset per row, every
-    other column (and ``_row_id``) 8 — or the segments' parquet bytes
-    when larger, which is where long strings show."""
+    vector takes ``4 × dim`` bytes plus its list offset and its cached
+    norm per row, every other column (and ``_row_id``) 8 — or the
+    segments' parquet bytes when larger, which is where long strings
+    show."""
     width = 8 + sum(
-        4 * f.dimension + 4 if f.field_type.is_dense_vector else 8
+        4 * f.dimension + 12 if f.field_type.is_dense_vector else 8
         for f in schema.fields
     )
     on_disk = sum(meta.get("segment_bytes", {}).get(n, 0) for n in meta["files"])
@@ -315,6 +363,78 @@ def fold_distances(metric: str, vectors: np.ndarray, q: np.ndarray) -> np.ndarra
     return 1.0 - out
 
 
+def _norm_bound(v: np.ndarray) -> float:
+    """An upper bound on ‖v‖ for a float64 vector: room for the rounding
+    of its sum of squares and for squares that underflow."""
+    d = len(v)
+    return math.sqrt(float(v @ v) + d * _TINY64) * (1.0 + (d + 4) * 2.0 * _U64)
+
+
+def _candidates(
+    metric: str, vectors: np.ndarray, norms: np.ndarray | None, q: np.ndarray,
+    idx: np.ndarray, limit: int,
+) -> np.ndarray:
+    """The rows of ``idx`` (positions in ``vectors``) whose folded
+    distance can rank among the ``limit`` smallest of ``idx``'s: all of
+    ``idx`` when there is no certified bound to prune with.
+
+    One float32 matvec ``c = X @ float32(q)`` gives approximate distances
+    ``a`` (EUCLIDEAN ν² − 2c + ‖q‖², DOT_PRODUCT −c, COSINE 1 − c) and
+    ``e`` bounds ``|a − fold_distances|`` for each row, whatever the
+    matvec's summation order (FMA included):
+
+    - ``c`` against x·q: γ_d(2⁻²⁴)·ν·Q for the matvec, (2⁻²⁴·Q + d·2⁻¹⁵⁰)·ν
+      for rounding q to float32 (subnormal float32 included) and d·2⁻¹⁴⁸
+      for float32 underflow, where Q bounds both ‖q‖ and ‖float32(q)‖;
+      EUCLIDEAN counts it twice;
+    - the fold's own rounding, the double arithmetic of ``a`` (and ν² over
+      ‖x‖²), and of ``a ± e``: 8·γ_{d+4}(2⁻⁵³)·(ν+Q)² for EUCLIDEAN,
+      4·γ_{d+4}(2⁻⁵³)·νQ for DOT_PRODUCT and 4·γ_{d+4}(2⁻⁵³)·(νQ+1) for
+      COSINE, plus 4d·2⁻¹⁰⁷⁴ for subnormal doubles.
+
+    τ is the ``limit``-th smallest ``a + e``; a row with ``a − e > τ`` has
+    ``limit`` rows strictly nearer, so it cannot rank. Ties at τ stay."""
+    if norms is None or limit >= len(idx):
+        return idx
+    if limit == 0:
+        return idx[:0]
+    d = vectors.shape[1]
+    x, nu = (vectors, norms) if len(idx) == len(vectors) else (vectors[idx], norms[idx])
+    with np.errstate(all="ignore"):
+        q32 = q.astype(np.float32)
+        # numpy's own kernel: at 20k-150k × 64 it measured faster than
+        # BLAS sgemv, whose worker thread also raised a serving
+        # process's peak RSS by ~20 MB
+        c = np.einsum("ij,j->i", x, q32).astype(np.float64)
+        bound = max(_norm_bound(q), _norm_bound(q32.astype(np.float64)))
+        g32 = d * _U32 / (1.0 - d * _U32)
+        g64 = (d + 4) * _U64 / (1.0 - (d + 4) * _U64)
+        # every bound term is a polynomial in ν: err = (e2·ν + e1)·ν + e0
+        e1 = (g32 + _U32) * bound + d * 2.0**-150
+        e0 = d * 2.0**-148 + 4 * d * _TINY64
+        if metric == "EUCLIDEAN":
+            a = nu * nu
+            a -= 2.0 * c
+            a += float(q @ q)
+            e2, e1, e0 = 8.0 * g64, 2.0 * e1 + 16.0 * g64 * bound, 2.0 * e0 + 8.0 * g64 * bound**2
+        elif metric == "DOT_PRODUCT":
+            a = np.negative(c, out=c)
+            e2, e1 = 0.0, e1 + 4.0 * g64 * bound
+        else:
+            a = np.subtract(1.0, c, out=c)
+            e2, e1, e0 = 0.0, e1 + 4.0 * g64 * bound, e0 + 4.0 * g64
+        err = nu * e2
+        err += e1
+        err *= nu
+        err += e0
+        hi = a + err
+        lo = np.subtract(a, err, out=err)
+    if not (np.isfinite(hi).all() and np.isfinite(lo).all()):
+        return idx
+    tau = np.partition(hi, limit - 1)[limit - 1]
+    return idx[lo <= tau]
+
+
 def _mask(ast, rows: pa.Table) -> np.ndarray:
     return pc.fill_null(to_arrow(ast, rows), False).to_numpy(zero_copy_only=False)
 
@@ -369,8 +489,13 @@ def query(table, field, q: list[float], ast, limit: int) -> pa.Table | None:
         for k, s in enumerate(segs):
             vectors = s.vectors[field.name]
             idx = np.arange(s.rows.num_rows)
-            if ast is not None and not post:
-                idx = np.flatnonzero(_mask(ast, s.rows))
+            if not post:
+                if ast is not None:
+                    idx = np.flatnonzero(_mask(ast, s.rows))
+                idx = _candidates(
+                    field.metric, vectors, s.norms[field.name], qv, idx, limit
+                )
+            if len(idx) < len(vectors):
                 vectors = vectors[idx]
             d = fold_distances(field.metric, vectors, qv)
             if post:
