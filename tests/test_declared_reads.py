@@ -93,9 +93,14 @@ def _parent_read(t, files):
     return reader.parquet(*paths)
 
 
-def _same_read(spark, t, df, files):
+def _same_read(spark, t, df, files, tombstones=None):
+    """``df`` holds ``files``' rows less those their ``tombstones``
+    delete, with the schema the files were written with."""
     want = _parent_read(t, files)
     assert df.schema == want.schema
+    dead = [e for f, e in (tombstones or {}).items() if f in files]
+    if dead:
+        want = want.where(~want["_row_id"].isin(t._dead_ids(*dead).tolist()))
     assert sorted(df.collect()) == sorted(want.collect())
 
 
@@ -109,7 +114,8 @@ def test_unpartitioned_df_and_time_travel(spark, tmp_path):
     with _jobs(spark) as jobs:
         now, then = t.df(), t.df(version=v1)
     assert jobs == [0]
-    _same_read(spark, t, now, meta["files"])
+    assert set(meta["tombstones"]) == set(meta["files"])
+    _same_read(spark, t, now, meta["files"], meta["tombstones"])
     hist = {h["version"]: h["files"] for h in meta["history"]}
     _same_read(spark, t, then, hist[v1])
 

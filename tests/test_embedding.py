@@ -9,6 +9,7 @@ import json
 import threading
 
 import pytest
+from hypothesis import HealthCheck, given, settings, strategies as st
 
 from vectordb_spark.embedding import (
     EMBED_DOCS_RETRY,
@@ -360,3 +361,49 @@ class TestEmbedDotsArrowParity:
         # NULL text → zero vector (the HOF chain's CASE guard routes a
         # NULL code array to the empty-hashes branch), NOT NULL aa/ab
         assert got[len(self.TEXTS) - 3] == (0, 0, 0)
+
+    @settings(max_examples=3, derandomize=True, deadline=None,
+              suppress_health_check=[HealthCheck.function_scoped_fixture])
+    @given(texts=st.lists(
+        st.text(
+            # the whole Unicode range, astral planes included: only the
+            # JVM normalize decides which characters survive as ASCII
+            # (lower() maps some non-ASCII letters, e.g. U+212A KELVIN
+            # SIGN and U+0130, to ASCII ones)
+            alphabet=st.one_of(
+                st.characters(codec="utf-8"),
+                st.sampled_from("Kİſß\U0001f600Aa1 ^$"),
+            ),
+            max_size=24,
+        ),
+        min_size=1, max_size=64,
+    ))
+    def test_kernel_vs_hof_on_unicode(self, spark, texts):
+        """The kernel reads the normalized text's UTF-8 BYTES as code
+        points; the HOF path reads ``ascii()`` of each character. They
+        agree only while the shared normalize leaves pure ASCII, which
+        this fuzz holds them to."""
+        from pyspark.sql import functions as F
+
+        from vectordb_spark.embedding import SqlMockEmbedder
+
+        e = SqlMockEmbedder(dimension=16)
+        qv = [int(x) for x in e._one("fast key order sort")]
+        df = spark.createDataFrame(list(enumerate(texts)), "id INT, text STRING")
+        got = {
+            r.id: (r.aa, r.ab0)
+            for r in e.embed_dots_df(df, "text", [qv], keep=("id",)).collect()
+        }
+        qa = "array(" + ", ".join(f"CAST({x} AS BIGINT)" for x in qv) + ")"
+        want = {
+            r.id: (r.aa, r.ab0)
+            for r in e.embed_df(df, "text", out="v").select(
+                "id",
+                F.expr("aggregate(v, CAST(0 AS BIGINT), (acc, x) -> acc + x*x)").alias("aa"),
+                F.expr(
+                    f"aggregate(zip_with(v, {qa}, (x, y) -> x*y), "
+                    "CAST(0 AS BIGINT), (acc, x) -> acc + x)"
+                ).alias("ab0"),
+            ).collect()
+        }
+        assert got == want

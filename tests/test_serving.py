@@ -58,8 +58,8 @@ def _records(ids, rng) -> list[dict]:
 
 
 def _build(spark, db, metric: str, name: str = ""):
-    """Four segments: two row-path inserts, an ``insert_df`` batch, and
-    a copy-on-write rewrite from a delete."""
+    """Three segments: two row-path inserts and an ``insert_df`` batch,
+    each with a row a delete tombstoned."""
     rng = np.random.default_rng(7)
     t = db.create_table(_schema(metric, name))
     t.insert(_records(range(0, 40), rng))
@@ -232,10 +232,25 @@ def _folded_rows(spark, call) -> int:
     return sum(len(c.args[1]) for c in fold.call_args_list)
 
 
+def test_small_segments_skip_the_prefilter(spark, l2_table):
+    """Segments of at most ``_PREFILTER_MIN_ROWS`` rows fold whole,
+    tombstoned rows included (they are dropped after the fold)."""
+    assert max(s.rows.num_rows for s in serving._snapshot(l2_table).values()) <= (
+        serving._PREFILTER_MIN_ROWS
+    )
+    rows = l2_table.statistics()["totalRecords"] + 3
+    assert _folded_rows(spark, lambda: l2_table.query(
+        query_vector=[0.5] * DIM, limit=5, with_distance=True)) == rows
+
+
+@mock.patch.object(serving, "_PREFILTER_MIN_ROWS", 0)
 def test_prefilter_fallbacks_match_spark(spark, l2_table, tmp_path):
     """Each case that skips the knn prefilter folds every row and still
-    answers bit-identically; a plain knn folds only its candidates."""
-    rows = l2_table.statistics()["totalRecords"]
+    answers bit-identically; a plain knn folds only its candidates. The
+    segments here are small, so the prefilter is forced on for them.
+    Every row includes the three tombstoned ones: a full fold folds
+    them and then drops them."""
+    rows = l2_table.statistics()["totalRecords"] + 3
     q = [0.5] * DIM
     assert _folded_rows(spark, lambda: l2_table.query(
         query_vector=q, limit=5, with_distance=True)) < rows
@@ -359,6 +374,12 @@ def _cached_dirs(t) -> set[str]:
     return {k[1] for k in serving.CACHE.keys() if k[0] == root}
 
 
+def _live_names(t) -> set[str]:
+    """The dirs and tombstone files of ``t``'s current manifest."""
+    meta = t._load_meta()
+    return set(meta["files"]) | {e["file"] for e in meta.get("tombstones", {}).values()}
+
+
 def test_tier_never_answers_from_a_stale_entry(spark, db):
     t = db.create_table(_schema("EUCLIDEAN", "stale"))
     rng = np.random.default_rng(3)
@@ -368,7 +389,7 @@ def test_tier_never_answers_from_a_stale_entry(spark, db):
 
     def top() -> list[int]:
         out = _assert_parity(spark, lambda: t.query(query_vector=q, limit=3, with_distance=True))
-        assert _cached_dirs(t) == set(t._load_meta()["files"])
+        assert _cached_dirs(t) == _live_names(t)
         return [r["id"] for r in out["result"]]
 
     before = top()
@@ -530,8 +551,9 @@ def test_row_path_writes_match_spark(spark, db, metric):
 
 
 def test_write_seeds_the_cache(spark, db):
-    """The segments a write commits enter the cache, so the next knn
-    decodes nothing — the rewritten base included."""
+    """The segments and dead-row masks a write commits enter the cache,
+    so the next knn decodes and loads nothing — the rewritten segment
+    of an upsert included."""
     t = _build(spark, db, "EUCLIDEAN", "seeded")
     q = [0.5] * DIM
     t.query(query_vector=q, limit=3)
@@ -542,9 +564,11 @@ def test_write_seeds_the_cache(spark, db):
     ):
         write()
         with mock.patch.object(serving, "_read_segment", wraps=serving._read_segment) as read:
+            with mock.patch.object(serving.np, "load", wraps=np.load) as load:
+                t.query(query_vector=q, limit=5, with_distance=True)
             _assert_parity(spark, lambda: t.query(query_vector=q, limit=5, with_distance=True))
-        assert read.call_count == 0
-        assert _cached_dirs(t) == set(t._load_meta()["files"])
+        assert read.call_count == 0 and load.call_count == 0
+        assert _cached_dirs(t) == _live_names(t)
 
 
 def test_segment_write_replaces_a_reused_dir(tmp_path):

@@ -58,6 +58,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from vectordb_spark.schema import VectorDBError
 from vectordb_spark.table import Table
 
 SUPPORTED_AGGS = ("count", "sum", "sumsq", "min", "max")
@@ -94,6 +95,30 @@ def _derive_stats(view_df: DataFrame, group_cols: list[str]) -> DataFrame:
         var.alias("var_pop"),
         F.sqrt(var).alias("stddev_pop"),
     )
+
+
+def _version_files(meta: dict, version: int) -> tuple[list, dict]:
+    """``Table._snapshot_at``, with no segments for a version the
+    history no longer holds."""
+    try:
+        return Table._snapshot_at(meta, version)
+    except VectorDBError:
+        return [], {}
+
+
+def _delta_and_base(table: Table, meta: dict, v_from: int) -> tuple[int, int]:
+    """The on-disk bytes ``table.changes(v_from)`` reads (the segment
+    dirs only one of the two versions lists, and the dirs whose
+    tombstone changed between them) and those of the current snapshot:
+    the measured refresh-or-rebuild crossover's inputs, from the
+    manifest alone."""
+    old, old_t = _version_files(meta, v_from)
+    new, new_t = _version_files(meta, int(meta["version"]))
+    changed = set(old) ^ set(new)
+    changed |= {f for f in set(old) & set(new) if old_t.get(f) != new_t.get(f)}
+    sz = meta.get("segment_bytes") or {}
+    fb = IncrementalAggView._files_bytes
+    return fb(table.path, sorted(changed), sz), fb(table.path, sorted(new), sz)
 
 
 class UnsupportedAggregateError(ValueError):
@@ -336,17 +361,7 @@ class IncrementalAggView:
         if v1 == v0:
             return v0
         if not force_incremental:
-            hist = {h["version"]: h["files"] for h in meta.get("history", [])}
-            hist[v1] = meta["files"]
-            old_set = set(hist.get(v0, ()))
-            new_set = set(hist.get(v1, ()))
-            sz = meta.get("segment_bytes") or {}
-            delta_bytes = self._files_bytes(
-                self.table.path, sorted(old_set ^ new_set), sz
-            )
-            base_bytes = self._files_bytes(
-                self.table.path, sorted(new_set), sz
-            )
+            delta_bytes, base_bytes = _delta_and_base(self.table, meta, v0)
             if base_bytes and delta_bytes >= self.REBUILD_THRESHOLD * base_bytes:
                 return self.full_build()
         ch = self._prepare(self.table.changes(v0, v1, update_preimages=True))
@@ -772,13 +787,9 @@ class IncrementalJoinAggView:
         from the previous refresh must not survive it (ADVICE r11)."""
         import bisect
 
-        hist = {
-            int(h["version"]): h["files"] for h in fmeta.get("history", [])
-        }
-        hist[int(fmeta["version"])] = fmeta["files"]
-        files = hist.get(int(vf0))
+        files, tombs = _version_files(fmeta, int(vf0))
         stats = fmeta.get("segment_stats") or {}
-        if files is None or not any(
+        if not files or not any(
             (stats.get(f) or {}).get(self.fact_key) for f in files
         ):
             return self.fact.df(version=vf0)
@@ -803,7 +814,7 @@ class IncrementalJoinAggView:
             "fact0_segments_total": len(files),
             "fact0_segments_scanned": len(keep),
         }
-        return self.fact._df_for_files(keep, fmeta)
+        return self.fact._df_for_files(keep, fmeta, tombs)
 
     _SIGNED = ("insert", "update_post")
 
@@ -832,18 +843,6 @@ class IncrementalJoinAggView:
             # same measured crossover policy as the single-table view:
             # once the changefeeds' combined bytes reach 1/4 of the
             # combined target snapshots, rebuild wins wall-clock
-            def _delta_and_base(table, meta, v_from):
-                hist = {h["version"]: h["files"] for h in meta.get("history", [])}
-                hist[int(meta["version"])] = meta["files"]
-                old = set(hist.get(v_from, ()))
-                new = set(hist.get(int(meta["version"]), ()))
-                fb = IncrementalAggView._files_bytes
-                sz = meta.get("segment_bytes") or {}
-                return (
-                    fb(table.path, sorted(old ^ new), sz),
-                    fb(table.path, sorted(new), sz),
-                )
-
             dfb, bfb = _delta_and_base(self.fact, fmeta, vf0)
             ddb, bdb = _delta_and_base(self.dim, dmeta, vd0)
             # small-base delegation (see SMALL_BASE_BYTES) and the
@@ -1239,17 +1238,7 @@ class IncrementalTopKView:
         if v1 == v0:
             return v0
         if not force_incremental:
-            hist = {h["version"]: h["files"] for h in meta.get("history", [])}
-            hist[v1] = meta["files"]
-            old_set = set(hist.get(v0, ()))
-            new_set = set(hist.get(v1, ()))
-            sz = meta.get("segment_bytes") or {}
-            delta_bytes = IncrementalAggView._files_bytes(
-                self.table.path, sorted(old_set ^ new_set), sz
-            )
-            base_bytes = IncrementalAggView._files_bytes(
-                self.table.path, sorted(new_set), sz
-            )
+            delta_bytes, base_bytes = _delta_and_base(self.table, meta, v0)
             if base_bytes and delta_bytes >= self.REBUILD_THRESHOLD * base_bytes:
                 return self.full_build()
         from pyspark.sql.window import Window

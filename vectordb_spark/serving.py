@@ -20,9 +20,14 @@ the range-pruned candidates' cached key columns, writes each new
 segment as one zstd parquet file with ``pyarrow`` (``write_segment``),
 records the same manifest stats Spark's write would, commits through
 the unchanged ``Table._commit``, and then seeds the cache with what it
-wrote (``seed``), so the next request decodes nothing. A delete filter
-or key list the pyarrow target cannot match exactly sends the whole
-mutation to Spark before anything is written. The stored rows are the
+wrote (``seed``), so the next request decodes nothing. A delete writes
+no segment: it matches the live rows of the candidates' cached columns
+(``rows_matching``), commits their ``_row_id``s as tombstone files
+through the same ``Table._tombstone`` the Spark delete uses, and seeds
+the new dead-row masks, so the decoded segments (and their norms) stay
+cached across it. A delete filter or key list the pyarrow target cannot
+match exactly sends the whole mutation to Spark before anything is
+written. The stored rows are the
 Spark path's to the bit: FLOAT values round to float32 as Spark's cast
 does, and COSINE vectors are normalized with ``l2_normalize``'s fold.
 
@@ -51,15 +56,25 @@ bound's double arithmetic (``_candidates``). Only the rows whose lower
 bound is at most the ``limit``-th smallest upper bound can rank, and
 only they go through the fold — so every reported distance is still
 the fold's, and the ranking is the full fold's to the bit. The full fold runs instead when
-``limit`` ≥ the rows in the segment (or in its filtered rows), when the
+``limit`` ≥ the rows in the segment (or in its filtered rows), when
+those rows number at most ``_PREFILTER_MIN_ROWS`` (the measured size
+below which the prefilter costs more than the fold it saves), when the
 filter reads ``@distance`` (it filters after scoring), when the segment
 has no norms, and when any approximate distance or bound is not finite
 (``float32(q)`` overflows, say).
 
+Rows a tombstone deletes stay in the decoded segment, marked by its
+dead-row mask (``Segment.dead``). Reads skip them: ``rows_matching``
+starts from the live rows, and a knn gives them +inf upper bounds in
+``_candidates`` (so they neither set τ nor stay candidates) and drops
+them after a full fold, rather than gathering the live rows of the
+matrix first.
+
 A request returns ``None`` — the caller then runs the unchanged Spark
 path — for a partitioned table, a table with a sparse vector field, a
-table whose live rows would decode to more than ``CACHE_BYTES``
-(``_decoded_bytes``), a segment whose columns are not the declared
+table whose segments would decode to more than ``CACHE_BYTES``
+(``_decoded_bytes``, which counts every physical row, deleted ones
+included), a segment whose columns are not the declared
 types or whose vector column holds a NULL, a NULL element or an
 off-width row, and any filter or facet the pyarrow target declines.
 
@@ -68,13 +83,16 @@ entry is keyed by the table's real path, the segment dir name and that
 dir's data-file names. The file names matter because a dir name alone
 can be reused for different rows (``add_1`` after a drop and re-create,
 an overwrite retry), while Spark names every part file with a per-write
-UUID. Each request lists the live dirs of the manifest it just read and
-drops the table's entries for dirs no longer in it; ``CACHE_BYTES``
-caps the cache (least recently used first out).
+UUID. A dead-row mask is keyed by the table's real path and its
+tombstone file, whose name is new with every delete that touches the
+segment. Each request lists the live dirs and tombstone files of the
+manifest it just read and drops the table's entries for those no longer
+in it; ``CACHE_BYTES`` caps the cache (least recently used first out).
 """
 
 from __future__ import annotations
 
+import dataclasses
 import math
 import os
 import threading
@@ -93,13 +111,21 @@ from vectordb_spark.expr.compile import (
 )
 from vectordb_spark.schema import FieldType, TableSchema
 
-# Decoded bytes the process keeps across requests. A table whose live
-# rows would decode to more than this goes to Spark, which streams it,
+# Decoded bytes the process keeps across requests. A table whose segments
+# would decode to more than this goes to Spark, which streams it,
 # instead of being decoded onto the driver for every request.
 CACHE_BYTES = 256 << 20
 # Rows per block of the distance fold: keeps a block's double-precision
 # terms in the CPU cache while the fold walks its columns.
 _FOLD_BLOCK = 2048
+# A knn folds a segment (or its filtered rows) of at most this many rows
+# whole, without the prefilter (``_candidates``): its ~20 numpy calls
+# cost more than the fold they save. Measured on clustered 64-d rows,
+# limit 10, one thread (numpy 1.26.4, 4-vCPU x86 host; EUCLIDEAN, with
+# DOT_PRODUCT within a few µs): 20 rows fold in 32 µs against 59 µs with
+# the prefilter, 200 rows in 59 against 74 µs, 250 rows in 65 against
+# 64 µs, 400 rows in 88 against 64 µs.
+_PREFILTER_MIN_ROWS = 200
 # Unit roundoffs of double and float32 arithmetic, and the smallest
 # subnormal double (the prefilter's error bound, ``_candidates``).
 _U64 = 2.0**-53
@@ -132,6 +158,9 @@ class Segment:
     # dense field -> per-row float64 upper bounds on ‖x‖ (``_norms``),
     # or None when the field's matrix holds a non-finite element
     norms: dict | None = None
+    # which rows the manifest's tombstone for the dir deletes (cached
+    # apart from the decoded rows, by tombstone file), or None
+    dead: np.ndarray | None = None
 
     @property
     def nbytes(self) -> int:
@@ -140,9 +169,16 @@ class Segment:
         norms = sum(n.nbytes for n in self.norms.values() if n is not None)
         return self.rows.nbytes + norms
 
+    def alive(self) -> np.ndarray:
+        """A fresh mask of the rows no tombstone deletes."""
+        if self.dead is None:
+            return np.ones(self.rows.num_rows, dtype=bool)
+        return ~self.dead
+
 
 class SegmentCache:
-    """Thread-safe LRU of decoded segments bounded by decoded bytes."""
+    """Thread-safe LRU of decoded segments and dead-row masks, bounded
+    by their bytes."""
 
     def __init__(self, max_bytes: int):
         self.max_bytes = max_bytes
@@ -150,14 +186,14 @@ class SegmentCache:
         self._entries: OrderedDict[tuple, Segment] = OrderedDict()
         self._bytes = 0
 
-    def get(self, key: tuple) -> Segment | None:
+    def get(self, key: tuple):
         with self._lock:
             seg = self._entries.get(key)
             if seg is not None:
                 self._entries.move_to_end(key)
             return seg
 
-    def put(self, key: tuple, seg: Segment) -> Segment:
+    def put(self, key: tuple, seg):
         """Insert ``seg`` (a concurrent reader's entry for the same key
         wins) and evict the least recently used entries over the cap."""
         with self._lock:
@@ -280,17 +316,21 @@ def _norms(vectors: np.ndarray) -> np.ndarray | None:
 
 
 def _decoded_bytes(schema: TableSchema, meta: dict) -> int:
-    """Estimated decoded size of the manifest's live rows: a dense
-    vector takes ``4 × dim`` bytes plus its list offset and its cached
-    norm per row, every other column (and ``_row_id``) 8 — or the
+    """Estimated decoded size of the manifest's segments: per physical
+    row (live rows plus the rows tombstones delete, which stay decoded),
+    a dense vector takes ``4 × dim`` bytes plus its list offset and its
+    cached norm, every other column (and ``_row_id``) 8 — or the
     segments' parquet bytes when larger, which is where long strings
     show."""
     width = 8 + sum(
         4 * f.dimension + 12 if f.field_type.is_dense_vector else 8
         for f in schema.fields
     )
+    rows = meta["row_count"] + sum(
+        e["rows"] for e in (meta.get("tombstones") or {}).values()
+    )
     on_disk = sum(meta.get("segment_bytes", {}).get(n, 0) for n in meta["files"])
-    return max(meta["row_count"] * width, on_disk)
+    return max(rows * width, on_disk)
 
 
 def servable(table, meta: dict) -> bool:
@@ -309,13 +349,14 @@ def servable(table, meta: dict) -> bool:
 
 def _snapshot(table, meta: dict | None = None) -> dict[str, Segment] | None:
     """The live segments of ``meta`` (default: ``table``'s current
-    manifest), decoded, by dir name — or None when the tier does not
-    serve the table."""
+    manifest), decoded, by dir name, each with the dead-row mask of its
+    tombstone — or None when the tier does not serve the table."""
     if meta is None:
         meta = table._load_meta()
     if not servable(table, meta):
         return None
     root = os.path.realpath(table.path)
+    tombs = {f: (root, e["file"]) for f, e in (meta.get("tombstones") or {}).items()}
     keys = []
     try:
         for name in meta["files"]:
@@ -323,7 +364,7 @@ def _snapshot(table, meta: dict | None = None) -> dict[str, Segment] | None:
             keys.append(
                 (root, name, tuple(sorted(n for n in names if not n.startswith(("_", ".")))))
             )
-        CACHE.retain(root, set(keys))
+        CACHE.retain(root, set(keys) | set(tombs.values()))
         segs = {}
         for key in keys:
             seg = CACHE.get(key)
@@ -333,6 +374,13 @@ def _snapshot(table, meta: dict | None = None) -> dict[str, Segment] | None:
                 )
             if seg.rows is None:
                 return None
+            tomb = tombs.get(key[1])
+            if tomb is not None:
+                dead = CACHE.get(tomb)
+                if dead is None:
+                    ids = np.load(os.path.join(*tomb))
+                    dead = CACHE.put(tomb, np.isin(seg.row_ids, ids))
+                seg = dataclasses.replace(seg, dead=dead)
             segs[key[1]] = seg
     except FileNotFoundError:
         # a segment vacuumed after the manifest was read: Spark reports it
@@ -372,11 +420,14 @@ def _norm_bound(v: np.ndarray) -> float:
 
 def _candidates(
     metric: str, vectors: np.ndarray, norms: np.ndarray | None, q: np.ndarray,
-    idx: np.ndarray, limit: int,
+    idx: np.ndarray, limit: int, dead: np.ndarray | None = None,
 ) -> np.ndarray:
     """The rows of ``idx`` (positions in ``vectors``) whose folded
-    distance can rank among the ``limit`` smallest of ``idx``'s: all of
-    ``idx`` when there is no certified bound to prune with.
+    distance can rank among the ``limit`` smallest of ``idx``'s live
+    rows: all of ``idx`` when there is no certified bound to prune with.
+    ``dead`` (aligned with ``idx``) marks deleted rows; they get +inf
+    upper bounds, so they neither set τ nor stay candidates, and
+    ``idx`` is never gathered down to the live rows first.
 
     One float32 matvec ``c = X @ float32(q)`` gives approximate distances
     ``a`` (EUCLIDEAN ν² − 2c + ‖q‖², DOT_PRODUCT −c, COSINE 1 − c) and
@@ -431,8 +482,13 @@ def _candidates(
         lo = np.subtract(a, err, out=err)
     if not (np.isfinite(hi).all() and np.isfinite(lo).all()):
         return idx
+    if dead is not None:
+        hi[dead] = np.inf
     tau = np.partition(hi, limit - 1)[limit - 1]
-    return idx[lo <= tau]
+    keep = lo <= tau
+    if dead is not None:
+        keep &= ~dead
+    return idx[keep]
 
 
 def _mask(ast, rows: pa.Table) -> np.ndarray:
@@ -440,16 +496,17 @@ def _mask(ast, rows: pa.Table) -> np.ndarray:
 
 
 def rows_matching(
-    rows: pa.Table, ast, pk: str | None = None, keys: pa.Array | None = None
+    seg: Segment, ast, pk: str | None = None, keys: pa.Array | None = None
 ) -> np.ndarray:
-    """Which of ``rows`` pass ``ast`` and, when ``keys`` (a
+    """Which live rows of ``seg`` pass ``ast`` and, when ``keys`` (a
     ``pk_value_set``) is given, hold a ``pk`` in it: the row predicate
-    of ``get`` and of a delete. A NULL result does not match."""
-    keep = np.ones(rows.num_rows, dtype=bool)
+    of ``get``, of a delete and of the row-path writes' key lookups. A
+    NULL result does not match."""
+    keep = seg.alive()
     if ast is not None:
-        keep &= _mask(ast, rows)
+        keep &= _mask(ast, seg.rows)
     if keys is not None:
-        keep &= pk_in(rows, pk, keys)
+        keep &= pk_in(seg.rows, pk, keys)
     return keep
 
 
@@ -489,17 +546,26 @@ def query(table, field, q: list[float], ast, limit: int) -> pa.Table | None:
         for k, s in enumerate(segs):
             vectors = s.vectors[field.name]
             idx = np.arange(s.rows.num_rows)
+            # dead rows stay in ``idx`` (no gather of the whole matrix):
+            # the prefilter passes none of them, and the fold's
+            # fallbacks drop them after folding
+            dead = s.dead
             if not post:
                 if ast is not None:
-                    idx = np.flatnonzero(_mask(ast, s.rows))
-                idx = _candidates(
-                    field.metric, vectors, s.norms[field.name], qv, idx, limit
-                )
+                    idx = np.flatnonzero(rows_matching(s, ast))
+                    dead = None
+                if len(idx) > _PREFILTER_MIN_ROWS:
+                    idx = _candidates(
+                        field.metric, vectors, s.norms[field.name], qv, idx, limit, dead
+                    )
             if len(idx) < len(vectors):
                 vectors = vectors[idx]
             d = fold_distances(field.metric, vectors, qv)
+            keep = None if dead is None else ~dead[idx]
             if post:
-                keep = _mask(ast, s.rows.append_column(DISTANCE_COL, pa.array(d)))
+                hit = _mask(ast, s.rows.append_column(DISTANCE_COL, pa.array(d)))
+                keep = hit if keep is None else keep & hit
+            if keep is not None:
                 idx, d = idx[keep], d[keep]
             picks.append((d, s.row_ids[idx], np.full(len(idx), k), idx))
     except ArrowUnsupported:
@@ -553,7 +619,7 @@ def get(table, ast, primary_keys: list | None, skip: int, limit: int) -> pa.Tabl
     picks = []
     try:
         for k, s in enumerate(segs):
-            idx = np.flatnonzero(rows_matching(s.rows, ast, pk, keys))
+            idx = np.flatnonzero(rows_matching(s, ast, pk, keys))
             picks.append((s.row_ids[idx], np.full(len(idx), k), idx))
     except ArrowUnsupported:
         return None
@@ -652,10 +718,16 @@ def write_segment(root: str, name: str, rows: pa.Table) -> str:
     return part
 
 
-def seed(table, written: dict[str, tuple[str, pa.Table]]) -> None:
-    """Enter committed segments (dir name -> (part file, rows)) into the
-    cache under the keys the next ``_snapshot`` lists, so the request
-    after a write does not decode what the write had in hand."""
+def seed(
+    table, written: dict[str, tuple[str, pa.Table]] | None = None,
+    masks: dict[str, np.ndarray] | None = None,
+) -> None:
+    """Enter committed segments (dir name -> (part file, rows)) and
+    dead-row masks (tombstone file -> mask) into the cache under the
+    keys the next ``_snapshot`` looks up, so the request after a write
+    does not decode what the write had in hand."""
     root = os.path.realpath(table.path)
-    for name, (part, rows) in written.items():
+    for name, (part, rows) in (written or {}).items():
         CACHE.put((root, name, (part,)), _segment(rows, table.schema))
+    for name, dead in (masks or {}).items():
+        CACHE.put((root, name), dead)

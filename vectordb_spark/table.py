@@ -47,6 +47,7 @@ try:  # POSIX advisory file locks (Linux/macOS); absent on Windows
 except ImportError:  # pragma: no cover
     fcntl = None  # type: ignore[assignment]
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Row, SparkSession
@@ -385,25 +386,32 @@ class Table:
         version (data dirs are immutable, so every recorded manifest
         stays readable — the table-format time-travel property)."""
         meta = self._load_meta()
-        if version is None:
-            files = meta["files"]
-        else:
-            if version == meta["version"]:
-                files = meta["files"]
-            else:
-                hist = {h["version"]: h["files"] for h in meta.get("history", [])}
-                if version not in hist:
-                    raise VectorDBError(
-                        "VERSION_NOT_FOUND",
-                        f"Version {version} not in table history.",
-                    )
-                files = hist[version]
-        return self._df_for_files(files, meta)
+        files, tombstones = self._snapshot_at(meta, version)
+        return self._df_for_files(files, meta, tombstones)
 
-    def _df_for_files(self, files: list[str], meta: dict | None = None) -> DataFrame:
-        """The segments ``files`` of manifest ``meta`` (the current one
-        when None), read with the schema the manifest says they were
-        written with: no footer-inference job."""
+    @staticmethod
+    def _snapshot_at(meta: dict, version: int | None = None) -> tuple[list, dict]:
+        """The segment list and tombstone map of committed ``version``
+        of manifest ``meta`` (the current one when None): every
+        time-travel, changefeed and matview history lookup goes
+        through here."""
+        if version is None or version == meta["version"]:
+            return meta["files"], meta.get("tombstones") or {}
+        for h in meta.get("history", []):
+            if h["version"] == version:
+                return h["files"], h.get("tombstones") or {}
+        raise VectorDBError(
+            "VERSION_NOT_FOUND", f"Version {version} not in table history."
+        )
+
+    def _df_for_files(
+        self, files: list[str], meta: dict | None = None, tombstones: dict | None = None
+    ) -> DataFrame:
+        """The live rows of segments ``files`` of manifest ``meta`` (the
+        current one when None), read with the schema the manifest says
+        they were written with: no footer-inference job. The rows their
+        ``tombstones`` (default: ``meta``'s current map) delete are
+        filtered out with one ``_row_id`` InSet (``_row_ids_in``)."""
         if not files:
             return self.spark.createDataFrame(
                 [], self.schema.to_spark_schema(with_row_id=True)
@@ -415,18 +423,27 @@ class Table:
             # multi-path read would try to treat them as partition
             # siblings of one table. Per-segment reads unioned by name
             # keep the per-segment PartitionFilters pruning intact.
-            from functools import reduce
+            df = functools.reduce(
+                DataFrame.unionByName,
+                [self._df_for_files([f], meta, {}) for f in files],
+            )
+        else:
+            df = self._restore_partition_type(
+                self._read_segments(
+                    self._read_schema(meta, files),
+                    *[os.path.join(self.path, f) for f in files],
+                )
+            )
+        if tombstones is None:
+            tombstones = meta.get("tombstones") or {}
+        dead = [tombstones[f] for f in files if f in tombstones]
+        return df.where(~_row_ids_in(self._dead_ids(*dead))) if dead else df
 
-            return reduce(
-                lambda a, b: a.unionByName(b),
-                [self._df_for_files([f], meta) for f in files],
-            )
-        return self._restore_partition_type(
-            self._read_segments(
-                self._read_schema(meta, files),
-                *[os.path.join(self.path, f) for f in files],
-            )
-        )
+    def _dead_ids(self, *entries: dict | None) -> np.ndarray:
+        """The ``_row_id``s the tombstone ``entries`` (None: none) hold."""
+        return np.concatenate([np.empty(0, np.int64)] + [
+            np.load(os.path.join(self.path, e["file"])) for e in entries if e
+        ])
 
     def scan_df(
         self,
@@ -601,17 +618,15 @@ class Table:
         — so a pure ``compact()`` boundary yields an EMPTY changefeed
         at the cost of scanning the rewritten dirs, the honest
         minimum. The join shuffles only the differing dirs' rows,
-        never the whole table."""
+        never the whole table. A dir both manifests list whose
+        tombstone differs contributes only the rows deleted (or, going
+        back in time, restored) between them."""
         meta = self._load_meta()
-        files = {h["version"]: h["files"] for h in meta.get("history", [])}
-        files[meta["version"]] = meta["files"]
         if v_to is None:
             v_to = meta["version"]
-        for v in (v_from, v_to):
-            if v not in files:
-                raise VectorDBError(
-                    "VERSION_NOT_FOUND", f"Version {v} not in table history."
-                )
+        (old_files, old_t), (new_files, new_t) = (
+            self._snapshot_at(meta, v) for v in (v_from, v_to)
+        )
         pk_field = self.schema.primary_key
         if pk_field is None:
             raise VectorDBError(
@@ -619,9 +634,23 @@ class Table:
             )
         pk = pk_field.name
         cols = [f.name for f in self.schema.fields]
-        old_set, new_set = set(files[v_from]), set(files[v_to])
-        old = self._df_for_files(sorted(old_set - new_set), meta).select(*cols).alias("o")
-        new = self._df_for_files(sorted(new_set - old_set), meta).select(*cols).alias("n")
+        old_set, new_set = set(old_files), set(new_files)
+        retombed = sorted(f for f in old_set & new_set if old_t.get(f) != new_t.get(f))
+
+        def side(files: list[str], tombs: dict, other: dict) -> DataFrame:
+            # the dirs only this side lists, plus each re-tombstoned
+            # dir's rows that are live here and deleted on the other side
+            parts = []
+            for f in retombed:
+                ids = np.setdiff1d(self._dead_ids(other.get(f)), self._dead_ids(tombs.get(f)))
+                if len(ids):
+                    parts.append(self._df_for_files([f], meta, {}).where(_row_ids_in(ids)))
+            if files or not parts:
+                parts.insert(0, self._df_for_files(files, meta, tombs))
+            return functools.reduce(DataFrame.unionByName, [p.select(*cols) for p in parts])
+
+        old = side(sorted(old_set - new_set), old_t, new_t).alias("o")
+        new = side(sorted(new_set - old_set), new_t, old_t).alias("n")
         j = old.join(new, F.col(f"o.{pk}") == F.col(f"n.{pk}"), "full_outer")
         o_struct = F.struct(*[F.col(f"o.{c}") for c in cols])
         n_struct = F.struct(*[F.col(f"n.{c}") for c in cols])
@@ -789,9 +818,8 @@ class Table:
             keys = serving.pk_value_set(pk_field, pks)
             if segs is not None and keys is not None:
                 for f in self._candidates(meta, pk_bounds):
-                    seg = segs[f].rows
-                    hits = seg.column(pk_field.name).filter(
-                        serving.pk_in(seg, pk_field.name, keys)
+                    hits = segs[f].rows.column(pk_field.name).filter(
+                        serving.rows_matching(segs[f], None, pk_field.name, keys)
                     )
                     existing_pks.update(hits.to_pylist())
             else:
@@ -854,9 +882,9 @@ class Table:
             keys = batch.column(pk).combine_chunks()
             self._bump_mutation_seq(meta)
             matches = self._arrow_matches(
-                meta, segs, replace_bounds, lambda rows: serving.pk_in(rows, pk, keys)
+                meta, segs, replace_bounds, lambda s: serving.rows_matching(s, None, pk, keys)
             )
-            keep, added, _removed = self._arrow_rewrite(meta, segs, matches, written)
+            keep, added = self._arrow_rewrite(meta, segs, matches, written)
         name = f"add_{meta['version'] + 1}"
         added[name] = self._write_arrow(name, batch, written)
         self._commit(meta, keep, added, next_row_id)
@@ -1256,32 +1284,47 @@ class Table:
         keep: list[str],
         added: dict[str, tuple[dict, int]],
         next_row_id: int,
+        dead: dict[str, dict] | None = None,
     ) -> None:
         """THE data commit: insert, upsert, delete, compact and
-        ``rewrite_zorder`` write their new segments first and then land
-        here, so every mutation is exactly one new manifest version
-        (Delta Lake's one-commit-per-DML rule). The new segment list is
-        ``keep`` (live segments retained verbatim) followed by
-        ``added`` ({name: (pruning stats, row count)} of the segments
-        just written). The outgoing version joins the time-travel
-        history; each added segment's stats, row count and byte size
+        ``rewrite_zorder`` write their new segments (or tombstones)
+        first and then land here, so every mutation is exactly one new
+        manifest version (Delta Lake's one-commit-per-DML rule). The new
+        segment list is ``keep`` (live segments retained verbatim)
+        followed by ``added`` ({name: (pruning stats, row count)} of the
+        segments just written); ``dead`` ({kept segment: tombstone
+        entry}) gives kept segments a delete's new tombstones. The
+        outgoing version, with its tombstone map, joins the time-travel
+        history, and a segment that leaves the list takes its tombstone
+        with it. Each added segment's stats, row count and byte size
         are registered in the manifest caches — the one place they are
         populated, so later mutations never re-list or re-count a
-        directory; ``row_count`` moves by the dropped and added
-        segments' cached rows, with no Spark job."""
+        directory. ``segment_rows`` and ``row_count`` count live rows:
+        ``row_count`` moves by the dropped and added segments' cached
+        rows and by the rows the new tombstones delete, with no Spark
+        job."""
         # resolved before files change (a pre-row_count manifest counts
         # the current snapshot); a full replacement needs no baseline
         before = self._count(meta) if keep else 0
         rows = meta.setdefault("segment_rows", {})
         dropped = set(meta["files"]) - set(keep)
         removed = sum(int(rows[f]) for f in dropped) if keep else 0
+        tombs = meta.pop("tombstones", None) or {}
         meta.setdefault("history", []).append(
             {"version": meta["version"], "files": list(meta["files"])}
+            | ({"tombstones": tombs} if tombs else {})
         )
+        for seg, entry in (dead or {}).items():
+            n = entry["rows"] - tombs.get(seg, {"rows": 0})["rows"]
+            rows[seg] = int(rows[seg]) - n
+            removed += n
         for name, (stats, n) in added.items():
             meta.setdefault("segment_stats", {})[name] = stats
             rows[name] = int(n)
             meta.setdefault("segment_bytes", {})[name] = self._walk_bytes(name)
+        tombs = {f: e for f, e in (tombs | (dead or {})).items() if f not in dropped}
+        if tombs:
+            meta["tombstones"] = tombs
         meta["files"] = list(keep) + list(added)
         meta["version"] += 1
         meta["next_row_id"] = next_row_id
@@ -1493,10 +1536,11 @@ class Table:
     @_writer_locked
     def vacuum(self, keep_history: int = 0, *, grace_seconds: float | None = None) -> dict:
         """Drop time-travel history beyond the newest ``keep_history``
-        entries and delete segment dirs no version references anymore —
-        except dirs modified within the retention grace, which an
-        in-flight lock-free reader may still be scanning. Single-writer
-        job, like all mutations."""
+        entries and delete the segment dirs and tombstone files no
+        retained version references anymore — except those modified
+        within the retention grace, which an in-flight lock-free reader
+        may still be reading. ``removedSegments`` counts dirs only.
+        Single-writer job, like all mutations."""
         import shutil
         import time
 
@@ -1506,9 +1550,10 @@ class Table:
         meta = self._load_meta()
         hist = meta.get("history", [])
         kept = hist[len(hist) - keep_history :] if keep_history > 0 else []
-        referenced = set(meta["files"])
-        for h in kept:
+        referenced, tombs = set(), set()
+        for h in (meta, *kept):
             referenced.update(h["files"])
+            tombs.update(e["file"] for e in (h.get("tombstones") or {}).values())
         # live index dirs of every index family — superseded versions
         # from rebuilds are unreferenced and reclaimable like old segments
         referenced |= _live_index_dirs(meta)
@@ -1516,19 +1561,23 @@ class Table:
         now = time.time()
         for name in sorted(os.listdir(self.path)):
             full = os.path.join(self.path, name)
+            is_dir = os.path.isdir(full)
             if (
                 name.startswith(
                     ("add_", "base_", "cow_", "zrw_", "cowstage_")
                     + _INDEX_DIR_PREFIXES
                 )
                 and name not in referenced
-                and os.path.isdir(full)
-            ):
+                and is_dir
+            ) or (name.startswith("tomb_") and name not in tombs):
                 if now - os.path.getmtime(full) < grace:
                     skipped_recent += 1
                     continue
-                shutil.rmtree(full)
-                removed += 1
+                if is_dir:
+                    shutil.rmtree(full)
+                    removed += 1
+                else:
+                    os.unlink(full)
         meta["history"] = kept
         for cache in (
             "segment_stats", "segment_rows", "segment_bytes", "segment_schemas"
@@ -1552,7 +1601,18 @@ class Table:
         db_server.cpp:297-360): with a PK list, a row must match the
         list AND pass the filter; with no list, the filter alone
         decides. One of the two is required (web_controller.hpp:576-595).
-        """
+
+        Merge-on-read, as the reference's per-segment deleted bitset
+        (table_segment_mvp.hpp:87), Delta Lake's deletion vectors and
+        Iceberg's position deletes: nothing is rewritten. Each candidate
+        segment (manifest min/max overlap) holding matched live rows
+        gets a new tombstone file with every ``_row_id`` deleted from it
+        so far, a segment left with no live row leaves the manifest,
+        and readers subtract the tombstones (``_df_for_files``, the
+        serving tier's dead-row masks). Rows are matched on the driver
+        over the decoded segments when the serving tier holds the
+        table (no Spark job), else by one Spark job that collects the
+        matched ids — either way one commit (``_tombstone``)."""
         if not primary_keys and not filter:
             raise VectorDBError(
                 "INVALID_PAYLOAD", "Delete requires primaryKeys and/or filter."
@@ -1566,8 +1626,8 @@ class Table:
             self._check_pk_keys(primary_keys)
         ast = parse_filter(filter, self.field_map())
         meta = self._load_meta()
-        # segment pruning bounds for the COW rewrite: the filter's
-        # conjunctive ranges plus the PK list's min/max
+        # segment pruning bounds: the filter's conjunctive ranges plus
+        # the PK list's min/max
         bounds = range_bounds(ast)
         if primary_keys:
             for col, (lo, hi) in self._pk_list_bounds(primary_keys).items():
@@ -1583,16 +1643,53 @@ class Table:
         if ast is not None:
             cond = cond & to_spark_column(ast)
         self._bump_mutation_seq(meta)
-        return {"deleted": self._cow_delete(cond, meta, bounds)}
+        candidates = self._candidates(meta, bounds)
+        hits: dict[str, list] = {f: [] for f in candidates}
+        if candidates:
+            self._candidate_rows(meta, candidates)
+            # ONE job for any number of candidates: the matched ids,
+            # tagged with their segment
+            matched = self._tagged(meta, candidates).where(cond)
+            for src, rid in matched.select(self._COW_TAG, "_row_id").collect():
+                if src not in hits:
+                    raise VectorDBError(
+                        "INTERNAL", f"delete matched rows of unknown segment {src!r}"
+                    )
+                hits[src].append(rid)
+        ids = {f: np.sort(np.array(v, dtype=np.int64)) for f, v in hits.items()}
+        return {"deleted": self._tombstone(meta, ids)[0]}
+
+    def _tombstone(self, meta: dict, hits: dict[str, np.ndarray]) -> tuple[int, dict]:
+        """Commit a delete of the live rows whose sorted ``_row_id``s
+        ``hits`` holds per segment: a segment with hits gets a tombstone
+        file of every id deleted from it so far (``tomb_{version}_…``,
+        named in the manifest only), a segment whose live rows all go
+        leaves the list instead. Returns the rows deleted and the new
+        tombstone entries."""
+        tombs = meta.get("tombstones") or {}
+        version = meta["version"] + 1
+        n, dead, emptied = 0, {}, set()
+        for seg, ids in hits.items():
+            n += len(ids)
+            if len(ids) == meta["segment_rows"][seg]:
+                emptied.add(seg)
+            elif len(ids):
+                ids = np.union1d(self._dead_ids(tombs.get(seg)), ids)
+                name = f"tomb_{version}_{seg}_{os.urandom(4).hex()}.npy"
+                np.save(os.path.join(self.path, name), ids)
+                dead[seg] = {"file": name, "rows": len(ids)}
+        keep = [f for f in meta["files"] if f not in emptied]
+        self._commit(meta, keep, {}, meta["next_row_id"], dead)
+        return n, dead
 
     def _delete_arrow(
         self, meta: dict, segs: dict, bounds: dict, primary_keys, ast
     ) -> int | None:
-        """``_cow_delete`` on the driver over the decoded segments: the
-        same candidates, rows matched by ``serving.rows_matching``, one
-        commit, and the rewritten segments seed the serving cache.
-        None — nothing written — when the key list or the filter is
-        not one the pyarrow target matches exactly."""
+        """``delete`` on the driver over the decoded segments: the same
+        candidates, live rows matched by ``serving.rows_matching``, the
+        same ``_tombstone`` commit, and the new dead-row masks seed the
+        serving cache. None — nothing written — when the key list or
+        the filter is not one the pyarrow target matches exactly."""
         pk = keys = None
         if primary_keys:
             if not isinstance(primary_keys, list):
@@ -1605,15 +1702,18 @@ class Table:
             return None
         try:
             matches = self._arrow_matches(
-                meta, segs, bounds, lambda rows: serving.rows_matching(rows, ast, pk, keys)
+                meta, segs, bounds, lambda s: serving.rows_matching(s, ast, pk, keys)
             )
         except ArrowUnsupported:
             return None
         self._bump_mutation_seq(meta)
-        written: dict = {}
-        keep, added, removed = self._arrow_rewrite(meta, segs, matches, written)
-        self._commit(meta, keep, added, meta["next_row_id"])
-        serving.seed(self, written)
+        self._backfill_rows(meta, segs, matches)
+        removed, dead = self._tombstone(
+            meta, {f: np.sort(segs[f].row_ids[m]) for f, m in matches.items()}
+        )
+        serving.seed(self, masks={
+            e["file"]: matches[f] | ~segs[f].alive() for f, e in dead.items()
+        })
         return removed
 
     def _walk_bytes(self, name: str) -> int:
@@ -1626,9 +1726,10 @@ class Table:
                     pass
         return total
 
-    # partition-column tag carrying each kept row's source segment
-    # through the single COW rewrite job. The tag value is the PARENT
-    # DIRECTORY component of input_file_name() — segment names are
+    # partition-column tag carrying each row's source segment through
+    # the single COW rewrite job and the Spark delete's match job. The
+    # tag value is the PARENT DIRECTORY component of input_file_name()
+    # — segment names are
     # [A-Za-z0-9_]+ so their percent-encoded URI form is themselves,
     # which sidesteps the ADVICE r11 failure (the old strip-'file:'-
     # and-relpath mapping broke on table paths containing spaces:
@@ -1637,6 +1738,25 @@ class Table:
     # leaving them live). Any tag value outside the candidate set
     # raises at commit instead of silently dropping rows.
     _COW_TAG = "_cow_src"
+
+    def _tagged(self, meta: dict, candidates: list[str]) -> DataFrame:
+        """The live rows of ``candidates`` with their segment name in
+        ``_COW_TAG``."""
+        tag = self._COW_TAG
+        if self.partition_by:
+            # hive-partitioned segment roots can't multi-path read
+            # (see _df_for_files): per-segment reads tagged with
+            # literals, unioned — still exactly one job
+            return functools.reduce(
+                DataFrame.unionByName,
+                [
+                    self._df_for_files([f], meta).withColumn(tag, F.lit(f))
+                    for f in candidates
+                ],
+            )
+        return self._df_for_files(candidates, meta).withColumn(
+            tag, F.regexp_extract(F.input_file_name(), r"/([^/]+)/[^/]*$", 1)
+        )
 
     def _staging_stats(
         self, staging: str, schema: T.StructType
@@ -1668,57 +1788,39 @@ class Table:
     # Lake discipline: DML rewrites matched files, compact() defragments.
 
     def _cow_rewrite(
-        self, meta: dict, bounds: dict | None, keep_fn
-    ) -> tuple[list[str], dict[str, tuple[dict, int]], int]:
-        """The one data pass of a delete or upsert over the segments
-        whose manifest min/max overlaps ``bounds`` (a segment without
-        stats is always a candidate; ``bounds=None`` means no row can
-        match, so there are none). ``keep_fn`` selects the surviving
-        rows of EVERY candidate, tagged with their source segment and
-        written once via ``partitionBy(_cow_src)`` — no shuffle, each
-        scan task holds one source segment's rows — and per-source
-        stats + kept-row counts come from one column-pruned scan of
-        the staging root: a constant job count however many segments
+        self, meta: dict, bounds: dict | None, bkeys: DataFrame
+    ) -> tuple[list[str], dict[str, tuple[dict, int]]]:
+        """The one data pass of an upsert over the segments whose
+        manifest min/max overlaps ``bounds`` (a segment without stats is
+        always a candidate; ``bounds=None`` means no row can match, so
+        there are none). The live rows of EVERY candidate whose key is
+        not in ``bkeys`` (the batch's keys), tagged with their source
+        segment, are written once via ``partitionBy(_cow_src)`` — no
+        shuffle, each scan task holds one source segment's rows — and
+        per-source stats + kept-row counts come from one column-pruned
+        scan of the staging root: a constant job count however many segments
         match (VERDICT r11 #1/#2). Match counts are DERIVED (manifest
         ``segment_rows`` minus kept rows), so there is no count pass.
         Candidates with zero matches keep their original dirs verbatim
         (their staging is discarded — the false-positive cost is
         bounded by how loose the range pruning is); matched ones are
         renamed into final ``cow_`` dirs, and a segment whose every
-        row matched drops out. Returns (segments kept verbatim, the
-        rewritten segments in ``_commit``'s ``added`` form, rows
-        removed)."""
+        row matched drops out (a rewritten segment's tombstone goes
+        with it). Returns (segments kept verbatim, the
+        rewritten segments in ``_commit``'s ``added`` form)."""
         import shutil
         from urllib.parse import unquote
 
         files = list(meta["files"])
         candidates = self._candidates(meta, bounds)
         if not candidates:
-            return files, {}, 0
+            return files, {}
         rows_map = self._candidate_rows(meta, candidates)
         version = meta["version"] + 1
         tag = self._COW_TAG
-        if self.partition_by:
-            # hive-partitioned segment roots can't multi-path read
-            # (see _df_for_files): per-segment reads tagged with
-            # literals, unioned — still exactly one write job
-            from functools import reduce
-
-            tagged = reduce(
-                lambda a, b: a.unionByName(b),
-                [
-                    self._df_for_files([f], meta).withColumn(tag, F.lit(f))
-                    for f in candidates
-                ],
-            )
-            part_cols = [tag, self.partition_by]
-        else:
-            tagged = self._df_for_files(candidates, meta).withColumn(
-                tag,
-                F.regexp_extract(F.input_file_name(), r"/([^/]+)/[^/]*$", 1),
-            )
-            part_cols = [tag]
-        kept = keep_fn(tagged)
+        part_cols = [tag] + ([self.partition_by] if self.partition_by else [])
+        pk = self.schema.primary_key.name
+        kept = self._tagged(meta, candidates).join(bkeys, pk, "left_anti")
         written = kept.schema
         # no leading underscore: Spark's hidden-path filter warns on
         # underscore-prefixed roots; crash leftovers are vacuum's job
@@ -1776,7 +1878,7 @@ class Table:
                 )
                 added[name] = (kept_stats.get(f, {}), kept_counts.get(f, 0))
             keep = [f for f in files if f not in matched]
-            return keep, added, sum(matched.values())
+            return keep, added
         finally:
             shutil.rmtree(staging, ignore_errors=True)
 
@@ -1790,37 +1892,39 @@ class Table:
         return [f for f in meta["files"] if segment_overlaps(stats.get(f), bounds)]
 
     def _arrow_matches(self, meta: dict, segs: dict, bounds: dict | None, match) -> dict:
-        """``{candidate: bool mask of its matched rows}`` over the
-        decoded segments (``match`` maps an Arrow table to the mask).
-        Nothing is written yet, so an ``ArrowUnsupported`` from any
-        candidate still leaves the whole mutation to Spark."""
-        return {f: match(segs[f].rows) for f in self._candidates(meta, bounds)}
+        """``{candidate: bool mask of its matched live rows}`` over the
+        decoded segments (``match`` maps a ``serving.Segment`` to the
+        mask). Nothing is written yet, so an ``ArrowUnsupported`` from
+        any candidate still leaves the whole mutation to Spark."""
+        return {f: match(segs[f]) for f in self._candidates(meta, bounds)}
+
+    @staticmethod
+    def _backfill_rows(meta: dict, segs: dict, matches: dict) -> None:
+        """A candidate's live row count missing from the manifest comes
+        from its decoded rows, as ``_candidate_rows`` would count it."""
+        rows_map = meta.setdefault("segment_rows", {})
+        for f in matches:
+            rows_map.setdefault(f, int(segs[f].alive().sum()))
 
     def _arrow_rewrite(
         self, meta: dict, segs: dict, matches: dict, written: dict
-    ) -> tuple[list[str], dict[str, tuple[dict, int]], int]:
+    ) -> tuple[list[str], dict[str, tuple[dict, int]]]:
         """``_cow_rewrite`` on the driver: each candidate with a match
-        is rewritten to ``cow_{version}_{i}`` with its unmatched rows
-        (or drops out when none is left), the rest stay verbatim; a
-        candidate's row count missing from the manifest is backfilled
-        from its decoded rows, as ``_candidate_rows`` would count it.
-        Returns ``_cow_rewrite``'s (kept segments, added, rows
-        removed)."""
-        if matches:
-            rows_map = meta.setdefault("segment_rows", {})
-            for f in matches:
-                rows_map.setdefault(f, segs[f].rows.num_rows)
+        is rewritten to ``cow_{version}_{i}`` with its live unmatched
+        rows (or drops out when none is left), the rest stay verbatim.
+        Returns ``_cow_rewrite``'s (kept segments, added)."""
+        self._backfill_rows(meta, segs, matches)
         matched = [f for f, m in matches.items() if m.any()]
         version = meta["version"] + 1
         added: dict[str, tuple[dict, int]] = {}
         for i, f in enumerate(matched):
-            kept = segs[f].rows.filter(~matches[f])
+            kept = segs[f].rows.filter(segs[f].alive() & ~matches[f])
             if kept.num_rows:
                 name = f"cow_{version}_{i}"
                 added[name] = self._write_arrow(name, kept, written)
         dropped = set(matched)
         keep = [f for f in meta["files"] if f not in dropped]
-        return keep, added, sum(int(matches[f].sum()) for f in matched)
+        return keep, added
 
     def _candidate_rows(
         self, meta: dict, candidates: list[str]
@@ -1896,31 +2000,12 @@ class Table:
         bkeys = batch_df.select(pk)
         if batch_rows <= self.COW_UPSERT_MAX_BATCH:
             bkeys = F.broadcast(bkeys)
-        keep, added, _removed = self._cow_rewrite(
-            meta, bounds, lambda t: t.join(bkeys, pk, "left_anti")
-        )
+        keep, added = self._cow_rewrite(meta, bounds, bkeys)
         name = f"add_{meta['version'] + 1}"
         st, n = self._write_segment_observed(batch_df, name, meta)
         added[name] = (st, n)
         self._commit(meta, keep, added, next_row_id)
         return n
-
-    def _cow_delete(self, cond, meta: dict, bounds: dict) -> int:
-        """Segment-granular copy-on-write delete: manifest min/max
-        stats prune the candidate segments driver-side (a delete whose
-        PK range or filter ranges miss a segment cannot touch it), ONE
-        scan of the candidates writes every ``~cond`` survivor
-        (``_cow_rewrite``), and only matched segments are replaced —
-        survivors keep their _row_id, so index delta dirs stay valid.
-        ``changes()`` diffs by PK with content-equality cancellation,
-        so retained dirs prune at file level and surviving rows in
-        rewritten dirs cancel: only the deleted rows surface. Returns
-        the number of rows deleted."""
-        keep, added, removed = self._cow_rewrite(
-            meta, bounds, lambda t: t.where(~F.coalesce(cond, F.lit(False)))
-        )
-        self._commit(meta, keep, added, meta["next_row_id"])
-        return removed
 
     # ---------------------------------------------------------------- query
 
@@ -3208,6 +3293,20 @@ def _records(rows, fields: list[FieldSchema], with_distance: bool) -> list[dict]
             rec["@distance"] = float(r["_distance"])
         out.append(rec)
     return out
+
+
+def _row_ids_in(ids: np.ndarray):
+    """``_row_id IN ids`` as an InSet, whose generated code references
+    one hash set: a short list would stay an ``In`` with every id
+    compiled in as a literal (a codegen compile for each new tombstone),
+    so it is padded with negative ids, which no row holds, past the
+    optimizer's In-to-InSet threshold. One SQL string keeps the build
+    to one JVM call however many ids there are."""
+    threshold = int(
+        SparkSession.active().conf.get("spark.sql.optimizer.inSetConversionThreshold")
+    )
+    pad = [-1 - i for i in range(threshold + 1 - len(ids))]
+    return F.expr(f"_row_id IN ({', '.join(f'{int(i)}L' for i in [*ids, *pad])})")
 
 
 def _rank_by_distance(df: DataFrame, dist, ast, limit: int) -> DataFrame:
